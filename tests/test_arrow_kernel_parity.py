@@ -80,6 +80,12 @@ def test_cosine_arrow_bit_equals_hof_fold(spark):
         (r["vec_id"], r["cos_sim"]) for r in arrow
     ]  # EXACT float equality — no tolerance
 
+    # an int id passes through with its own type (was declared long)
+    emb_int = emb.withColumn("vec_id", F.col("vec_id").cast("int"))
+    arrow_int = cosine_scores_arrow(emb_int.filter(F.col("vec_id") != 0), qvec, qn)
+    assert dict(arrow_int.dtypes)["vec_id"] == "int"
+    assert arrow_int.orderBy("vec_id").collect() == arrow
+
 
 def test_sq8_arrow_bit_equals_hof_fold(spark):
     emb = _corpus(spark, seed=13)

@@ -1,11 +1,14 @@
-"""Large-k / large-n Arrow paths vs their JVM twins (round-7 scale work).
+"""The Arrow kernels vs their references.
 
-The registered semdedup/PQ queries switch physical strategy above a size
-threshold no driver SF reaches (kmeans.ARROW_K_MIN, pq_q._ARROW_MIN_N,
-semdedup_q._TARGET_CLUSTER): these tests pin that the Arrow kernels compute
-the SAME assignments / codes / dup sets as the oracle-parity JVM forms on
-data small enough to run both — so the scale path can't silently drift from
-the hash-checked semantics.
+k-means assignment and PQ encoding share one nearest-centroid kernel
+(functions/vectors.nearest_centroids) at every corpus size; these tests pin
+its assignments / codes against the DuckDB unrolled-CTE oracles
+(kmeans_oracle_cte, pq_oracle_cte) on sf0.001, including a k above the
+registered k = 8. The SemDeDup scale path switches to a per-cluster gram
+prune above a corpus size no testdata SF reaches (semdedup_q._TARGET_CLUSTER);
+its dup sets are pinned against the JVM self-join on data small enough to
+run both, so the scale path can't silently drift from the hash-checked
+semantics.
 """
 
 from __future__ import annotations
@@ -14,41 +17,57 @@ import pytest
 from pyspark.sql import functions as F
 
 from transilien_api_etl_spark.io import load_table
-from transilien_api_etl_spark.operators import kmeans as km_mod
-from transilien_api_etl_spark.operators.kmeans import kmeans_assign
+from transilien_api_etl_spark.operators.kmeans import kmeans_assign, kmeans_oracle_cte
 from transilien_api_etl_spark.operators.pq import (
     pq_codes_arrow,
-    pq_codes_col,
+    pq_oracle_cte,
     pq_train,
     pq_train_sample_mod,
 )
 from transilien_api_etl_spark.operators.semdedup import within_cluster_survivors
 
 SF = "/root/testdata/sf0.001"
+# Shadows the duck fixture's (sf0.01) view with the sf0.001 corpus.
+_EMB_CTE = f"embeddings AS (SELECT * FROM read_parquet('{SF}/embeddings.parquet'))"
 
 
 def _emb(spark):
     return load_table(spark, SF, "embeddings")
 
 
-def test_kmeans_arrow_assignment_matches_jvm(spark, monkeypatch):
-    """k=18 ≥ ARROW_K_MIN routes through the matmul kernel; forcing the
-    JVM literal path on the same k must yield identical (cluster, d2)
-    maps — 6-dp rounding absorbs the summation-order difference on this
-    data (blob-free real vectors, well-off the rounding boundary)."""
+def test_kmeans_arrow_assignment_matches_oracle(spark, duck):
+    """Clusters match the oracle exactly; d2 exactly at the registered
+    k = 8 and within 2e-6 at k = 18 (the 6-dp rounding absorbs the
+    matmul's summation order on this data, blob-free real vectors). The
+    same run with an int id must give the same rows."""
     emb = _emb(spark)
-    arrow = kmeans_assign(emb, id_col="vec_id", vec_col="embedding", k=18, iterations=2)
-    got_arrow = {r["vec_id"]: (r["cluster"], r["d2"]) for r in arrow.collect()}
+    emb_int = emb.withColumn("vec_id", F.col("vec_id").cast("int"))
+    for k in (8, 18):
+        out = kmeans_assign(
+            emb, id_col="vec_id", vec_col="embedding", k=k, iterations=2
+        )
+        got = {r["vec_id"]: (r["cluster"], r["d2"]) for r in out.collect()}
+        want = {
+            vid: (cluster, d2)
+            for vid, cluster, d2 in duck.execute(
+                f"WITH {_EMB_CTE}, {kmeans_oracle_cte(k, 2)} "
+                "SELECT vec_id, cluster, d2 FROM af"
+            ).fetchall()
+        }
+        assert len(got) == 500 and set(got) == set(want)
+        assert [i for i in want if got[i][0] != want[i][0]] == []
+        if k == 8:
+            assert got == want
+        for i in want:
+            assert got[i][1] == pytest.approx(want[i][1], abs=2e-6)
 
-    monkeypatch.setattr(km_mod, "ARROW_K_MIN", 10_000)
-    jvm = kmeans_assign(emb, id_col="vec_id", vec_col="embedding", k=18, iterations=2)
-    got_jvm = {r["vec_id"]: (r["cluster"], r["d2"]) for r in jvm.collect()}
-
-    assert set(got_arrow) == set(got_jvm)
-    diff_cluster = [i for i in got_jvm if got_arrow[i][0] != got_jvm[i][0]]
-    assert diff_cluster == []
-    for i in got_jvm:
-        assert got_arrow[i][1] == pytest.approx(got_jvm[i][1], abs=2e-6)
+        out_int = kmeans_assign(
+            emb_int, id_col="vec_id", vec_col="embedding", k=k, iterations=2
+        )
+        assert dict(out_int.dtypes)["vec_id"] == "int"
+        assert {
+            r["vec_id"]: (r["cluster"], r["d2"]) for r in out_int.collect()
+        } == got
 
 
 def test_semdedup_arrow_prune_matches_jvm_join(spark):
@@ -89,30 +108,48 @@ def test_semdedup_arrow_prune_matches_jvm_join(spark):
     assert arrow_surv == jvm_surv
 
 
-def test_pq_arrow_codes_match_jvm(spark):
+def test_pq_arrow_codes_match_oracle(spark, duck):
+    """Codes (training through the same kernel, then encoding) match the
+    registered PQ16x4 oracle's on sf0.001, also with an int id."""
     emb = _emb(spark)
     books = pq_train(
         emb, id_col="vec_id", vec_col="embedding",
         m_sub=16, sub_dim=4, k=16, iterations=2,
     )
-    jvm = {
-        r["vec_id"]: list(r["codes"])
-        for r in emb.select(
-            "vec_id", pq_codes_col(books, "embedding", 4).alias("codes")
-        ).collect()
-    }
-    arrow = {
+    got = {
         r["vec_id"]: list(r["codes"])
         for r in pq_codes_arrow(
             emb, books, 4, id_col="vec_id", vec_col="embedding"
         ).collect()
     }
-    assert jvm == arrow
+    cte = pq_oracle_cte(m_sub=16, sub_dim=4, k=16, iterations=2)
+    want: dict[int, list[int]] = {}
+    for m in range(16):
+        for vid, cluster in duck.execute(
+            f"WITH {_EMB_CTE}, {cte} SELECT vec_id, cluster FROM af_m{m}"
+        ).fetchall():
+            want.setdefault(vid, []).append(cluster)
+    assert len(got) == 500 and got == want
+
+    emb_int = emb.withColumn("vec_id", F.col("vec_id").cast("int"))
+    books_int = pq_train(
+        emb_int, id_col="vec_id", vec_col="embedding",
+        m_sub=16, sub_dim=4, k=16, iterations=2,
+    )
+    assert books_int == books
+    enc_int = pq_codes_arrow(
+        emb_int, books, 4, id_col="vec_id", vec_col="embedding"
+    )
+    assert dict(enc_int.dtypes)["vec_id"] == "int"
+    assert {r["vec_id"]: list(r["codes"]) for r in enc_int.collect()} == got
 
 
 def test_pq_train_sample_mod_thresholds():
     assert pq_train_sample_mod(500) == 1
     assert pq_train_sample_mod(65536) == 1
+    # below 2·65 536 every corpus trains in full (the oracle's domain)
+    assert pq_train_sample_mod(131_071) == 1
+    assert pq_train_sample_mod(131_072) == 2
     assert pq_train_sample_mod(1_000_000) == 15
     # sampled training still selects a non-trivial subset deterministically
     assert pq_train_sample_mod(10_000_000) == 152

@@ -1,22 +1,12 @@
-"""Round-11 session-5 operator internals.
-
-- ``io.widen_small_scan``: input-parallelism widening for single-split
-  driver-SF scans (guide §2.5/§6.1). Pins the guard (no-op at-or-above the
-  session parallelism — so scale-cache/production inputs never pay an
-  added exchange) and value preservation under the round-robin shuffle.
-- ``operators/kmeans._assign_col``: the string-form SQL assignment must be
-  bit-identical to the previous Column-object fold it replaced — same
-  left-to-right summation order, same ROUND_DP rounding, same lowest-cid
-  tie-break (the cross-engine oracle parity contract).
+"""``io.widen_small_scan``: input-parallelism widening for single-split
+small-SF scans (guide §2.5/§6.1). Pins the guard (no-op at-or-above the
+session parallelism — so scale-cache/production inputs never pay an added
+exchange) and value preservation under the round-robin shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from transilien_api_etl_spark.io import widen_small_scan
-from transilien_api_etl_spark.operators.kmeans import ROUND_DP, _assign_col
-from transilien_api_etl_spark.functions.vectors import dot
 
 
 def test_widens_single_partition_to_default_parallelism(spark):
@@ -39,46 +29,3 @@ def test_noop_when_already_at_parallelism(spark):
     # the guard must return the SAME DataFrame — no added exchange for
     # inputs already at (or above) the session parallelism
     assert widen_small_scan(spark, df) is df
-
-
-def _reference_assign_col(centroids, vv, v):
-    """The pre-round-11 Column-object form, verbatim (the parity oracle)."""
-    entries = []
-    for cid, vec in centroids:
-        c_arr = F.array(*[F.lit(float(x)) for x in vec])
-        cc = 0.0
-        for x in vec:
-            cc += float(x) * float(x)
-        d2 = vv - 2.0 * dot(v, c_arr) + F.lit(cc)
-        entries.append(
-            F.struct(
-                F.round(d2, ROUND_DP).alias("d"), F.lit(int(cid)).alias("cid")
-            )
-        )
-    return F.array_min(F.array(*entries))
-
-
-def test_string_form_assignment_bit_matches_column_fold(spark):
-    # awkward doubles (negative, tiny, repeating-binary fractions) so any
-    # summation-order or rounding drift shows up in the 6-dp d2
-    centroids = [
-        (0, [0.1, -0.2, 0.30000001, 4.0]),
-        (1, [1e-7, 2.5, -3.125, 0.1 + 0.2]),
-        (2, [-1.0, -1.0, 7.7, 1.0 / 3.0]),
-    ]
-    rows = [
-        (i, [0.1 * i - 0.05 * j * (1 if (i + j) % 2 else -1) for j in range(4)])
-        for i in range(50)
-    ]
-    df = spark.createDataFrame(rows, "vec_id int, v array<double>").withColumn(
-        "vv", dot(F.col("v"), F.col("v"))
-    )
-    got = df.select(
-        "vec_id",
-        _assign_col(centroids, "vv", "v").alias("new"),
-        _reference_assign_col(centroids, F.col("vv"), F.col("v")).alias("old"),
-    )
-    diff = got.filter(
-        (F.col("new.d") != F.col("old.d")) | (F.col("new.cid") != F.col("old.cid"))
-    ).count()
-    assert diff == 0

@@ -100,6 +100,52 @@ def flatten_checked(vecs, dim: int, vec_col: str):
         )
     return flat.reshape(-1, dim)
 
+
+def nearest_centroids(books, sub_dim: int, round_dp: int):
+    """The rounded nearest-centroid argmin shared by the k-means assignment
+    (one codebook over the whole vector) and PQ encoding (M codebooks, one
+    per ``sub_dim``-wide subspace).
+
+    ``books`` is a list of codebooks, each a cid-sorted list of
+    ``(cid, centroid)``. Returns ``argmin(x) -> (codes, d2)`` for a dense
+    (n, M·sub_dim) float64 matrix: per subspace, d² = v·v − 2·v·cᵀ + c·c is
+    rounded half-up to ``round_dp`` and ``np.argmin`` takes the FIRST
+    minimum, i.e. the lowest cid on ties — the same rounding and tie-break
+    as the DuckDB oracles (``kmeans_oracle_cte``, ``pq_oracle_cte``). The
+    summation order is the matmul's (pairwise), not the oracles' sequential
+    ``list_inner_product`` fold; the 6-dp rounding absorbs the difference
+    at sf0.001, sf0.01 and sf0.1 (oracle MATCH, tests/test_scale_arrow_paths.py).
+    ``codes`` (n, M) int32 holds the chosen cids, ``d2`` (n, M) float64
+    their rounded squared distances."""
+    import numpy as np
+
+    tables = []
+    for centroids in books:
+        c_mat = np.asarray(
+            [c for _, c in centroids], dtype=np.float64
+        ).reshape(-1, sub_dim)
+        cids = np.asarray([cid for cid, _ in centroids], dtype=np.int32)
+        tables.append((cids, c_mat, (c_mat * c_mat).sum(axis=1)))
+
+    def argmin(x):
+        n = len(x)
+        rows = np.arange(n)
+        codes = np.empty((n, len(tables)), dtype=np.int32)
+        d2_min = np.empty((n, len(tables)), dtype=np.float64)
+        for m, (cids, c_mat, cc) in enumerate(tables):
+            xm = x[:, m * sub_dim : (m + 1) * sub_dim]
+            vv = (xm * xm).sum(axis=1)
+            d2 = round_half_up(
+                vv[:, None] - 2.0 * (xm @ c_mat.T) + cc[None, :], round_dp
+            )
+            idx = np.argmin(d2, axis=1)
+            codes[:, m] = cids[idx]
+            d2_min[:, m] = d2[rows, idx]
+        return codes, d2_min
+
+    return argmin
+
+
 def cosine_scores_arrow(
     df,
     qvec: list[float],
@@ -211,7 +257,10 @@ def cosine_scores_arrow(
                 names.append(vec_col)
             yield pa.RecordBatch.from_arrays(arrays, names)
 
-    out_schema = f"{id_col} long, {out_col} double"
+    # Passthrough columns keep their input type: Spark reads the returned
+    # Arrow column through the declared type (an int id declared long fails).
+    id_type = df.schema[id_col].dataType.simpleString()
+    out_schema = f"{id_col} {id_type}, {out_col} double"
     if keep_vec:
         out_schema += f", {vec_col} {df.schema[vec_col].dataType.simpleString()}"
     return df.select(id_col, vec_col).mapInArrow(score, out_schema)

@@ -6,132 +6,61 @@ comparing pairs only WITHIN a cluster — turning an O(n²) all-pairs cosine
 into O(Σ cluster_size²). This module is stage 1; the within-cluster prune
 is composed in ``plans/semdedup_q.py``.
 
-Spark-first shape: the per-row work is a JVM-side fold over a LITERAL
-centroid array (no join, no shuffle, map-only — the assignment stage is
-embarrassingly parallel at 100 TB); the only shuffle per iteration is the
-k×dim centroid re-average, whose result (k·dim rows, a few KB) is the one
-legitimately driver-held piece of state — exactly how Spark MLlib's own
-KMeans treats centroids. Determinism contract for cross-engine oracles:
-init = the k vectors with smallest id (cid in id order), squared distances
-rounded to 6 decimals before argmin with cid as tie-break, centroid means
-rounded to 6 decimals each update. All arithmetic is sequential
-left-to-right double folds, matching DuckDB's ``list_inner_product``.
+Spark-first shape: the per-row work is one Arrow kernel over the
+centroids shipped in the task closure (no join, no shuffle, map-only
+— the assignment stage is embarrassingly parallel at 100 TB); the only
+shuffle per iteration is the k×dim centroid re-average, whose result (k·dim
+rows, a few KB) is the one legitimately driver-held piece of state —
+exactly how Spark MLlib's own KMeans treats centroids. Determinism
+contract for cross-engine oracles: init = the k vectors with smallest id
+(cid in id order), squared distances rounded to 6 decimals before argmin
+with cid as tie-break, centroid means rounded to 6 decimals each update.
+The assignment is ``functions.vectors.nearest_centroids`` — PQ's encoder
+with one subspace — so rounding and tie-break match DuckDB's
+``kmeans_oracle_cte`` by construction, but the summation order is the
+matmul's, not ``list_inner_product``'s sequential fold: parity is not
+bit-parity by construction and rests on the oracle MATCH at every testdata
+SF (tests/test_scale_arrow_paths.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from transilien_api_etl_spark.functions.vectors import (
-    dot,
     flatten_checked,
-    round_half_up,
+    nearest_centroids,
 )
 
 ROUND_DP = 6
-
-# Above this k the literal-centroid expression tree (k structs × dim literal
-# doubles per row) stops being the right physical plan: analysis/codegen cost
-# grows with k·dim and the fold evaluates k·dim multiplies per row
-# interpreter-side. The Arrow path batches the same argmin as one
-# (batch × dim) @ (dim × k) matmul. Semantics are preserved (d² rounded to
-# ROUND_DP, lowest-cid tie-break — np.argmin returns the FIRST minimum);
-# only the float SUMMATION ORDER differs (pairwise vs sequential), so the
-# cross-engine bit-parity contract is only claimed for k ≤ this bound —
-# which covers every driver SF (the registered plans derive k=8 there).
-ARROW_K_MIN = 17
-
-
-def _assign_col(
-    centroids: list[tuple[int, list[float]]], vv_name: str, v_name: str
-) -> Column:
-    """min-by-(dist², cid) over a literal centroid list, as ONE SQL string.
-
-    dist²(v,c) = v·v − 2·v·c + c·c ; v·v arrives precomputed (once per row,
-    not once per centroid), c·c folds driver-side in the same sequential
-    double arithmetic as the oracle's ``list_inner_product(c.v, c.v)``.
-
-    String-form (round 11, the pq_codes_col lesson from operators/pq.py):
-    the previous Column-object form built k×(dim+2) literal Columns plus a
-    ``dot`` fold per centroid through py4j — measured ~0.46 s to BUILD
-    (+ ~0.04 s to analyze) at k=8×64-dim, paid once per Lloyd iteration
-    plus once for the final assignment (~1.4 s of driver-side expression
-    construction per registered kmeans query). This form builds in ~1 ms
-    and analyzes in ~0.06 s (warmed 5-rep medians, BASELINE.md round-11
-    session 5; embeddings_kmeans sf0.1 wall 1.99→0.92 s with the widen
-    landing together). The inner product unrolls as the explicit
-    left-to-right fold
-    ``((0.0 + v[0]·c0) + v[1]·c1)…`` — the identical summation order to
-    the old ``aggregate(zip_with(...))`` fold (value-parity verified at
-    sf0.1: 0 differing rows; the driver's oracle MATCH re-proves it end
-    to end at every SF). transform-over-literal-array keeps evaluation a
-    k-iteration loop — no Janino unroll blowup (the pq kernel A/B/C
-    note). Out-of-contract ragged rows degrade the same way (``get``
-    returns NULL out of bounds, poisoning d² to NULL like the zip_with
-    pad did), except rows LONGER than the centroid dim, which the old
-    form NULL-poisoned and this form scores on the first ``dim``
-    elements — outside the uniform-length data contract either way.
-    """
-    dim = len(centroids[0][1])
-    entries = []
-    for cid, vec in centroids:
-        cc = 0.0
-        for x in vec:
-            cc += float(x) * float(x)
-        fields = [f"'cid', {int(cid)}", f"'cc', {float(cc)!r}D"]
-        fields += [f"'c{d}', {float(x)!r}D" for d, x in enumerate(vec)]
-        entries.append(f"named_struct({', '.join(fields)})")
-    cent_arr = f"array({', '.join(entries)})"
-    ip = "0.0D"
-    for d in range(dim):
-        ip = f"({ip} + (CAST(get({v_name}, {d}) AS DOUBLE) * c.c{d}))"
-    d2 = f"(({vv_name} - (2.0D * {ip})) + c.cc)"
-    return F.expr(
-        f"array_min(transform({cent_arr}, "
-        f"c -> named_struct('d', round({d2}, {ROUND_DP}), 'cid', c.cid)))"
-    )
 
 
 def _assign_arrow_df(
     df: DataFrame, centroids: list[tuple[int, list[float]]], id_col: str
 ) -> DataFrame:
-    """Large-k assignment: one matmul per Arrow batch instead of a k-entry
-    literal expression tree. Input must be ``(id_col, v)`` with ``v`` a
-    uniform array<double>; output is ``(id_col, v, cluster, d2)`` — the
-    same shape :func:`kmeans_assign`'s JVM branch produces, with ``v``
-    passed through the kernel so downstream per-cluster work (the SemDeDup
-    prune) needs no join back to the corpus."""
+    """Nearest-centroid assignment, one matmul per Arrow batch. Input must
+    be ``(id_col, v)`` with ``v`` a uniform array<double>; output is
+    ``(id_col, v, cluster, d2)``, with ``v`` passed through the kernel so
+    downstream per-cluster work (the SemDeDup prune) needs no join back to
+    the corpus."""
+    dim = len(centroids[0][1])
 
     def assign(batches):
-        import numpy as np
         import pyarrow as pa
 
-        c_mat = np.asarray([vec for _, vec in centroids], dtype=np.float64)
-        cids = np.asarray([cid for cid, _ in centroids], dtype=np.int32)
-        cc = (c_mat * c_mat).sum(axis=1)
-        dim = c_mat.shape[1]
+        argmin = nearest_centroids([centroids], dim, ROUND_DP)
         for batch in batches:
-            vid = batch.column(0)
             vecs = batch.column(1)
-            x = flatten_checked(vecs, dim, "v")
-            vv = (x * x).sum(axis=1)
-            d2 = round_half_up(
-                vv[:, None] - 2.0 * (x @ c_mat.T) + cc[None, :], ROUND_DP
-            )
-            idx = np.argmin(d2, axis=1)  # first minimum = lowest cid tie-break
+            codes, d2 = argmin(flatten_checked(vecs, dim, "v"))
             yield pa.RecordBatch.from_arrays(
-                [
-                    vid,
-                    vecs,
-                    pa.array(cids[idx]),
-                    pa.array(d2[np.arange(len(idx)), idx]),
-                ],
+                [batch.column(0), vecs, pa.array(codes[:, 0]), pa.array(d2[:, 0])],
                 [id_col, "v", "cluster", "d2"],
             )
 
+    id_type = df.schema[id_col].dataType.simpleString()
     return df.select(id_col, "v").mapInArrow(
-        assign, f"{id_col} long, v array<double>, cluster int, d2 double"
+        assign, f"{id_col} {id_type}, v array<double>, cluster int, d2 double"
     )
 
 
@@ -139,7 +68,7 @@ def _normalize(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     return emb.select(
         F.col(id_col),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn("vv", dot(F.col("v"), F.col("v")))
+    )
 
 
 def kmeans_fit(
@@ -161,7 +90,7 @@ def kmeans_fit(
     df = widen_small_scan(emb.sparkSession, df, n_rows)
     # Cache the normalized vectors across Lloyd iterations (the MLlib
     # pattern): every iteration re-reads df; without this each one re-scans
-    # parquet and re-folds v·v. MEMORY_AND_DISK so a 100 TB input degrades
+    # parquet and re-casts v. MEMORY_AND_DISK so a 100 TB input degrades
     # to spill, never OOM. Released before returning — the final returned
     # plan recomputes from the scan, callers cache if they iterate further.
     from pyspark import StorageLevel
@@ -177,20 +106,9 @@ def kmeans_fit(
     centroids = [(cid, list(r["v"])) for cid, r in enumerate(init)]
 
     for _ in range(iterations):
-        if k >= ARROW_K_MIN:
-            assigned = _assign_arrow_df(df, centroids, id_col).select(
-                "cluster", F.posexplode("v").alias("d", "val")
-            )
-        else:
-            best = _assign_col(centroids, "vv", "v")
-            # NB: materialize the struct via withColumn before extracting
-            # fields — extracting from the raw expression alongside a
-            # multi-alias generator (posexplode) in one select loses the
-            # struct field names in analysis.
-            assigned = df.withColumn("best", best).select(
-                F.col("best.cid").alias("cluster"),
-                F.posexplode("v").alias("d", "val"),
-            )
+        assigned = _assign_arrow_df(df, centroids, id_col).select(
+            "cluster", F.posexplode("v").alias("d", "val")
+        )
         rows = (
             assigned.groupBy("cluster", "d")
             .agg(F.round(F.avg("val"), ROUND_DP).alias("val"))
@@ -240,17 +158,7 @@ def kmeans_assign_model(
     from transilien_api_etl_spark.io import widen_small_scan
 
     df = widen_small_scan(emb.sparkSession, _normalize(emb, id_col, vec_col), n_rows)
-    if k >= ARROW_K_MIN:
-        return _assign_arrow_df(df, centroids, id_col).select(
-            F.col(id_col), F.col("v"), F.col("cluster"), F.col("d2")
-        ), centroids
-    best = _assign_col(centroids, "vv", "v")
-    return df.withColumn("best", best).select(
-        F.col(id_col),
-        F.col("v"),
-        F.col("best.cid").alias("cluster"),
-        F.col("best.d").alias("d2"),
-    ), centroids
+    return _assign_arrow_df(df, centroids, id_col), centroids
 
 
 def kmeans_oracle_cte(

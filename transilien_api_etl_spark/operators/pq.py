@@ -15,18 +15,22 @@ LUT[m][code_m] — one literal-array element_at per subspace, map-only.
 
 Spark-first shape:
 - training = FUSED Lloyd: all M subspace assignments evaluate in one
-  expression and all M centroid updates land in one (m, cid, d) group-by
+  Arrow pass and all M centroid updates land in one (m, cid, d) group-by
   — one Spark job per iteration regardless of M (see ``pq_train``);
-- encoding = ONE fused scan: all M argmin folds evaluate per row against
-  literal codebooks — no join, no shuffle, embarrassingly parallel;
+- encoding = ONE fused scan: all M argmins evaluate per Arrow batch against
+  the codebooks shipped in the task closure — no join, no shuffle,
+  embarrassingly parallel;
 - search = the ADC fold over the codes array — also map-only; the only
   wide node is the global top-k (TakeOrderedAndProject).
 
 Determinism contract (same as operators/kmeans.py): init = first k
 subvectors by id, d² rounded to 6 dp before argmin with cid tie-break,
 centroid means rounded to 6 dp per update, LUT entries rounded to 6 dp,
-ADC sum folds left-to-right — all bit-reproducible against the DuckDB
-unrolled-CTE oracle.
+ADC sum folds left-to-right. The argmin is the k-means one,
+``functions.vectors.nearest_centroids``, whose matmul sums in a different
+order than the DuckDB unrolled-CTE oracle's sequential fold; the 6-dp
+rounding absorbs it, and the oracle MATCH at every testdata SF checks it
+(tests/test_scale_arrow_paths.py).
 """
 
 from __future__ import annotations
@@ -34,7 +38,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from transilien_api_etl_spark.operators.kmeans import ROUND_DP
+from transilien_api_etl_spark.functions.vectors import (
+    flatten_checked,
+    nearest_centroids,
+)
+from transilien_api_etl_spark.operators.kmeans import ROUND_DP, _normalize
 
 Codebook = list[tuple[int, list[float]]]
 
@@ -52,7 +60,7 @@ def pq_train(
     n_rows: int | None = None,
 ) -> list[Codebook]:
     """M subspace codebooks, trained FUSED: all M assignments evaluate in
-    one expression per iteration (pq_codes_col against the current literal
+    one Arrow pass per iteration (:func:`pq_codes_arrow` against the current
     codebooks) and all M centroid updates land in ONE (m, cid, d) group-by
     — so a full Lloyd iteration is a single Spark job regardless of M,
     versus M·(init+iterations) driver round-trips for M independent
@@ -69,10 +77,7 @@ def pq_train(
     any modulus across replicas and base ids alike."""
     from pyspark import StorageLevel
 
-    df = emb.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
+    df = _normalize(emb, id_col, vec_col)
     if sample_mod > 1:
         df = df.filter(F.pmod(F.col(id_col), F.lit(sample_mod)) == 0)
     # Widen single-split driver-SF scans before caching: each Lloyd
@@ -108,9 +113,9 @@ def pq_train(
         # transform-fold projection (CodegenFallback — M·k named_structs
         # per row evaluated boxed; measured ~0.54 s/iteration at a mere
         # 2 000×64 and multi-second at the 66 k-row twin sample). Codes
-        # verified IDENTICAL to the fold on every driver SF and the twin
-        # bound (scripts/r12_pq_arrow_parity.py), so the per-(m,cid,d)
-        # means — rounded to ROUND_DP — are unchanged.
+        # match the DuckDB oracle's on every testdata SF
+        # (tests/test_scale_arrow_paths.py), so the per-(m,cid,d) means —
+        # rounded to ROUND_DP — match too.
         enc = pq_codes_arrow(
             df, books, sub_dim, id_col=id_col, vec_col="v", keep_vec=True
         )
@@ -150,9 +155,9 @@ def pq_train_sample_mod(n: int, target: int = 65536) -> int:
     thousands of points per centroid, not the corpus — FAISS trains
     IndexPQ on a bounded sample for exactly this reason — and each Lloyd
     iteration scans the training set, so training on a 1 M-row corpus pays
-    2 full interpreted-HOF passes for zero codebook-quality gain. mod=1
-    (train on everything) below ``target`` keeps the cross-engine oracle's
-    bit-parity domain intact: every driver SF trains full-corpus."""
+    2 full Lloyd passes for zero codebook-quality gain. mod=1 (train on
+    everything) below 2·``target`` keeps every testdata SF training on the
+    full corpus, like the registered oracle."""
     return max(1, n // target)
 
 
@@ -166,19 +171,16 @@ def pq_codes_arrow(
     keep_vec: bool = False,
 ) -> DataFrame:
     """Corpus encoding as an Arrow kernel: all M subspace argmins evaluate
-    as (batch × sub_dim) @ (sub_dim × k) matmuls instead of the interpreted
-    ``transform`` fold (the fold evaluates M·k·sub_dim interpreter ops per
-    ROW — measured 80 s for the full knn_pq_adc query at 1 M×64 vs ~8 s
-    with this kernel; round 12 re-measured the fold at 1.5 s for a mere
-    2 000 rows — HOFs are CodegenFallback, every named_struct+round is an
-    interpreted boxed eval). Same semantics as :func:`pq_codes_col`: d²
-    rounded to ROUND_DP, lowest-cid tie-break (np.argmin returns the first
-    minimum, and codebooks are cid-sorted); only the float summation order
-    differs (pairwise matmul vs sequential), which round 12 verified
-    produces IDENTICAL codes and therefore identical Lloyd updates on
-    every driver SF and the scale cache (scripts/r12_pq_arrow_parity.py;
-    the driver's oracle MATCH re-proves it end-to-end), so this kernel is
-    now the single encode path at every corpus size. ``keep_vec=True``
+    as (batch × sub_dim) @ (sub_dim × k) matmuls
+    (``functions.vectors.nearest_centroids``, shared with k-means). It
+    replaced an interpreted ``transform`` fold that evaluated M·k·sub_dim
+    boxed ops per ROW — measured 80 s for the full knn_pq_adc query at
+    1 M×64 vs ~8 s with this kernel, and 1.5 s vs 0.3 s for 2 000 rows.
+    d² is rounded to ROUND_DP with a lowest-cid tie-break (codebooks are
+    cid-sorted); only the float summation order differs from the DuckDB
+    oracle (pairwise matmul vs sequential), and the codes match the
+    oracle's on every testdata SF (tests/test_scale_arrow_paths.py; the
+    registry's oracle MATCH re-proves it end-to-end). ``keep_vec=True``
     additionally passes the raw vector column through (the train loop
     posexplodes codes next to the vector for the centroid update — one
     Arrow pass, no join back). Output: (id_col, codes array<int>[,
@@ -186,7 +188,8 @@ def pq_codes_arrow(
     encode = _pq_encode_kernel(
         books, sub_dim, id_col=id_col, vec_col=vec_col, keep_vec=keep_vec
     )
-    schema = f"{id_col} long, codes array<int>"
+    id_type = df.schema[id_col].dataType.simpleString()  # int ids stay int
+    schema = f"{id_col} {id_type}, codes array<int>"
     if keep_vec:
         schema += f", {vec_col} {df.schema[vec_col].dataType.simpleString()}"
     return df.select(id_col, vec_col).mapInArrow(encode, schema)
@@ -200,40 +203,21 @@ def _pq_encode_kernel(
     module level so tests can drive it with explicit batches (Spark elides
     0-row batches, so the empty-batch typing path is untestable through
     the DataFrame API alone)."""
-    from transilien_api_etl_spark.functions.vectors import (
-        flatten_checked,
-        round_half_up,
-    )
-
     dim = len(books) * sub_dim
 
     def encode(batches):
-        import numpy as np
         import pyarrow as pa
 
-        mats = []  # per subspace: (cids, centroid matrix, cc)
-        for centroids in books:
-            c_mat = np.asarray([c for _, c in centroids], dtype=np.float64)
-            cids = np.asarray([cid for cid, _ in centroids], dtype=np.int32)
-            mats.append((cids, c_mat, (c_mat * c_mat).sum(axis=1)))
+        argmin = nearest_centroids(books, sub_dim, ROUND_DP)
         for batch in batches:
-            vid = batch.column(0)
-            x = flatten_checked(batch.column(1), dim, vec_col)
-            cols = []
-            for m, (cids, c_mat, cc) in enumerate(mats):
-                xm = x[:, m * sub_dim : (m + 1) * sub_dim]
-                vv = (xm * xm).sum(axis=1)
-                d2 = round_half_up(
-                    vv[:, None] - 2.0 * (xm @ c_mat.T) + cc[None, :], ROUND_DP
-                )
-                cols.append(cids[np.argmin(d2, axis=1)])
-            codes = np.stack(cols, axis=1)  # n × M
+            codes, _ = argmin(flatten_checked(batch.column(1), dim, vec_col))
             # Explicit list<int32> type: on an EMPTY batch pa.array([])
             # would infer null type and mismatch the declared array<int>
             # schema (the kmeans kernel's empty path stays typed because
             # its columns come from numpy; this one is a Python list of
             # rows). ADVICE r7.
-            arrays = [vid, pa.array(list(codes), type=pa.list_(pa.int32()))]
+            codes_pa = pa.array(list(codes), type=pa.list_(pa.int32()))
+            arrays = [batch.column(0), codes_pa]
             names = [id_col, "codes"]
             if keep_vec:
                 arrays.append(batch.column(1))
@@ -241,59 +225,6 @@ def _pq_encode_kernel(
             yield pa.RecordBatch.from_arrays(arrays, names)
 
     return encode
-
-
-def pq_codes_col(books: list[Codebook], vec_col: str, sub_dim: int) -> Column:
-    """All M code assignments fused into one array<int> expression —
-    a single map-only pass over the scan.
-
-    Kernel note (3rd-generation, overhead-measured): per subspace the
-    argmin is ONE ``transform`` over a literal array of centroid structs
-    {cid, cc, c0..c{sub_dim-1}}, with the per-centroid inner product as
-    EXPLICIT element arithmetic (v·c = ((v0·c0 + v1·c1) + …) — identical
-    left-to-right order to the ``dot`` fold and DuckDB's
-    ``list_inner_product``), and the WHOLE M-subspace codes array is
-    emitted as a single SQL string → one ``F.expr`` call. Measured at
-    M=16,k=16 on this box: the original per-centroid ``dot``-fold form
-    (2·M·k zip_with/aggregate lambdas) cost ~10 s per query build, of
-    which ~5 s was PYTHON-side py4j chatter creating ~1.6k Column objects
-    and ~5 s Catalyst lambda resolution; the Column-object transform form
-    still paid ~4 s py4j; this string form builds in ~1 ms and analyzes
-    in <0.5 s. Two other forms were measured and rejected earlier: a
-    fully-unrolled scalar tree (M·k explicit struct entries) OOMs Janino
-    codegen, and a flattened literal lookup table wrecks codegen size
-    (see quantize_q's kernel A/B/C note). The transform form keeps
-    codegen a k-iteration loop — small method bodies, no unroll."""
-    subs = []
-    for m, centroids in enumerate(books):
-        off = m * sub_dim
-        elems = [
-            f"CAST(get({vec_col}, {off + d}) AS DOUBLE)" for d in range(sub_dim)
-        ]
-        vv = elems[0] + " * " + elems[0]
-        for e in elems[1:]:
-            vv = f"({vv} + {e} * {e})"
-
-        entries = []
-        for cid, vec in centroids:
-            cc = 0.0
-            for x in vec:
-                cc += float(x) * float(x)
-            fields = [f"'cid', {int(cid)}", f"'cc', {float(cc)!r}D"]
-            fields += [f"'c{d}', {float(x)!r}D" for d, x in enumerate(vec)]
-            entries.append(f"named_struct({', '.join(fields)})")
-        cent_arr = f"array({', '.join(entries)})"
-
-        ip = f"{elems[0]} * c.c0"
-        for d in range(1, sub_dim):
-            ip = f"({ip} + {elems[d]} * c.c{d})"
-        d2 = f"{vv} - 2.0D * {ip} + c.cc"
-        best = (
-            f"array_min(transform({cent_arr}, "
-            f"c -> named_struct('d', round({d2}, {ROUND_DP}), 'cid', c.cid)))"
-        )
-        subs.append(f"{best}.cid")
-    return F.expr(f"array({', '.join(subs)})")
 
 
 def adc_luts(books: list[Codebook], qvec: list[float], sub_dim: int) -> list[list[float]]:

@@ -40,15 +40,6 @@ ITERS = 2
 
 _CTE = pq_oracle_cte(m_sub=M_SUB, sub_dim=SUB_DIM, k=K_CODES, iterations=ITERS)
 
-# Above this corpus size the plan leaves the oracle's bit-parity domain
-# (no driver SF comes near it — sf0.1 has 2 000 vectors): training samples
-# down to ~64 k rows (pq_train_sample_mod) and encoding runs the Arrow
-# matmul kernel instead of the interpreted transform fold. Same rounding,
-# same lowest-cid tie-break; only float summation order differs — the
-# switch is what makes the registered query both hash-checkable at driver
-# SFs AND benchable at the 1 M-vector scale cache (80 s → ~8 s per rep).
-_ARROW_MIN_N = 100_000
-
 # Reduced-corpus bench twin bound (round 9, VERDICT r8 task 1): first 100
 # of the scale cache's 500 embedding replicas → 200 k vectors at the sf0.1
 # cache, where the twin oracle below — same vec_id bound, same sampled
@@ -60,22 +51,18 @@ _ARROW_MIN_N = 100_000
 # watchdog cap; an earlier 250-replica bound shipped on a 9.9 s record
 # that had actually been measured at 100 replicas). 200 k is the
 # smallest size that keeps the Spark side on its genuine scale path:
-# sampled train needs n//65536 ≥ 2 (n ≥ 131 072) to engage, and the
-# Arrow matmul encode needs n ≥ _ARROW_MIN_N. On driver testdata
-# vec_id < KEY_STRIDE, so the filter is a no-op, the SQL mod expression
-# degrades to 1, and bench_oracle ≡ oracle value-for-value
+# sampled training needs n//65536 ≥ 2 (n ≥ 131 072) to engage. On the
+# testdata vec_id < KEY_STRIDE, so the filter is a no-op, the SQL mod
+# expression degrades to 1, and bench_oracle ≡ oracle value-for-value
 # (tests/test_bench_variants.py).
 _BENCH_REPLICA_CAP = 100
 _BENCH_VEC_BOUND = _BENCH_REPLICA_CAP * KEY_STRIDE
-# pq_train_sample_mod(n) as SQL, evaluated against CTE nn's count n —
-# gated on _ARROW_MIN_N exactly like _encoded_codes' sample_mod switch.
-_TRAIN_MOD_EXPR = (
-    f"CASE WHEN n >= {_ARROW_MIN_N} THEN greatest(n//65536, 1) ELSE 1 END"
-)
+# pq_train_sample_mod(n) as SQL, evaluated against CTE nn's count n.
+_TRAIN_MOD_EXPR = "greatest(n//65536, 1)"
 
 
 def _encoded_codes(spark: SparkSession, sf_dir: str, vec_bound: int | None = None):
-    """(embeddings df, (vec_id, codes) df) with the size-based path switch
+    """(embeddings df, (vec_id, codes) df) with the size-based training sample
     shared by both PQ queries, so encode and search can never diverge."""
     emb = load_table(spark, sf_dir, "embeddings")
     if vec_bound is None:
@@ -91,17 +78,9 @@ def _encoded_codes(spark: SparkSession, sf_dir: str, vec_bound: int | None = Non
         sub_dim=SUB_DIM,
         k=K_CODES,
         iterations=ITERS,
-        sample_mod=pq_train_sample_mod(n) if n >= _ARROW_MIN_N else 1,
+        sample_mod=pq_train_sample_mod(n),
         n_rows=n,
     )
-    # Arrow matmul encode at EVERY corpus size (round 12; was gated on
-    # n >= _ARROW_MIN_N): the JVM transform fold is CodegenFallback, so its
-    # M·k named_struct argmin evaluated interpreted — measured 1.5 s for
-    # 2 000 rows at sf0.1 vs 0.3 s through the kernel, and the codes are
-    # verified IDENTICAL on every driver SF and at the twin bound
-    # (scripts/r12_pq_arrow_parity.py; the driver's oracle MATCH re-proves
-    # it end-to-end). Training-sample gating (sample_mod) keeps its
-    # threshold unchanged.
     enc = pq_codes_arrow(emb, books, SUB_DIM, id_col="vec_id", vec_col="embedding")
     return emb, books, enc
 

@@ -79,7 +79,7 @@ def _q1_pricing_summary(
     "q1_pricing_summary",
     doc="TPC-H Q1 shape: pushed-down ship-date filter + 8-agg hash groupBy "
     "(SURVEY §3 A1/P2/F3/O1). Partial+final HashAggregate, whole-stage "
-    "codegen. bench: graded through the ×8 inline-amplified twin (see "
+    f"codegen. bench: graded through the ×{_Q1_AMPLIFY} inline-amplified twin (see "
     "_Q1_AMPLIFY) so the number measures the plan, not the sub-jitter "
     "0.3 s floor the row hovered on in r11 runs 15-16.",
     tags=("agg", "filter"),

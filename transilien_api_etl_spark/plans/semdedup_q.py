@@ -99,9 +99,8 @@ def _derived_k(n: int) -> int:
 #
 # Round 12 (VERDICT r11 task 1): 64 → 48 replicas (96 k vectors). The
 # ~17-27 s twin oracle was one of the r11 driver run's budget holes; at
-# 96 k the derived k = 24 still clears ARROW_K_MIN, so the twin keeps
-# exercising the genuine scale path (Arrow assignment + per-cluster gram
-# prune) while the NOT-EXISTS oracle — linear in n at fixed cluster size —
+# 96 k the derived k = 24 is still above _K, so the twin keeps exercising
+# the genuine scale path (per-cluster gram prune) while the NOT-EXISTS oracle — linear in n at fixed cluster size —
 # drops ~25%.
 _BENCH_REPLICA_CAP = 48
 _BENCH_VEC_BOUND = _BENCH_REPLICA_CAP * KEY_STRIDE
@@ -138,7 +137,8 @@ def _kmeans_df(
     "embeddings_kmeans",
     doc="Fixed-iteration Lloyd k-means assignments over the embedding "
     "column (k=8, 2 iterations; SemDeDup stage 1): centroid argmin is a "
-    "map-only JVM fold over literal centroids, the per-iteration model "
+    "map-only Arrow matmul kernel over the current centroids, the "
+    "per-iteration model "
     "update is one k·dim-row aggregate. Oracle unrolls the identical "
     "iterations as CTEs.",
     tags=("vectors", "clustering", "iterative", "dedup"),
@@ -169,7 +169,7 @@ def _survivors(
     km = km.withColumn("nrm", l2_norm(F.col("v")))
     # Lazy localCheckpoint before the self-join (round 12, guide §3.3/§5):
     # without it BOTH anti-join sides re-execute the whole assignment
-    # lineage (scan → normalize → assign fold → norm fold) — measured
+    # lineage (scan → normalize → assign kernel → norm fold) — measured
     # sf0.1: 6.7 s → 1.7 s full-query with the checkpoint, survivor set
     # value-identical. Bounded by construction: this branch only runs at
     # k == _K, i.e. n ≤ _K·_TARGET_CLUSTER = 32 000 rows (~17 MB of
@@ -199,8 +199,8 @@ def _survivors(
     # at every SF re-proves it end-to-end). Out-of-contract ragged rows:
     # v[d] past the end yields NULL and poisons the product/sum to NULL
     # exactly as the zip_with pad did, except rows LONGER than dim, which
-    # score on the first dim elements (the _assign_col footnote — outside
-    # the uniform-length data contract either way).
+    # score on the first dim elements — outside the uniform-length data
+    # contract either way.
     ip = "0.0D"
     for d in range(dim):
         ip = f"({ip} + (a.v[{d}] * b.v[{d}]))"
