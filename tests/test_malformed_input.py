@@ -83,3 +83,36 @@ def test_normalize_passages_nonnumeric_train_num_yields_null(spark):
     rows = normalize_passages(parse_passages(raw)).orderBy("expected_ts").collect()
     assert [r.train_num for r in rows] == [None, 123401]
     assert [r.status for r in rows] == ["on_time", "on_time"]
+
+
+def test_normalize_passages_unparseable_date_yields_null(spark):
+    """A well-formed <date> whose text does not parse must keep its row
+    with a NULL expected_ts and service_day — not abort the whole poll
+    cycle with CANNOT_PARSE_TIMESTAMP under Spark 4's ANSI mode. The
+    other rows of the payload normalize exactly as without it."""
+    from transilien_api_etl_spark.sources.realtime import (
+        normalize_passages,
+        parse_passages,
+    )
+
+    good = (
+        '<train><date mode="R">02/01/2026 08:07</date>'
+        "<num>123401</num><miss>POPI</miss><term>87271007</term></train>"
+    )
+    bad = (
+        '<train><date mode="R">demain 8h</date>'
+        "<num>123403</num><miss>POPI</miss><term>87271007</term></train>"
+    )
+
+    def normalized(trains: str) -> dict:
+        xml = f'<?xml version="1.0"?><passages gare="87271007">{trains}</passages>'
+        raw = spark.createDataFrame([("87271007", xml)], "station string, xml string")
+        return {r.train_num: r.asDict() for r in normalize_passages(parse_passages(raw)).collect()}
+
+    rows = normalized(good + bad)
+    assert set(rows) == {123401, 123403}
+    assert rows[123403]["expected_ts"] is None
+    assert rows[123403]["service_day"] is None
+    assert rows[123403]["status"] == "on_time"
+    assert rows[123401] == normalized(good)[123401]
+    assert rows[123401]["service_day"] == "20260102"

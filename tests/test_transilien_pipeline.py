@@ -345,3 +345,147 @@ def test_load_gtfs_zip_handles_nested_directory_prefix(spark, gtfs_dir, tmp_path
     feeds = load_gtfs_zip(spark, zpath)
     assert feeds["stops"].count() == load_gtfs(spark, gtfs_dir)["stops"].count()
     assert feeds["trips"].count() > 0
+
+
+# --- A poll cycle's fixed costs: one source evaluation per upsert, one
+# cached schedule per (feed, service day). ---------------------------------
+
+
+def _counting_batch(spark, rows, schema):
+    """``rows`` behind a Python UDF filter that counts, in an accumulator,
+    every row it evaluates — once per evaluation of the frame."""
+    from pyspark.sql import functions as F
+
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("boolean")
+    def keep(_key):
+        seen.add(1)
+        return True
+
+    return spark.createDataFrame(rows, schema).filter(keep("key")), seen
+
+
+@pytest.mark.parametrize("partition_cols", [None, ["p"]], ids=["unpartitioned", "partitioned"])
+def test_upsert_evaluates_incoming_batch_once(spark, tmp_path, partition_cols):
+    """With a store present, the incoming frame (a DataSource scan on the
+    poll path) is evaluated once per call — not once for the touched
+    partitions and again for the union it writes."""
+    schema = "key string, p string, version int"
+    path = str(tmp_path / "store")
+    upsert_by_key(
+        spark.createDataFrame([("a", "d1", 1), ("b", "d2", 1)], schema),
+        path, ["key"], "version", partition_cols=partition_cols,
+    )
+    rows = [("a", "d1", 2), ("c", "d1", 1), ("d", "d3", 1)]
+    batch, seen = _counting_batch(spark, rows, schema)
+    upsert_by_key(batch, path, ["key"], "version", partition_cols=partition_cols)
+    assert seen.value == len(rows)
+    got = sorted(tuple(r) for r in spark.read.parquet(path).select("key", "p", "version").collect())
+    assert got == [("a", "d1", 2), ("b", "d2", 1), ("c", "d1", 1), ("d", "d3", 1)]
+
+
+def test_upsert_keeps_rows_of_the_null_partition(spark, tmp_path):
+    """A NULL partition value (a passage without <date> has a NULL
+    service_day) is a partition too: the touched semi-join must read it
+    back, or the dynamic overwrite replaces it and drops key b."""
+    schema = "key string, p string, version int"
+    path = str(tmp_path / "store")
+    upsert_by_key(
+        spark.createDataFrame([("a", None, 1), ("b", None, 1), ("c", "d1", 1)], schema),
+        path, ["key"], "version", partition_cols=["p"],
+    )
+    upsert_by_key(
+        spark.createDataFrame([("a", None, 2)], schema),
+        path, ["key"], "version", partition_cols=["p"],
+    )
+    got = sorted(
+        (r.key, r.p, r.version)
+        for r in spark.read.parquet(path).select("key", "p", "version").collect()
+    )
+    assert got == [("a", None, 2), ("b", None, 1), ("c", "d1", 1)]
+
+
+def _feed_dir(tmp_path) -> str:
+    d = tmp_path / "gtfs"
+    d.mkdir()
+    for name, content in GTFS_FILES.items():
+        (d / f"{name}.txt").write_text(content)
+    return str(d)
+
+
+def _trip_ids(sched) -> set[str]:
+    return {r.trip_id for r in sched.select("trip_id").distinct().collect()}
+
+
+def test_schedule_memo_hit_returns_the_cached_frame(spark, tmp_path):
+    """Polls against an unchanged feed and day reuse one cached schedule:
+    the second call returns the same frame, read from memory."""
+    d = _feed_dir(tmp_path)
+    first = scheduled_departures(load_gtfs(spark, d), DAY)
+    assert load_gtfs(spark, d)["stop_times"] is load_gtfs(spark, d)["stop_times"]
+    expect = _trip_ids(first)
+    again = scheduled_departures(load_gtfs(spark, d), DAY)
+    assert again is first and again.is_cached
+    assert "InMemoryRelation" in again._jdf.queryExecution().optimizedPlan().toString()
+    assert _trip_ids(again) == expect == {"SNCF-123401-H", "SNCF-123403-H", "SNCF-777777-H"}
+
+
+def test_schedule_memo_sees_a_rewritten_feed_file(spark, tmp_path):
+    """Rewriting calendar_dates.txt changes the listing, so the feed and
+    the schedule are rebuilt from the new content."""
+    d = _feed_dir(tmp_path)
+    before = scheduled_departures(load_gtfs(spark, d), DAY)
+    assert "SNCF-555555-H" not in _trip_ids(before)
+    (tmp_path / "gtfs" / "calendar_dates.txt").write_text(
+        GTFS_FILES["calendar_dates"] + f"WEEKEND,{DAY},1\n"
+    )
+    after = scheduled_departures(load_gtfs(spark, d), DAY)
+    assert after is not before and not before.is_cached
+    assert "SNCF-555555-H" in _trip_ids(after)
+
+
+def test_schedule_memo_misses_on_another_day_or_session(spark, tmp_path):
+    """One slot: another day replaces the entry and unpersists the old
+    frame; a new session builds its own feed frames, so it misses too."""
+    d = _feed_dir(tmp_path)
+    friday = scheduled_departures(load_gtfs(spark, d), DAY)
+    assert friday.count() > 0
+    saturday = scheduled_departures(load_gtfs(spark, d), "20260103")
+    assert saturday is not friday
+    assert not friday.is_cached and saturday.is_cached
+    assert _trip_ids(saturday) == {"SNCF-555555-H"}
+
+    fresh = scheduled_departures(load_gtfs(spark.newSession(), d), "20260103")
+    assert fresh is not saturday and not saturday.is_cached
+    assert _trip_ids(fresh) == {"SNCF-555555-H"}
+
+
+def test_schedule_memo_is_shared_safely_across_threads(spark, tmp_path):
+    """foreachBatch calls in from its own thread: concurrent first polls
+    must build one schedule, and every caller gets that same frame."""
+    import sys
+    import threading
+
+    d = _feed_dir(tmp_path)
+    got, errors = [], []
+
+    def poll():
+        try:
+            got.append(scheduled_departures(load_gtfs(spark, d), DAY))
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=poll) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and len(got) == len(threads)
+    assert all(s is got[0] for s in got) and got[0].is_cached

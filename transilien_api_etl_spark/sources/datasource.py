@@ -21,9 +21,10 @@ The transport is pluggable: ``endpoint`` points at a directory holding one
 container — no network). A production deployment swaps `_fetch` for the
 HTTP GET; nothing else changes.
 
-Rows come out string-typed in RAW_PASSAGE_SCHEMA;
-``sources/realtime.normalize_passages`` stays the typing/normalization
-stage, shared with the mapInPandas path.
+Rows come out string-typed in RAW_PASSAGE_SCHEMA, parsed by
+``sources/realtime._parse`` — the same parser as the mapInPandas path —
+and ``sources/realtime.normalize_passages`` stays the typing/normalization
+stage for both.
 """
 
 from __future__ import annotations
@@ -39,7 +40,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from transilien_api_etl_spark.sources.realtime import RAW_PASSAGE_SCHEMA
+from transilien_api_etl_spark.sources.realtime import RAW_PASSAGE_SCHEMA, _parse
 
 CHUNK_SIZE = 20  # stations per partition, mirrors the reference's batching
 
@@ -58,66 +59,51 @@ def _fetch(endpoint: str, station: str) -> str | None:
         return None
 
 
-def _parse(station: str, payload: str | None) -> Iterator[tuple]:
-    """XML → tuples in RAW_PASSAGE_SCHEMA order; bad payloads yield nothing
-    (the reference logs-and-skips bad station responses)."""
-    import xml.etree.ElementTree as ET
-
-    if payload is None:
-        return
-    try:
-        root = ET.fromstring(payload)
-    except ET.ParseError:
-        return
-    for train in root.iter("train"):
-        date_el = train.find("date")
-        yield (
-            station,
-            train.findtext("num"),
-            train.findtext("miss"),
-            train.findtext("term"),
-            None if date_el is None else date_el.text,
-            None if date_el is None else date_el.get("mode"),
-            train.findtext("etat"),
-        )
-
-
 class _StationChunk(InputPartition):
     def __init__(self, endpoint: str, stations: Sequence[str]):
         self.endpoint = endpoint
         self.stations = list(stations)
 
 
-def _stations(options: dict) -> list[str]:
-    """Station roster: explicit option, else every *.xml at the endpoint."""
+def _chunks(options: dict, n_cycles: int = 1) -> list[_StationChunk]:
+    """``n_cycles`` polls of the station roster (explicit ``stations``
+    option, else every *.xml at the endpoint), ``chunk_size`` stations per
+    partition; never zero partitions."""
+    endpoint = options["endpoint"]
     explicit = options.get("stations")
     if explicit:
-        return sorted(s.strip() for s in explicit.split(",") if s.strip())
-    endpoint = options["endpoint"]
-    return sorted(
-        f[: -len(".xml")] for f in os.listdir(endpoint) if f.endswith(".xml")
-    )
+        stations = sorted(s.strip() for s in explicit.split(",") if s.strip())
+    else:
+        stations = sorted(
+            f[: -len(".xml")] for f in os.listdir(endpoint) if f.endswith(".xml")
+        )
+    chunk = int(options.get("chunk_size", CHUNK_SIZE))
+    parts = [
+        _StationChunk(endpoint, stations[i : i + chunk])
+        for _cycle in range(n_cycles)
+        for i in range(0, len(stations), chunk)
+    ]
+    return parts or [_StationChunk(endpoint, [])]
 
 
-class TransilienXmlReader(DataSourceReader):
+class _StationChunkReader:
+    """``read`` shared by the batch and the stream reader: fetch and parse
+    each station of one chunk, executor-side."""
+
     def __init__(self, options: dict):
         self.options = options
-
-    def partitions(self) -> Sequence[InputPartition]:
-        endpoint = self.options["endpoint"]
-        stations = _stations(self.options)
-        chunk = int(self.options.get("chunk_size", CHUNK_SIZE))
-        return [
-            _StationChunk(endpoint, stations[i : i + chunk])
-            for i in range(0, len(stations), chunk)
-        ] or [_StationChunk(endpoint, [])]
 
     def read(self, partition: _StationChunk) -> Iterator[tuple]:
         for station in partition.stations:
             yield from _parse(station, _fetch(partition.endpoint, station))
 
 
-class TransilienXmlStreamReader(DataSourceStreamReader):
+class TransilienXmlReader(_StationChunkReader, DataSourceReader):
+    def partitions(self) -> Sequence[InputPartition]:
+        return _chunks(self.options)
+
+
+class TransilienXmlStreamReader(_StationChunkReader, DataSourceStreamReader):
     """One offset increment == one polling cycle over the full roster.
 
     partitions(start, end) replays cycles [start, end): each cycle is
@@ -140,9 +126,6 @@ class TransilienXmlStreamReader(DataSourceStreamReader):
 
     MAX_CATCHUP_CYCLES = 10
 
-    def __init__(self, options: dict):
-        self.options = options
-
     def initialOffset(self) -> dict:
         import time
 
@@ -159,21 +142,8 @@ class TransilienXmlStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         # keep the in-session counter ahead of any replayed offset range
         self._latest = max(getattr(self, "_latest", 0), start["cycle"], end["cycle"])
-        endpoint = self.options["endpoint"]
-        stations = _stations(self.options)
-        chunk = int(self.options.get("chunk_size", CHUNK_SIZE))
         n_cycles = min(max(end["cycle"] - start["cycle"], 1), self.MAX_CATCHUP_CYCLES)
-        parts = []
-        for _cycle in range(n_cycles):
-            parts.extend(
-                _StationChunk(endpoint, stations[i : i + chunk])
-                for i in range(0, len(stations), chunk)
-            )
-        return parts or [_StationChunk(endpoint, [])]
-
-    def read(self, partition: _StationChunk) -> Iterator[tuple]:
-        for station in partition.stations:
-            yield from _parse(station, _fetch(partition.endpoint, station))
+        return _chunks(self.options, n_cycles)
 
     def commit(self, end: dict) -> None:
         pass

@@ -7,9 +7,27 @@ Scale posture: every file is a plain CSV scan with an explicit schema (no
 by file split. ``stop_times`` is the only large table (O(10^6+) rows in real
 feeds; O(10^9) at 100 TB-scale multi-network feeds) — everything else is
 broadcast-sized dimension data.
+
+A poller matches every poll against the same feed and service day, so the
+static side is built once, not once per poll. Two one-slot memos, guarded
+by one lock (``foreachBatch`` calls in from its own thread):
+
+- ``load_gtfs`` returns the same frames while the session object, the
+  directory and its listing — sorted ``(name, length, mtime)`` from one
+  Hadoop ``listStatus`` — are unchanged. Rewriting a member file changes
+  its length or mtime and rebuilds the feed.
+- ``scheduled_departures`` returns the same ``.cache()``d frame while its
+  input frames (compared with ``is``), the day and the session time zone
+  are unchanged. A miss unpersists the previous entry, so at most one
+  day's schedule stays in storage.
+
+``load_gtfs_zip`` is not memoized: each call extracts to a new directory,
+so its frames, and the schedule built from them, are new on every call.
 """
 
 from __future__ import annotations
+
+import threading
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -114,19 +132,55 @@ def load_gtfs_table(spark: SparkSession, gtfs_dir: str, name: str) -> DataFrame:
     )
 
 
+_memo_lock = threading.Lock()
+_feed_memo: tuple | None = None  # (spark, (gtfs_dir, listing), feeds)
+_schedule_memo: tuple | None = None  # (input frames, (day, time zone), schedule)
+
+
+def _listing(spark: SparkSession, gtfs_dir: str) -> tuple[tuple[str, int, int], ...]:
+    """Sorted ``(name, length, mtime)`` of the directory's entries from one
+    Hadoop ``listStatus``; empty when the directory does not exist."""
+    from py4j.protocol import Py4JJavaError
+
+    path = spark._jvm.org.apache.hadoop.fs.Path(gtfs_dir)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    try:
+        statuses = fs.listStatus(path)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.io.FileNotFoundException":
+            raise
+        return ()
+    return tuple(
+        sorted((s.getPath().getName(), s.getLen(), s.getModificationTime()) for s in statuses)
+    )
+
+
 def load_gtfs(spark: SparkSession, gtfs_dir: str) -> dict[str, DataFrame]:
     """Whole feed from a directory; optional members (frequencies,
     calendar_dates) missing on disk load as empty frames so the downstream
-    plan shape never changes."""
-    import os
+    plan shape never changes.
 
-    feeds: dict[str, DataFrame] = {}
-    for name, schema in GTFS_SCHEMAS.items():
-        if os.path.exists(f"{gtfs_dir}/{name}.txt"):
-            feeds[name] = load_gtfs_table(spark, gtfs_dir, name)
-        else:
-            feeds[name] = spark.createDataFrame([], schema)
-    return feeds
+    One-slot memo: while the session object, ``gtfs_dir`` and the
+    directory listing (sorted ``(name, length, mtime)``) are unchanged, the
+    call returns the same frames (in a new dict), so ``scheduled_departures``
+    on them hits its own memo. Any rewritten, added or removed member, or a
+    call for another directory or session, rebuilds the feed and replaces
+    the slot."""
+    global _feed_memo
+    listing = _listing(spark, gtfs_dir)
+    key = (gtfs_dir, listing)
+    with _memo_lock:
+        if _feed_memo is not None and _feed_memo[0] is spark and _feed_memo[1] == key:
+            return dict(_feed_memo[2])
+        present = {name for name, _len, _mtime in listing}
+        feeds: dict[str, DataFrame] = {}
+        for name, schema in GTFS_SCHEMAS.items():
+            if f"{name}.txt" in present:
+                feeds[name] = load_gtfs_table(spark, gtfs_dir, name)
+            else:
+                feeds[name] = spark.createDataFrame([], schema)
+        _feed_memo = (spark, key, feeds)
+        return dict(feeds)
 
 
 def load_gtfs_zip(spark: SparkSession, zip_path: str) -> dict[str, DataFrame]:
@@ -195,6 +249,9 @@ def services_active_on(
     )
 
 
+_SCHEDULE_INPUTS = ("calendar", "calendar_dates", "trips", "stop_times")
+
+
 def scheduled_departures(
     gtfs: dict[str, DataFrame], yyyymmdd: str
 ) -> DataFrame:
@@ -205,7 +262,33 @@ def scheduled_departures(
     (filtered to active services first, so the broadcast side stays small).
     GTFS >24:00:00 departure clocks land on the next calendar day via exact
     epoch arithmetic (``service_departure_ts``).
+
+    One-slot memo: the slot holds the four input frames themselves
+    (calendar, calendar_dates, trips, stop_times), the day and the session
+    time zone (``scheduled_ts`` depends on it). A call whose frames are the
+    same objects (``is``, never ``id()``: a freed frame's id can be reused)
+    for the same day and time zone returns the same ``.cache()``d frame —
+    the first action fills the cache, later polls read it. Any other call
+    unpersists the previous entry and caches the new schedule in its place.
     """
+    global _schedule_memo
+    inputs = tuple(gtfs[name] for name in _SCHEDULE_INPUTS)
+    key = (yyyymmdd, inputs[0].sparkSession.conf.get("spark.sql.session.timeZone"))
+    with _memo_lock:
+        if _schedule_memo is not None:
+            held, held_key, held_sched = _schedule_memo
+            if held_key == key and all(a is b for a, b in zip(held, inputs)):
+                return held_sched
+            # A stopped context already dropped its cache; unpersisting
+            # through it would raise.
+            if held_sched.sparkSession.sparkContext._jsc is not None:
+                held_sched.unpersist()
+        sched = _schedule(gtfs, yyyymmdd).cache()
+        _schedule_memo = (inputs, key, sched)
+        return sched
+
+
+def _schedule(gtfs: dict[str, DataFrame], yyyymmdd: str) -> DataFrame:
     active = services_active_on(gtfs["calendar"], gtfs["calendar_dates"], yyyymmdd)
     trips_today = gtfs["trips"].join(F.broadcast(active), "service_id")
     service_date = F.to_timestamp(F.lit(yyyymmdd), "yyyyMMdd")

@@ -44,6 +44,32 @@ RAW_PASSAGE_SCHEMA = T.StructType(
 )
 
 
+def _parse(station: str, payload: str | None) -> Iterator[tuple]:
+    """One station's XML payload → tuples in RAW_PASSAGE_SCHEMA order; a
+    missing or unparseable payload yields nothing (the reference logs-and-
+    skips bad station responses). Shared by ``parse_passages`` and the
+    ``transilien_xml`` DataSource."""
+    import xml.etree.ElementTree as ET
+
+    if payload is None:
+        return
+    try:
+        root = ET.fromstring(payload)
+    except ET.ParseError:
+        return
+    for train in root.iter("train"):
+        date_el = train.find("date")
+        yield (
+            station,
+            train.findtext("num"),
+            train.findtext("miss"),
+            train.findtext("term"),
+            None if date_el is None else date_el.text,
+            None if date_el is None else date_el.get("mode"),
+            train.findtext("etat"),
+        )
+
+
 def parse_passages(raw: DataFrame, station_col: str = "station", xml_col: str = "xml") -> DataFrame:
     """Explode raw per-station XML payloads into one row per ``<train>``.
 
@@ -51,49 +77,35 @@ def parse_passages(raw: DataFrame, station_col: str = "station", xml_col: str = 
     that fails to parse yields zero rows (the reference logs-and-skips bad
     station responses the same way).
     """
-    out_schema = RAW_PASSAGE_SCHEMA
+    columns = RAW_PASSAGE_SCHEMA.fieldNames()
 
     def parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import xml.etree.ElementTree as ET
-
         for pdf in batches:
-            rows: list[dict] = []
-            for station, payload in zip(pdf[station_col], pdf[xml_col]):
-                if payload is None:
-                    continue
-                try:
-                    root = ET.fromstring(payload)
-                except ET.ParseError:
-                    continue
-                for train in root.iter("train"):
-                    date_el = train.find("date")
-                    rows.append(
-                        {
-                            "station": station,
-                            "num": train.findtext("num"),
-                            "miss": train.findtext("miss"),
-                            "term": train.findtext("term"),
-                            "date_text": None if date_el is None else date_el.text,
-                            "mode": None if date_el is None else date_el.get("mode"),
-                            "etat": train.findtext("etat"),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+            rows = [
+                row
+                for station, payload in zip(pdf[station_col], pdf[xml_col])
+                for row in _parse(station, payload)
+            ]
+            yield pd.DataFrame(rows, columns=columns)
 
-    return raw.mapInPandas(parse_batch, schema=out_schema)
+    return raw.mapInPandas(parse_batch, schema=RAW_PASSAGE_SCHEMA)
 
 
 def normalize_passages(passages: DataFrame, cutoff_hours: int = 3) -> DataFrame:
     """Type and normalize parsed passages (F1/F2/F7 in one codegen stage).
 
-    - ``expected_ts``: parsed from the API's ``dd/MM/yyyy HH:mm`` text;
+    - ``expected_ts``: parsed from the API's ``dd/MM/yyyy HH:mm`` text,
+      NULL when the text does not parse;
     - ``station7``: 7-digit station id (drop UIC checksum) — the schedule's
       ``stop_id`` join key;
     - ``service_day``: day-of-service with the after-midnight cutoff;
     - ``status``: on_time / delayed / cancelled enum from ``etat``;
     - ``realtime``: mode R vs T (theoretical fallback rows).
     """
-    expected = F.to_timestamp(F.col("date_text"), "dd/MM/yyyy HH:mm")
+    # try_to_timestamp: like ``num`` below, the <date> text is producer-
+    # controlled; text that does not parse must yield a NULL expected_ts
+    # (and service_day) on its row, not abort the cycle under ANSI mode.
+    expected = F.try_to_timestamp(F.col("date_text"), F.lit("dd/MM/yyyy HH:mm"))
     return (
         passages.withColumn("expected_ts", expected)
         .withColumn("station7", drop_checksum_digit(F.col("station")))

@@ -16,6 +16,9 @@
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -42,9 +45,19 @@ def upsert_by_key(
     ``partition_cols``, only the partitions present in the incoming batch
     are read back and rewritten (dynamic partition overwrite) — at 100 TB
     the merge cost is bounded by the touched partitions (e.g. one service
-    day), never the table. Replaying the same batch is a no-op by
-    construction. The existing slice is localCheckpoint-ed so reading and
-    overwriting the same path in one job is safe.
+    day), never the table. A NULL partition value is a partition like any
+    other: the touched semi-join is null-safe, so the rows already in the
+    NULL partition are read back, not dropped by the overwrite. Replaying
+    the same batch is a no-op by construction.
+
+    The incoming batch is evaluated once per call. With ``partition_cols``
+    and a store present it is localCheckpoint-ed first, and both the
+    touched partitions and the union read that materialization — for a
+    DataSource-backed batch that is one fetch and parse, not two; a
+    cycle's batch is small by construction, so the materialization costs
+    less than a second source run. The read-back slice is
+    localCheckpoint-ed too, so reading and overwriting the same path in
+    one job is safe.
     """
     from pyspark.errors import AnalysisException
 
@@ -75,8 +88,14 @@ def upsert_by_key(
         merged = df
     else:
         if partition_cols:
-            touched = df.select(*partition_cols).distinct()
-            existing = existing.join(F.broadcast(touched), partition_cols, "left_semi")
+            df = df.localCheckpoint(eager=True)
+            # One task: the distinct values of a materialized batch's
+            # partition columns need no shuffle job of their own.
+            touched = df.select(*partition_cols).coalesce(1).distinct()
+            same_partition = reduce(
+                and_, [existing[c].eqNullSafe(touched[c]) for c in partition_cols]
+            )
+            existing = existing.join(F.broadcast(touched), same_partition, "left_semi")
         merged = existing.select(*df.columns).localCheckpoint(eager=True).unionByName(df)
     w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
     latest = (
