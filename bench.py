@@ -1,76 +1,64 @@
 #!/usr/bin/env python
-"""Headline benchmark — the driver's per-round performance probe.
+"""Headline benchmark: Spark against DuckDB on the same data.
 
 Phase 1 (sf bench): runs every ``bench=True`` query from the registry at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]``.
+``local[$SPARK_GRAFT_CPUS]``: one untimed warm-up, then the median of 3
+warm reps (2 past SLOW_QUERY_CUTOFF_S).
 
-Phase 2 (compute-bound bench): materializes an amplified copy of the fact
-tables (100× lineitem/orders/events, 200× documents, 500× embeddings, with
-replica jitter so dedup/similarity shapes stay realistic — see
-transilien_api_etl_spark/scale.py) into a cache dir inside the repo,
-then times the SAME queries there twice: once on Spark, once by running each
-query's DuckDB oracle SQL on views over the SAME parquet. At this scale the
-fixed ~0.2-0.5 s Spark scheduling overhead amortizes and the ratio measures
-plan quality, which is what has to survive a 100× scale-up. Disable with
-SPARK_GRAFT_SCALE=0.
+Phase 2 (compute-bound bench, off with SPARK_GRAFT_SCALE=0): materializes
+an amplified copy of the fact tables (100× lineitem/orders/events, 200×
+documents, 500× embeddings, with replica jitter so dedup/similarity shapes
+stay realistic — see transilien_api_etl_spark/scale.py) into a cache dir
+inside the repo, then times each query there on Spark and as its DuckDB
+oracle SQL on views over the SAME parquet. At this scale Spark's fixed
+~0.2-0.5 s scheduling cost amortizes and the ratio spark/duckdb measures
+plan quality.
 
-Prints exactly ONE JSON line, kept under the driver artifact's 2000-char
-stdout tail so the recorded `tail` parses as JSON (rounds 2-8 shipped a
-~9 kB line whose tail started mid-object -> `parsed: null`):
+One protocol grades every ratio:
+
+- Paired rows (PAIRED_ROWS, plus bucketed q3/q5 on the clustered layout,
+  which first take BUCKETED_WARM_REPS warm-ups): untimed warm-ups on both
+  engines, then PAIRED_REPS alternating reps — Spark rep i immediately
+  followed by oracle rep i — graded by the steady-PAIRED_STEADY_K
+  estimator (_steady_median) over the per-rep quotients spark_i/duck_i.
+  A box slowdown lands on both sides of one quotient and cancels.
+- Unpaired rows: Spark reps first, oracles later in one pass in name
+  order. Both engines of a row run the same _median_reps schedule
+  (scale_reps: light rows 5 reps steady-3, heavy rows the median of 3;
+  2 reps past the slow cutoff and a third when those two disagree by
+  >2×), so the estimator's bias cancels in the ratio.
+- Every oracle run is watchdog-capped at min(ORACLE_CAP_S, remaining() −
+  TEARDOWN_MARGIN_S). A cap hit is recorded as a lower bound and flagged
+  in ``skipped``; a row reached with no budget left is listed in
+  ``skipped``; a DuckDB error is flagged and never timed.
+
+Each rep times the query end-to-end including its action (count of the
+materialized result — collect would measure Arrow transfer, the caller's
+cost). Raw reps ride in ``*_reps`` sidecar fields so every graded number
+can be audited against its spread.
+
+Phase-2 order: unpaired light Spark rows → paired light rows → bucketed
+rows → bench_heavy Spark rows → unpaired oracles. The heavy rows
+materialize multi-GB intermediates, so they run after every light row
+whose page cache they could evict.
+
+The kNN oracles read the query vector from a table built untimed per
+connection (QVEC_HOIST), as Spark's plans read it from an untimed memo.
+A box-speed sentinel (three fixed workloads against committed reference
+walls) is measured after phase 1 and reported as ``sentinel_drift``; it
+changes nothing in the protocol.
+
+Prints exactly ONE JSON line, under STDOUT_TAIL_BUDGET chars so a 2000-char
+stdout tail still parses:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+     "elapsed_s": N, "sentinel_drift": N,
      "grade": {"ratio": {...}, "ratio_median": N, "bucketed_ratio": {...},
-               "variants": [...], "skipped": [...]}, "elapsed_s": N}
+               "variants": [...], "skipped": [...]}}
 
 Full detail (raw rep spreads, absolute DuckDB walls, scale-cache row
 counts) is written to BENCH_FULL_last.json next to this script.
-
-Timing discipline: one shared SparkSession (a cluster user amortizes JVM
-startup the same way), one untimed warm-up rep per query per engine (cold
-page-cache + JIT). Sub-cutoff (<5 s warm) rows take 5 timed reps graded
-by the steady-3 estimator (min over 3-consecutive-rep window medians) ON
-BOTH ENGINES — robust to this host's IO-settling heads AND mid-phase
-interference storms, which a plain or tail median each mis-grade, and
-symmetric so the estimator's small downward bias cancels in the ratio
-(see _steady_median). Slower rows keep magnitude-decided medians: 2 reps
-past the 5 s cutoff, DuckDB additionally 1 past the 20 s very-slow tier
-(those ratios are 2-100× blowouts where estimator choice is noise). A
-force_reps light row whose warm AND first timed rep both exceed the
-cutoff falls back to the same 2-rep tier (ADVICE r9: the tiers must
-diverge on neither side). Raw reps ride in ``*_reps`` sidecar fields so
-any graded number can be audited against its spread (VERDICT r5 task 1:
-single-shot grading recorded 2× phantom regressions on sub-second
-queries). Each rep times the query end-to-end including its action
-(count of the materialized result — collect would measure Arrow
-transfer, which is the caller's cost, not the plan's).
-
-PER-REP PAIRED grading (round 10, VERDICT r9 tasks 1+2; extended to the
-whole fast tier after run 5): every row where both engines' scale walls
-are sub-~4 s — see PAIRED_ROWS — is graded as the steady-window estimator
-over PER-REP quotients spark_i/duck_i, with the two engines' reps
-ALTERNATED in time (Spark rep i immediately followed by oracle rep i).
-A host interference storm then lands on BOTH sides of the same quotient
-and cancels, instead of skewing whichever engine's median it happened to
-hit — this same-moment pairing is what absorbed a 2× degraded box in
-round 9 run 10 (bucketed ratios 1.006/1.003) and run 7's mid-run storm
-(2.54 s graded vs 0.84 s steady). Both sides use the identical rep count
-and estimator by construction (ADVICE r9: 5-of-9 over 3-of-5 no longer
-cancels); the bucketed rows pair at 9 reps steady-5, the light rows at
-5 reps steady-3. Query-vector symmetry (ADVICE r9, medium): Spark's kNN
-plans embed the query vector as a task-closure literal populated by an
-UNTIMED memo (io.cached_query_embedding), so the matching DuckDB lookup
-is hoisted out of the timed reps too — q_vec is materialized once,
-untimed, per connection, and the oracle's q-CTE is rewritten to read it
-(QVEC_HOIST; value-identical, tests/test_bench_qvec_hoist.py). The PQ
-twin keeps its inline q_m{m} lookups: they read an already-MATERIALIZED
-200 k-row CTE inside a ~10 s oracle (<2%), below the jitter floor.
-
-Phase-2 internal order (round 8, VERDICT r7 task 1): light Spark rows →
-bucketed phase → bench_heavy Spark rows → DuckDB oracles (light, then
-capped-heavy). The three LLM-ops rows materialize multi-GB intermediates;
-timed before the light rows (round 7's alphabetical order) their page-
-cache eviction inflated unchanged sub-second plans by 1.4–2.3×.
 """
 
 from __future__ import annotations
@@ -108,100 +96,9 @@ RUN_SCALE = os.environ.get("SPARK_GRAFT_SCALE", "1") != "0"
 BUDGET_S = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "1200"))
 _T_START = time.perf_counter()
 
-# Budget RESERVED for the oracle_heavy blowout tier (round 11, run 12):
-# the three 10-100x Spark-favoring oracles run LAST of all (information-
-# at-risk order, see oracle_pass_order), so on a degraded box every
-# earlier phase can drain the budget to under the 20 s entry gate before
-# tier 2 runs — run 12 (elapsed 1185/1200 s, DuckDB oracles 2-3x their
-# r10 walls) skipped all three and the measured-rows-only ratio_median
-# moved 0.77 -> 1.37 from those holes alone, the exact median-reshaping-
-# by-omission failure the caps-not-holes rule exists to kill. While a
-# blowout row is still untimed, every OTHER budget gate sees remaining()
-# minus its reserve (sized from the committed r10/r11 measured walls:
-# rolling_avg ~4 s, as-of 23-50 s, sessionize 47-78 s); the row releases
-# its share just before its own gates run. Earlier phases therefore
-# degrade (shrunken caps, flagged bounds) ~148 s sooner, and the tier
-# with the suite's most decisive ratios always gets its measured single
-# reps. If a blowout overruns its reserve the existing shrinking-cap +
-# flagged-lower-bound machinery still applies. Side effect, deliberate:
-# the scale-phase entry gate (remaining() > 240) now requires ~388 s of
-# true budget — entering the scale phase with less could never have
-# afforded the oracle pass anyway.
-# Round 12 re-sizing: all three blowout rows now run reduced-corpus bench
-# twins (25 of the 100 event replicas — complete per-user histories, see
-# plans/events_q.py), so the measured oracle walls dropped from
-# 4.8/23-56/32-85 s to ~2/8-11/13-17 s. Reserves cover the expected spend
-# at a ~1.5×-slower box including the extra reps the cheaper warm rep now
-# buys (a sub-20 s warm leaves the single-rep blowout tier for the normal
-# 2/5-rep tiers).
-BLOWOUT_RESERVE_S = {
-    "window_rolling_avg": 12.0,
-    "asof_join_purchase_click": 30.0,
-    "events_sessionize": 45.0,
-}
-
-# Committed scale-phase oracle walls (runs 19-20 band, rounded up), used
-# ONLY as the cheapest-first ordering key of the non-blowout oracle pass
-# (oracle_pass_order) — never as a timing, cap, or reserve. A wrong or
-# missing entry costs ordering quality under budget death, nothing else;
-# unknown rows default to DEFAULT_ORACLE_EST_S (light), which is also
-# self-correcting: a misplaced expensive row degrades to a flagged capped
-# lower bound under the caps-not-holes gate instead of holing anything.
-# Round 12: re-measured against the re-sized twins (see each plan module's
-# _BENCH_* constants). The old segment_dedup estimate (1.5) was wrong by
-# an order of magnitude at the full corpus — it sorted the pass's most
-# expensive row FIRST; its reduced twin now genuinely measures ~2.5-3.5 s.
-ORACLE_EST_S = {
-    "pretrain_corpus_report": 2.5,
-    "docs_segment_dedup": 3.0,
-    "docs_minhash_candidates": 6.0,
-    "knn_pq_adc_top10": 10.0,
-    "semdedup_survivors": 25.0,
-}
-DEFAULT_ORACLE_EST_S = 5.0
-
-
-def _init_reserve() -> float:
-    """Reserve only what can be spent: the blowout tier lives in the
-    scale phase's oracle pass, so with SPARK_GRAFT_SCALE=0 holding the
-    reserve would starve the headline phase for a tier that never runs.
-    (The scale-gate else-branch likewise releases it when the budget is
-    too small to enter the phase.)"""
-    return sum(BLOWOUT_RESERVE_S.values()) if RUN_SCALE else 0.0
-
-
-_RESERVED = {"s": _init_reserve()}
-_RELEASED: set[str] = set()
-
-
-def release_reserve(name: str) -> None:
-    """Return `name`'s blowout reserve to the common budget (idempotent)."""
-    if name in BLOWOUT_RESERVE_S and name not in _RELEASED:
-        _RELEASED.add(name)
-        _RESERVED["s"] = max(0.0, _RESERVED["s"] - BLOWOUT_RESERVE_S[name])
-
-
-def release_reserve_all() -> None:
-    for name in BLOWOUT_RESERVE_S:
-        release_reserve(name)
-
-
-def _reset_reserve() -> None:
-    """Test hook: restore the import-time reserve state."""
-    _RELEASED.clear()
-    _RESERVED["s"] = sum(BLOWOUT_RESERVE_S.values())
-    _ORACLE_ORDER_FLIP["flipped"] = False
-
-
-# Set by oracle_pass_order when the reserve-scarce flip fires (blowouts
-# first); read into the sidecar's scale.order so a flipped run
-# self-describes. One flag per process: the flip can only fire in the
-# single end-of-run oracle pass.
-_ORACLE_ORDER_FLIP = {"flipped": False}
-
 
 def remaining() -> float:
-    return BUDGET_S - (time.perf_counter() - _T_START) - _RESERVED["s"]
+    return BUDGET_S - (time.perf_counter() - _T_START)
 
 
 def sf_from_dir(path: str) -> float:
@@ -221,61 +118,50 @@ def sf_from_dir(path: str) -> float:
 # — the medians below are VERDICT r5 task 1's fix for exactly that).
 SLOW_QUERY_CUTOFF_S = 5.0
 
-# DuckDB-oracle-only tier above the slow cutoff: an oracle whose WARM rep
-# exceeds this gets a single timed rep. These rows are the 50–100×
-# Spark-favoring blowouts (as-of 25 s, sessionize 48 s at 60 M rows) where
-# the ratio is decided to within noise by any one warm rep; the ~70 s a
-# third-and-second rep cost there is exactly the headroom VERDICT r7
-# task 2 wants back under the 1 200 s self-kill budget. Spark-side reps
-# keep the stricter 2-rep floor: Spark medians are the GRADED numerators.
-VERY_SLOW_ORACLE_S = 20.0
-
-# Budget kept in reserve for teardown (watchdog interrupt + grade/sidecar/
-# stdout emission — measured in seconds, not tens). Every near-death gate
-# and cap in the oracle rep loop derives from this ONE constant plus the
-# rep floor (ADVICE r10: three slightly different literals — 20/12/15 —
-# made the teardown invariant unauditable):
-#   entry gate     headroom = remaining - TEARDOWN_MARGIN_S;
-#                  headroom < WARM_CAP_FLOOR_S -> degraded single-warm
-#                  mode; headroom < LAST_DITCH_FLOOR_S -> drop (loudly)
-#   warm/rep cap   min(default, remaining - TEARDOWN_MARGIN_S) (floored;
-#                  the raw headroom in degraded mode)
-#   rep-loop stop  remaining - TEARDOWN_MARGIN_S < REP_CAP_FLOOR_S
-# so a rep is admitted only when its floor-capped worst case still ends
-# with the full teardown margin intact.
+# Budget kept for teardown (watchdog interrupt + grade/sidecar/stdout
+# emission — seconds, not tens): no oracle run's cap reaches into it.
 TEARDOWN_MARGIN_S = 12.0
-WARM_CAP_FLOOR_S = 8.0
+# The smallest oracle cap worth starting a run with: a row whose next
+# oracle run would get less is listed in ``skipped`` instead.
 REP_CAP_FLOOR_S = 5.0
-# Below WARM_CAP_FLOOR_S of headroom the oracle pass no longer drops a
-# row whole: one warm rep capped at the residual headroom still records
-# either a measurement or a decisive flagged lower bound (caps-not-holes,
-# the round-10 run-5 lesson applied to the ENTRY gate). Observed round 11
-# at SPARK_GRAFT_CPUS=8 (the driver's PERF low-core shape): the slower
-# Spark/scale phases drained the budget and the old entry gate holed
-# three Spark-favoring oracles (segment_dedup/pretrain/rolling_avg,
-# ratios 0.03-0.46) — the measured-rows-only ratio_median moved
-# 0.61 -> 1.31 from the holes alone. Only a headroom too small to mean
-# anything (< LAST_DITCH_FLOOR_S) still drops the row, loudly.
-LAST_DITCH_FLOOR_S = 2.0
+# The one watchdog cap of an oracle run (see _oracle_cap). A timeout
+# certifies ">= cap", a flagged lower bound on DuckDB's wall.
+ORACLE_CAP_S = 150.0
+
+# Every paired row — PAIRED_ROWS and the two bucketed rows — runs this many
+# alternating Spark/oracle reps, graded steady-PAIRED_STEADY_K over the
+# per-rep quotients. At 7 reps a one-sided slowdown covering 3 consecutive
+# reps still leaves one clean 4-rep window, and 3 coincident fast reps are
+# needed to set a grade, so a single lucky rep never can.
+PAIRED_REPS = 7
+PAIRED_STEADY_K = 4
+# Untimed Spark warm-ups of the bucketed rows: their files are untouched
+# since the previous bench run, and one warm-up left the first timed reps
+# 1.2–2.4× the warmed tail.
+BUCKETED_WARM_REPS = 3
+
+# The _median_reps schedule of an unpaired scale row, shared by its Spark
+# side (time_spark) and its oracle (time_duckdb), so both engines of the
+# ratio get the same rep count, estimator and tie-breaker. Light rows keep
+# the full count after a cold-cache warm-up (force_reps); heavy rows take
+# the plain median.
+LIGHT_REPS = {"n_reps": 5, "force_reps": True, "steady_k": 3}
+HEAVY_REPS = {"n_reps": 3}
 
 
-# The rows graded by the per-rep paired protocol (see module docstring):
-# originally the two bar-graded TPC-H rows (plain layout here; their
-# bucketed twins pair inside the bucketed phase) plus the three light
-# rows whose sub-0.26 s walls hovered at 1.8-1.9× under ratio-of-medians
-# grading on a host with a measured ±30-50% jitter floor (VERDICT r9
-# task 2). Round 10 run 5 extended it to the WHOLE fast tier — every row
-# where both engines' scale walls are sub-~4 s: on the degraded box, an
-# unpaired q1 graded 3.52 because its Spark reps landed in a slow window
-# and its oracle reps ran 40 minutes later in a calm one (runs 4-7 put
-# the same plan at 1.2-2.0), the exact split-phase failure mode pairing
-# exists to kill. Pairing such a row is COST-FREE: the same warm + 5
-# reps run on each engine, just alternated, and the row leaves the
-# end-of-run oracle pass. Rows staying phased: the heavy twins
-# (minhash/pq/semdedup/corpus/segment — 10-50 s oracles would stretch
-# the paired phase and their ratios are 0.07-0.5 blowouts), and the
-# oracle_heavy blowouts + rolling_avg (25-100× Spark-favoring; the
-# split-phase artifact cannot move a 0.02 ratio anywhere near a bar).
+def scale_reps(spec) -> dict:
+    return HEAVY_REPS if spec.bench_heavy else LIGHT_REPS
+
+
+# The light rows graded by the paired protocol: every row where both
+# engines' scale walls are sub-~4 s. Unpaired, a row's Spark reps and its
+# oracle reps run tens of minutes apart, and a slow window on one side
+# alone moved the same q1 plan between 1.2 and 3.5. Pairing costs nothing
+# extra: the same reps run on each engine, just alternated. Rows staying
+# unpaired: the heavy twins (minhash/pq/semdedup/corpus/segment — 10-50 s
+# oracles would stretch the paired phase, and their ratios are 0.07-0.5),
+# and the 25-100× Spark-favoring events rows (as-of, sessionize,
+# rolling_avg), whose ratio a split-phase artifact cannot move near a bar.
 PAIRED_ROWS = (
     "q3_shipping_priority",
     "q5_local_supplier",
@@ -291,31 +177,6 @@ PAIRED_ROWS = (
     "range_agg_prefix_sum",
     "range_join_banded_global",
 )
-
-# Paired rows that get EXTRA timed reps on a calm box (round 12, final
-# session). These four are the suite's storm-exposed near-bar rows: their
-# calm-box quotients sit at 1.0-1.7 (so a single bad grade crosses the 2×
-# bar) and their Spark side is Arrow-boundary/aggregation work that this
-# round's boxes inflated 2-5× in one-sided multi-minute storms while
-# DuckDB stayed flat. At 5 reps, a 3-rep storm window contaminates EVERY
-# steady-3 window (measured: word_freq quotient reps [1.82, 2.13, 4.14,
-# 6.43, 1.51] graded 2.134 — the best window still held one storm rep);
-# at 7 reps a trailing calm pair restores a clean window. Symmetry is
-# preserved by construction: the extra reps run inside time_paired's
-# alternating loop, so BOTH engines of the quotient get the identical
-# count and estimator (the code-review-r9 rule); cost is ~2×(spark+duck)
-# per row ≈ 40-60 s against the ~380 s the round-12 budget work freed,
-# and the drift gate drops the extras to 0 on a degraded box exactly
-# like the 5→3 fast-tier drop.
-STORM_EXPOSED_ROWS = frozenset(
-    {
-        "docs_word_freq_top20",
-        "q1_pricing_summary",
-        "knn_sq8_top10",
-        "knn_rerank_top10",
-    }
-)
-EXTRA_STORM_REPS = 2
 
 # One-line pointer from the grade block to the measured plain-q3/q5
 # scaling record (VERDICT r9 task 3 + r10 task 1; BASELINE.md "Round-11:
@@ -502,24 +363,12 @@ def bucketed_confs(spark, data_dir: str):
         )
 
 
-# ---------------------------------------------------------------------------
-# Box-speed sentinel + drift-scaled rep counts (round 12, VERDICT r11
-# tasks 1+7). The r11 driver box ran ~1.3× slower than the builder's and
-# the protocol — whose rep counts were sized on the builder's box — blew
-# the 1200 s budget inside the oracle pass, holing 6 of 21 graded ratios.
-# Three tiny fixed workloads (JVM compute, the Python/Arrow boundary, and
-# DuckDB compute — none touching the bench datasets) are timed UNTIMED-
-# phase-side right after the headline phase; their medians against the
-# committed quiet-box references below give a box-drift factor that (a)
-# rides in the sidecar every run so PERF can normalize round-over-round
-# box state instead of re-litigating it (the r11 "14 regressions" were a
-# whole-box shift), and (b) when it exceeds DRIFT_GATE, scales the
-# fast-tier rep counts 5→3 and the bucketed pairs 9→5 SYMMETRICALLY on
-# both engines (identical counts and estimators on every quotient, so the
-# grade stays comparable; the sidecar flags the degraded counts and
-# _steady_median's len<=k fallback grades 3 reps as their plain median on
-# both sides alike). A calm box is byte-identical to the round-11
-# protocol.
+# Box-speed sentinel: three tiny fixed workloads (JVM compute, the
+# Python/Arrow boundary, DuckDB compute — none touching the bench
+# datasets), timed after the headline phase. The median of their walls
+# against the committed quiet-box references below is the box-drift
+# factor, reported as ``sentinel_drift`` so runs on differently loaded
+# boxes can be compared. It changes no rep count.
 SENTINEL_REF_S = {
     # committed FLOORS over repeated sampling on this round's builder box
     # (scripts/r12_sentinel_ref.py; the box ran 1.2-2x degraded for much
@@ -530,7 +379,6 @@ SENTINEL_REF_S = {
     "spark_arrow": 0.72,
     "duckdb": 0.46,
 }
-DRIFT_GATE = 1.35
 
 
 def measure_sentinel(spark) -> dict:
@@ -580,41 +428,6 @@ def measure_sentinel(spark) -> dict:
     return out
 
 
-# Set once in main() from the sentinel; read by every rep-count helper.
-_DRIFT = {"v": 1.0}
-
-
-def fast_tier_reps() -> int:
-    """5 on a calm box; 3 when the sentinel reads the box >= DRIFT_GATE
-    slower than the committed reference (both engines alike)."""
-    return 3 if _DRIFT["v"] >= DRIFT_GATE else 5
-
-
-def storm_extra_reps() -> int:
-    """Extra paired reps for STORM_EXPOSED_ROWS: +2 on a calm box, 0 when
-    the drift gate has already dropped the fast tier to 3 (a degraded box
-    needs the budget more than the robustness)."""
-    return 0 if _DRIFT["v"] >= DRIFT_GATE else EXTRA_STORM_REPS
-
-
-def bucketed_reps() -> tuple[int, int]:
-    """(n_reps, steady_k) for the bucketed paired phase."""
-    return (5, 3) if _DRIFT["v"] >= DRIFT_GATE else (9, 5)
-
-
-def _oracle_rep_count(warm_s: float) -> int:
-    # Fast tier takes 5 reps graded steady-3 — the SAME rep count and
-    # estimator as the Spark scale light rows (code-review round 9: a
-    # min-of-window-medians numerator over a plain-median denominator
-    # would bias every graded ratio in Spark's favor even under pure
-    # symmetric noise; the round-12 drift gate lowers BOTH to 3 on a slow
-    # box). Slow tiers keep magnitude-decided medians: their ratios are
-    # 2-100× blowouts where estimator choice is noise.
-    if warm_s > VERY_SLOW_ORACLE_S:
-        return 1
-    return 2 if warm_s > SLOW_QUERY_CUTOFF_S else fast_tier_reps()
-
-
 # The driver's bench artifact keeps only the LAST 2000 chars of stdout and
 # records `parsed: null` whenever that tail is not itself valid JSON —
 # which it never was in rounds 2-8, because the full result line runs
@@ -639,7 +452,8 @@ def build_compact_line(result: dict) -> str:
     The graded ratios are the artifact's reason to exist, so they are
     sacrificed LAST, after every annotation (round 10: the old order
     dropped them while a long skipped list rode along untrimmed).
-    Each rung is strictly smaller, so the final resort always fits."""
+    Each rung is strictly smaller, so the final resort always fits.
+    ``sentinel_drift`` (one float) is on no rung: every line carries it."""
     compact = {
         "metric": result["metric"],
         "value": result["value"],
@@ -648,6 +462,7 @@ def build_compact_line(result: dict) -> str:
         "sf": result["sf"],
         "queries": {q: round(v, 3) for q, v in result["queries"].items()},
         "elapsed_s": result.get("elapsed_s"),
+        "sentinel_drift": result["sentinel"]["drift"],
         "detail": "BENCH_FULL_last.json",
     }
     grade = result.get("grade")
@@ -722,10 +537,10 @@ def _steady_median(raw: list[float], k: int) -> float:
     rep sequence it lands. The min is downward-biased by construction,
     but wall-clock noise is one-sided (interference only ADDS time;
     a sub-steady rep means the work genuinely completed that fast), so
-    the exposure is two-coincident-lucky-reps at k=3 — the 9-rep
-    bucketed rows use k=5 (3 coincident needed) to bound it, and BOTH
-    engines are graded with the same estimator on the same rep counts
-    (code-review round 9), so residual bias cancels in the ratio.
+    the exposure is two-coincident-lucky-reps at k=3 — the paired rows
+    use k=PAIRED_STEADY_K=4 (3 coincident needed) to bound it, and BOTH
+    engines are graded with the same estimator on the same rep counts,
+    so residual bias cancels in the ratio.
     Falls back to the plain median when fewer than k+1 reps exist
     (budget truncation)."""
     if len(raw) <= k:
@@ -754,20 +569,19 @@ def _median_reps(
     min-of-window-medians makes no ordering assumption. All reps still
     ride in the sidecar, so whatever the estimator skipped is auditable.
 
-    force_reps exists for the bucketed phase: its queries are ~1 s warm
+    force_reps exists for the light scale rows: they are sub-5 s warm,
     but the WARM-UP rep can exceed the slow cutoff when other jobs have
-    evicted the bucketed files from the page cache (observed round 7:
-    warm 5+ s → only 2 timed reps → the suite's most bar-sensitive
-    median decided by 2 samples). The cutoff protects against
-    multi-second QUERIES, not cold caches — a cold cache shows as a slow
-    WARM-UP followed by fast timed reps. When the warm rep AND the first
-    timed rep BOTH exceed the cutoff the row is genuinely slow, not
-    cold, and it falls back to the same 2-rep plain-median tier its
-    DuckDB denominator uses (ADVICE r9: force_reps previously pinned
-    such a row to 5 reps steady-3 over a 2-rep oracle mean — a tier
-    where the estimators diverge). The >2× tie-breaker below still
-    applies to the fallback, on both sides alike: a 2-rep "median" is a
-    mean, and one storm rep otherwise drags the grade arbitrarily far."""
+    evicted their files from the page cache (observed round 7: warm 5+ s
+    → only 2 timed reps → a bar-sensitive median decided by 2 samples).
+    The cutoff protects against multi-second QUERIES, not cold caches —
+    a cold cache shows as a slow WARM-UP followed by fast timed reps.
+    When the warm rep AND the first timed rep BOTH exceed the cutoff the
+    row is genuinely slow, not cold, and it falls back to the 2-rep
+    plain-median tier. Both engines of an unpaired row run this same
+    function with the same arguments (scale_reps), so their tiers cannot
+    diverge. The >2× tie-breaker below applies to the fallback too: a
+    2-rep "median" is a mean, and one storm rep otherwise drags the
+    grade arbitrarily far."""
     if not force_reps:
         n_reps = 2 if warm_s > SLOW_QUERY_CUTOFF_S else n_reps
     raw = []
@@ -784,7 +598,7 @@ def _median_reps(
             and raw[0] > SLOW_QUERY_CUTOFF_S
         ):
             # Genuinely slow (warm + first timed rep both over the
-            # cutoff): match the oracle side's 2-rep plain-median tier.
+            # cutoff): the 2-rep plain-median tier.
             n_reps = 2
             steady_k = None
     # 2-rep tie-breaker (round 9): a 2-rep "median" is a mean, so one
@@ -809,7 +623,7 @@ def _median_reps(
 
 def time_spark(
     specs, spark, data_dir, skipped=None, skip_label="spark", n_reps=3,
-    force_reps=False, bench_variant=False, n_warm=1, steady_k=None,
+    force_reps=False, bench_variant=False, steady_k=None,
 ) -> tuple[dict[str, float], dict[str, list[float]]]:
     timings: dict[str, float] = {}
     raw_reps: dict[str, list[float]] = {}
@@ -820,16 +634,8 @@ def time_spark(
         # Scale phase only: a spec may carry a reduced-corpus bench twin
         # (both engines filter identically — see QuerySpec.bench_fn).
         fn = (specs[name].bench_fn or specs[name].fn) if bench_variant else specs[name].fn
-        # Untimed warm-up rep(s): pay the cold page-cache read and JIT so
-        # the timed reps measure the plan. The bucketed phase asks for 3 —
-        # its files are untouched since the PREVIOUS bench run, one
-        # warm-up twice left the first timed reps 1.2–2.4× the warmed
-        # tail (r7 graded run; r8 validation rep spread [1.17, 2.35, 0.97,
-        # 0.89, 0.98]), and a dedicated settle probe still read
-        # [1.60, 1.32, 0.96, 0.93, 0.90] after two — the suite's most
-        # bar-sensitive median deserves the extra ~2 s.
-        for _ in range(n_warm - 1):
-            fn(spark, data_dir).count()
+        # Untimed warm-up rep: pays the cold page-cache read and JIT so
+        # the timed reps measure the plan.
         t0 = time.perf_counter()
         n = fn(spark, data_dir).count()
         warm_s = time.perf_counter() - t0
@@ -845,104 +651,54 @@ def time_spark(
     return timings, raw_reps
 
 
-def oracle_pass_order(specs, bench_variant: bool) -> list[str]:
-    """Oracle timing order by information-at-risk. Round 9 put twin-backed
-    oracles before blowouts (one slow-box run spent 50 s on the
-    alphabetically-FIRST as-of blowout and then skipped 14 oracles
-    including all three twins). Round 11 (the 8-core PERF shape) merged
-    the twin/plain tiers into ONE cheapest-first tier: the twin-first
-    split sent the 12-55 s twin oracles (minhash/semdedup/pq) ahead of
-    the 1.5-5 s plain rows, so a budget death between the tiers holed
-    segment_dedup/pretrain — rows that needed seconds — while every
-    surviving expensive row would have degraded to a flagged capped
-    lower bound anyway under the caps-not-holes entry gate. Cheapest
-    first maximizes the NUMBER of fully measured rows; what dies at the
-    tail is always the row whose shrunken-cap lower bound loses the
-    least. ``oracle_heavy`` blowouts (as-of 23-56 s, sessionize
-    42-85 s — 25-100x Spark-favoring) stay LAST, cheapest reserve first
-    (round 11 run 12), funded by BLOWOUT_RESERVE_S; their capped lower
-    bound is decisive (ratio < 0.1) by construction.
+def _oracle_cap() -> float:
+    """The one watchdog cap of every oracle run, paired or not."""
+    return min(ORACLE_CAP_S, remaining() - TEARDOWN_MARGIN_S)
 
-    ``bench_variant`` no longer affects the order (the estimate map
-    covers twin and plain oracles alike); the parameter stays for call
-    symmetry with the timing functions.
 
-    Reserve-scarce flip (round 11, the session-4 8-core run): when the
-    pass STARTS with the reserve-withheld headroom already inside the
-    degraded-mode gate (remaining() - TEARDOWN_MARGIN_S <
-    WARM_CAP_FLOOR_S), every non-blowout row is doomed to a last-ditch
-    cap or a loud drop while ~148 s of reserve sits waiting for the
-    tier that runs last — that run dropped pretrain (~10 s) and
-    pq_adc (~17 s) while the blowouts later underspent their reserve
-    by ~43 s. In that state the blowouts run FIRST, LARGEST reserve
-    first: each row still releases only its own share just before its
-    own gates (self-protection among blowouts is unchanged), but a
-    large release early unlocks the most true budget soonest, and the
-    tier's underspend then funds the cheapest-first mid tier instead
-    of evaporating at teardown. A pass that starts with >= 20 s of
-    visible headroom is byte-identical to the unflipped order, so
-    every normally-budgeted run is unaffected. Bias audit for the
-    flipped corner: the blowouts' single warm rep now runs before the
-    mid tier warms the DuckDB buffer cache (the OS page cache is hot
-    from the Spark phase either way) — the same 1.04-1.7x worst-case
-    cold inflation already bounded in time_duckdb's blowout-tier
-    audit, against rows graded at 25-100x margins, direction visible
-    in raw_reps. The flip is recorded in the sidecar's scale.order."""
-
-    def key(name: str) -> tuple[int, float, str]:
-        if specs[name].oracle_heavy:
-            return (1, BLOWOUT_RESERVE_S.get(name, 0.0), name)
-        return (0, ORACLE_EST_S.get(name, DEFAULT_ORACLE_EST_S), name)
-
-    held = [
-        n
-        for n in specs
-        if specs[n].oracle_heavy
-        and n in BLOWOUT_RESERVE_S
-        and n not in _RELEASED
-    ]
-    if held and remaining() - TEARDOWN_MARGIN_S < WARM_CAP_FLOOR_S:
-        _ORACLE_ORDER_FLIP["flipped"] = True
-
-        def flipped_key(name: str) -> tuple[int, float, str]:
-            if specs[name].oracle_heavy:
-                return (0, -BLOWOUT_RESERVE_S.get(name, 0.0), name)
-            return (1, ORACLE_EST_S.get(name, DEFAULT_ORACLE_EST_S), name)
-
-        return sorted(specs, key=flipped_key)
-    return sorted(specs, key=key)
+class _NoBudget(Exception):
+    """An oracle run was reached with less than REP_CAP_FLOOR_S of cap."""
 
 
 def time_duckdb(
     specs, data_dir, skipped=None, bench_variant=False, con=None
 ) -> tuple[dict[str, float], dict[str, list[float]]]:
-    """Run each query's oracle SQL on DuckDB views over the same parquet.
+    """Run each query's oracle SQL on DuckDB views over the same parquet,
+    in one pass in name order.
 
-    Same discipline as the Spark side: one untimed warm rep, then 5
-    timed reps graded steady-3 for the fast tier (the identical
-    estimator+rep-count the Spark scale light rows use — see
-    _oracle_rep_count for why symmetry is mandatory), 2 reps past the
-    slow cutoff (with the same >2× third-rep tie-breaker the Spark side
-    applies — a 2-rep "median" is a mean on either engine). The
-    ``oracle_heavy`` blowout tier past VERY_SLOW_ORACLE_S records its
-    measured warm run as the single rep (round 10: the 25–48 s
-    sessionize/as-of oracles are 25–100× Spark blowouts where a
-    duplicate run buys nothing, and its ~80 s starved the tier out of
-    the budget on a slow box — see the inline bias audit). Each run is
-    watchdog-guarded (``con.interrupt()``): one pathological
-    single-process oracle (the as-of/sessionize shapes take minutes at
-    60 M rows) must not eat the whole budget of the remaining queries.
+    Same discipline as the Spark side: one untimed warm run, then the
+    row's own scale_reps schedule through _median_reps — the rep count,
+    estimator, slow tier and tie-breaker its Spark numerator used. Every
+    run is watchdog-guarded (``con.interrupt()``) at _oracle_cap(), so
+    one pathological single-process oracle cannot eat the budget of the
+    rows after it. A cap hit records a lower bound, flagged
+    ``duckdb-timeout-lower-bound``; a row whose next run would get less
+    than REP_CAP_FLOOR_S of cap is listed as ``duckdb:<name>``; a DuckDB
+    error (a binder error from a missing table, say) is flagged
+    ``duckdb-error`` and records no timing — a cap-valued entry would
+    grade a broken setup as a decisive Spark win.
     """
+    import duckdb
+
     own_con = con is None
     if own_con:
         con = _duck_connect(data_dir)
+    skipped = [] if skipped is None else skipped
     timings: dict[str, float] = {}
     raw_reps: dict[str, list[float]] = {}
 
-    def guarded_run(sql: str, cap: float) -> float | None:
-        return _guarded_run(con, sql, cap)
+    def guarded(sql: str, caps_hit: list[float]) -> float | None:
+        cap = _oracle_cap()
+        if cap < REP_CAP_FLOOR_S:
+            raise _NoBudget
+        out = _guarded_run(con, sql, cap)
+        if isinstance(out, Exception):
+            raise out
+        if out is None:
+            caps_hit.append(cap)
+        return out
 
-    for name in oracle_pass_order(specs, bench_variant):
+    for name in sorted(specs):
         sql = (
             (specs[name].bench_oracle or specs[name].oracle)
             if bench_variant
@@ -951,179 +707,29 @@ def time_duckdb(
         if not sql:
             continue
         sql = _hoist_qvec(name, sql)
-        # A blowout row spends its own reserve: release it so THIS row's
-        # gates and caps see the true budget (see BLOWOUT_RESERVE_S).
-        release_reserve(name)
-        # Near-death behavior (round 10 run 5): the old hard skip at
-        # remaining<=30 silently DROPPED whole rows on a slow box — that
-        # run lost the three biggest Spark-favoring blowouts
-        # (asof 0.008 / sessionize 0.029 / rolling_avg 0.02) and the
-        # measured-rows-only ratio_median jumped 0.8 -> 1.38 from the
-        # holes alone. A budget-shrunk cap instead records a FLAGGED
-        # lower bound (ratio <= spark/cap, decisive on every blowout),
-        # so budget death degrades the artifact gracefully rather than
-        # reshaping its headline by omission. Margins all derive from
-        # TEARDOWN_MARGIN_S (see its comment block).
-        #
-        # Round 11 (the 8-core PERF shape) extended the same treatment
-        # into the last WARM_CAP_FLOOR_S of headroom: instead of holing
-        # the row, run ONE warm rep capped at the residual headroom —
-        # a completion is graded as a flagged cold rep (see the `not
-        # raw` branch), an interrupt as the flagged lower bound. Only
-        # below LAST_DITCH_FLOOR_S does the row drop, still loudly.
-        headroom = remaining() - TEARDOWN_MARGIN_S
-        if skipped is not None and headroom < WARM_CAP_FLOOR_S:
-            if headroom < LAST_DITCH_FLOOR_S:
-                skipped.append(f"duckdb:{name}")
-                continue
-            per_query_cap = headroom
-        else:
-            default_cap = REGISTRY[name].oracle_cap_s or 150.0
-            per_query_cap = max(
-                WARM_CAP_FLOOR_S, min(default_cap, remaining() - TEARDOWN_MARGIN_S)
-            )
-        warm_s = guarded_run(sql, per_query_cap)  # warm rep, untimed
-        if isinstance(warm_s, Exception):
-            # A binder/config error is NOT a timeout: no timing is
-            # recorded at all (a cap-valued entry would grade a broken
-            # setup as a decisive Spark win — code-review round 10).
-            if skipped is not None:
-                skipped.append(f"duckdb-error:{name}:{str(warm_s)[:80]}")
-            print(f"# duckdb {name}: ERROR {warm_s}", file=sys.stderr)
-            continue
-        if warm_s is None:
-            # Record the cap as a LOWER BOUND on DuckDB's time (flagged
-            # in `skipped`): the Spark/DuckDB ratio derived from it is
-            # then a conservative upper bound instead of a silent hole.
-            if skipped is not None:
-                skipped.append(f"duckdb-timeout-lower-bound:{name}")
-            timings[name] = round(per_query_cap, 4)
-            raw_reps[name] = []  # no measured reps back this number
-            print(f"# duckdb {name}: >={per_query_cap:.0f}s (cap)", file=sys.stderr)
-            continue
-        if specs[name].oracle_heavy and warm_s > VERY_SLOW_ORACLE_S:
-            # Blowout tier (round 10 run 5): the warm run IS the single
-            # rep — a duplicate 25-50 s run bought nothing on a tier the
-            # Spark side wins 25-100x, and its ~80 s was exactly what
-            # starved the tier out of the budget on a slow box. Bias
-            # audit: by the time tier 2 runs, the pass-ordered plain
-            # tier has already scanned the same fact tables on this
-            # shared connection and the OS page cache is hot from the
-            # Spark phase, so "cold" here is DuckDB-buffer-cold at
-            # worst — observed first-vs-second-rep inflation 1.04-1.7x
-            # on genuinely cold twin tables, bounded well below the
-            # 25-100x margins this tier is graded at, and the direction
-            # (inflated denominator) is visible in the sidecar reps.
-            # DELIBERATELY keyed on oracle_heavy, NOT on the warm-time
-            # tier alone (code-review round 10, finding rejected): the
-            # 40-50 s minhash twin oracle also clears VERY_SLOW, but
-            # that row grades at 0.5 where a 1.7x cold-inflated
-            # denominator would move the ratio 0.5 -> 0.3 — a material
-            # Spark-FAVORING skew on a graded deliverable. Twin-backed
-            # rows keep the warm-strip discipline; only rows whose
-            # 25-100x margins make the bias direction irrelevant may
-            # pay once.
-            timings[name] = round(warm_s, 4)
-            raw_reps[name] = [round(warm_s, 4)]
-            print(
-                f"# duckdb {name}: {warm_s:.3f}s single blowout-tier rep",
-                file=sys.stderr,
-            )
-            continue
-        raw = []
-        hit_cap = False
-        flagged = False
-        for _ in range(_oracle_rep_count(warm_s)):
-            # Re-derive the cap each rep: the budget keeps draining while
-            # reps run, and a cap computed once before the warm rep could
-            # let 3 near-cap reps overshoot BUDGET_S by minutes — an
-            # external harness kill then loses the whole JSON line.
-            # Stop (rather than shrink to the floor) once another
-            # floor-capped rep could not leave the teardown margin:
-            # with the lowered entry gate, two floor reps after a 7.9 s
-            # warm could otherwise drain to ~2 s and an external kill
-            # would lose the artifact (code-review round 10). Whatever
-            # reps exist are graded.
-            if remaining() - TEARDOWN_MARGIN_S < REP_CAP_FLOOR_S:
-                break
-            cap = max(
-                REP_CAP_FLOOR_S,
-                min(per_query_cap, remaining() - TEARDOWN_MARGIN_S),
-            )
-            elapsed = guarded_run(sql, cap)
-            if isinstance(elapsed, Exception):
-                if skipped is not None:
-                    skipped.append(f"duckdb-error:{name}:{str(elapsed)[:80]}")
-                    flagged = True
-                break  # grade whatever measured reps exist, if any
-            if elapsed is None:
-                hit_cap = True
-                raw.append(round(cap, 4))
+        caps_hit: list[float] = []
+        try:
+            warm_s = guarded(sql, caps_hit)  # warm run, untimed
+            if warm_s is None:
+                timings[name] = round(caps_hit[0], 4)
+                raw_reps[name] = []  # no measured reps back this number
             else:
-                raw.append(round(elapsed, 4))
-        if hit_cap and skipped is not None:
-            # A mid-rep interrupt is a lower bound too, not a measurement.
+                timings[name], raw_reps[name] = _median_reps(
+                    lambda: guarded(sql, caps_hit), warm_s,
+                    **scale_reps(specs[name]),
+                )
+        except _NoBudget:
+            skipped.append(f"duckdb:{name}")
+            continue
+        except duckdb.Error as exc:
+            skipped.append(f"duckdb-error:{name}:{str(exc)[:80]}")
+            print(f"# duckdb {name}: ERROR {exc}", file=sys.stderr)
+            continue
+        if caps_hit:
             skipped.append(f"duckdb-timeout-lower-bound:{name}")
-        if not raw:
-            # Budget-break before any timed rep. The warm run DID
-            # complete (errors/interrupts were handled above), so grade
-            # it as a single flagged cold rep rather than holing the
-            # row: the blowout tier already pays exactly this rep under
-            # the same bias audit (cold-vs-warm inflation 1.04-1.7x,
-            # direction inflates the DuckDB denominator, i.e. favors
-            # Spark — which is why the flag names it cold and the
-            # 1-long raw_reps exposes it), and a flagged cold quotient
-            # beats the alternative, which is reshaping ratio_median by
-            # omission (0.61 -> 1.31 from three holes, round-11 8-core
-            # run). Warm-strip discipline holds everywhere the budget
-            # affords a timed rep.
-            if flagged:
-                # A rep-loop ERROR is not a budget break: keep the
-                # round-10 rule (no timing for a broken setup), the
-                # duckdb-error flag is already on `skipped`.
-                continue
-            if skipped is not None:
-                skipped.append(f"duckdb-near-death-cold-rep:{name}")
-            timings[name] = round(warm_s, 4)
-            raw_reps[name] = [round(warm_s, 4)]
-            print(
-                f"# duckdb {name}: {warm_s:.3f}s near-death cold rep",
-                file=sys.stderr,
-            )
-            continue
-        # 2-rep tie-breaker, same rule as the Spark side (ADVICE r9: the
-        # tiers must not diverge): two reps disagreeing by >2× get a
-        # third if the budget can absorb it at the cheaper rep's cost.
-        if (
-            not hit_cap
-            and len(raw) == 2
-            and max(raw) > 2 * min(raw)
-            and remaining() > min(raw) + 30
-        ):
-            cap = max(
-                REP_CAP_FLOOR_S,
-                min(per_query_cap, remaining() - TEARDOWN_MARGIN_S),
-            )
-            elapsed = guarded_run(sql, cap)
-            # The tie-break rep obeys the same audit contract as any
-            # other rep (code-review round 10): a cap hit rides as a
-            # flagged lower bound, an error is flagged and NOT timed.
-            if isinstance(elapsed, Exception):
-                if skipped is not None:
-                    skipped.append(f"duckdb-error:{name}:{str(elapsed)[:80]}")
-            elif elapsed is None:
-                raw.append(round(cap, 4))
-                if skipped is not None:
-                    skipped.append(f"duckdb-timeout-lower-bound:{name}")
-            else:
-                raw.append(round(elapsed, 4))
-        # 5-rep fast tier gets the same steady-3 grade as its Spark
-        # numerator; shorter tiers reduce to the plain median inside
-        # _steady_median's len<=k fallback.
-        timings[name] = round(_steady_median(raw, 3), 4)
-        raw_reps[name] = raw
         print(
-            f"# duckdb {name}: {timings[name]:.3f}s median of {raw}",
+            f"# duckdb {name}: {timings[name]:.3f}s of {raw_reps[name]}"
+            f"{' (cap hit)' if caps_hit else ''}",
             file=sys.stderr,
         )
     if own_con:
@@ -1138,12 +744,12 @@ def time_paired(
     con,
     skipped=None,
     skip_label="paired",
-    n_reps=5,
-    steady_k=3,
+    n_reps=PAIRED_REPS,
+    steady_k=PAIRED_STEADY_K,
     n_warm=1,
     bench_variant=True,
 ):
-    """Per-rep PAIRED Spark/DuckDB measurement (VERDICT r9 tasks 1+2).
+    """Per-rep PAIRED Spark/DuckDB measurement.
 
     For each query: untimed warm rep(s) on both engines, then ``n_reps``
     ALTERNATING timed reps — Spark rep i immediately followed by the
@@ -1155,17 +761,17 @@ def time_paired(
     degraded box inflates spark_i and duck_i of the same index together,
     so the quotient barely moves, whereas a ratio-of-medians lets a
     storm that hits only one engine's median skew the grade by 2-3×
-    (round-9 record: run 7's tail storm graded bucketed q3 at 2.54
-    against a reproduced 0.84 s steady wall; run 10's same-moment
-    pairing absorbed a 2× degraded box at ratios 1.006/1.003).
-    Symmetric by construction: identical rep counts, identical
-    estimator, same moments in time.
+    (run 7's tail storm graded bucketed q3 at 2.54 against a reproduced
+    0.84 s steady wall; same-moment pairing absorbed a 2× degraded box
+    at ratios 1.006/1.003). Symmetric by construction: identical rep
+    counts, identical estimator, same moments in time.
 
     Returns (spark_t, spark_reps, duck_t, duck_reps, ratio_t, ratio_reps).
-    Rows whose oracle rep hits the watchdog cap are flagged
-    ``duckdb-timeout-lower-bound`` exactly like time_duckdb; these rows
-    are all sub-second on both engines, so the cap only fires on a
-    pathological box state and the flag keeps it auditable."""
+    Oracle runs take _oracle_cap(); a rep that hits it is flagged
+    ``duckdb-timeout-lower-bound`` exactly like time_duckdb. A row reached
+    with no budget left is listed as ``<skip_label>:<name>``; reps the
+    budget cut short leave ``<skip_label>-truncated:<name>``."""
+    skipped = [] if skipped is None else skipped
     spark_t: dict[str, float] = {}
     spark_reps: dict[str, list[float]] = {}
     duck_t: dict[str, float] = {}
@@ -1178,68 +784,40 @@ def time_paired(
         sql = (spec.bench_oracle or spec.oracle) if bench_variant else spec.oracle
         assert sql, f"{name}: paired grading needs an oracle"
         sql = _hoist_qvec(name, sql)
-        # Near-death behavior (ADVICE r10, mirroring time_duckdb's
-        # caps-not-holes rule): below the comfortable entry gate the row
-        # degrades to ONE cold/cold pair — no warm-ups, one Spark rep
-        # immediately followed by one capped oracle rep — and is FLAGGED,
-        # instead of silently vanishing from the ratio_median the way the
-        # old hard skip did. The cold pair is a legitimate (if noisier)
-        # quotient: pairing absorbs the dying box's state on both sides
-        # of the division. Only when even one pair cannot leave the
-        # teardown margin (remaining <= 15) is the row dropped, loudly.
-        degraded = False
-        if skipped is not None and remaining() <= 30:
-            if remaining() <= 15:
-                skipped.append(f"{skip_label}:{name}")
-                continue
-            degraded = True
-            skipped.append(f"paired-degraded-cold-pair:{name}")
-        default_cap = spec.oracle_cap_s or 150.0
+        if remaining() <= 30:
+            skipped.append(f"{skip_label}:{name}")
+            continue
         n = None  # row count from the last warm-up, for the audit print
-        warm_d = None
-        if not degraded:
-            for _ in range(n_warm):  # untimed Spark warm-ups (cold cache + JIT)
-                n = fn(spark, data_dir).count()
-            warm_d = _guarded_run(
-                con,
-                sql,
-                max(10.0, min(default_cap, remaining() - TEARDOWN_MARGIN_S)),
-            )
+        for _ in range(n_warm):  # untimed Spark warm-ups (cold cache + JIT)
+            n = fn(spark, data_dir).count()
+        warm_d = _guarded_run(con, sql, _oracle_cap())
         if isinstance(warm_d, Exception):
             # A binder/config error is NOT a timeout: the row cannot be
-            # paired at all — flag loudly, record nothing (code-review
-            # round 10; same contract as time_duckdb).
-            if skipped is not None:
-                skipped.append(f"duckdb-error:{name}:{str(warm_d)[:80]}")
+            # paired at all — flag loudly, record nothing (same contract
+            # as time_duckdb).
+            skipped.append(f"duckdb-error:{name}:{str(warm_d)[:80]}")
             print(f"# {skip_label} {name}: oracle ERROR {warm_d}", file=sys.stderr)
             continue
         s_raw: list[float] = []
         d_raw: list[float] = []
         hit_cap = False
-        # Storm-exposed near-bar rows take extra alternating reps on a
-        # calm box (see STORM_EXPOSED_ROWS) — the count applies to BOTH
-        # engines of the quotient alike, inside this one loop.
-        row_reps = n_reps + (
-            storm_extra_reps() if name in STORM_EXPOSED_ROWS else 0
-        )
-        for _ in range(1 if degraded else row_reps):
+        for _ in range(n_reps):
             last_pair = (s_raw[-1] + d_raw[-1]) if s_raw else 0.0
             if s_raw and remaining() < last_pair + 30:
-                if skipped is not None:
-                    skipped.append(f"{skip_label}-truncated:{name}")
+                skipped.append(f"{skip_label}-truncated:{name}")
                 break
             t0 = time.perf_counter()
             fn(spark, data_dir).count()
             s_spent = round(time.perf_counter() - t0, 4)
-            cap = max(
-                REP_CAP_FLOOR_S,
-                min(default_cap, remaining() - TEARDOWN_MARGIN_S),
-            )
+            cap = _oracle_cap()
+            if cap < REP_CAP_FLOOR_S:
+                # no budget for the oracle half: drop the unpaired Spark rep
+                skipped.append(f"{skip_label}-truncated:{name}")
+                break
             elapsed = _guarded_run(con, sql, cap)
             if isinstance(elapsed, Exception):
                 # drop the unpaired Spark rep too: quotients stay paired
-                if skipped is not None:
-                    skipped.append(f"duckdb-error:{name}:{str(elapsed)[:80]}")
+                skipped.append(f"duckdb-error:{name}:{str(elapsed)[:80]}")
                 break
             s_raw.append(s_spent)
             if elapsed is None:
@@ -1247,7 +825,7 @@ def time_paired(
                 d_raw.append(round(cap, 4))
             else:
                 d_raw.append(round(elapsed, 4))
-        if hit_cap and skipped is not None:
+        if hit_cap:
             skipped.append(f"duckdb-timeout-lower-bound:{name}")
         if not s_raw:
             continue
@@ -1267,6 +845,35 @@ def time_paired(
     return spark_t, spark_reps, duck_t, duck_reps, ratio_t, ratio_reps
 
 
+def protocol_notes() -> dict[str, str]:
+    """The sidecar's protocol strings, built from the constants the run
+    used: ``stat`` and ``order`` for the scale phase, ``bucketed_stat``
+    for its bucketed rows."""
+    paired = (
+        f"steady{PAIRED_STEADY_K} over {PAIRED_REPS} per-rep paired "
+        "spark_i/duck_i quotients"
+    )
+    light, heavy = LIGHT_REPS, HEAVY_REPS
+    return {
+        "stat": (
+            f"paired rows={paired}; unpaired light=steady{light['steady_k']} "
+            f"of {light['n_reps']} warm reps, heavy=median of "
+            f"{heavy['n_reps']} warm reps, on both engines alike (2 reps past "
+            f"the {SLOW_QUERY_CUTOFF_S:g} s cutoff, a third on >2x "
+            "disagreement; rep-list lengths in *_reps show which); oracle "
+            f"runs capped at min({ORACLE_CAP_S:g} s, remaining - "
+            f"{TEARDOWN_MARGIN_S:g} s), a cap hit is a flagged lower bound"
+        ),
+        "order": (
+            "unpaired light -> paired light (alternating reps) -> bucketed "
+            f"({BUCKETED_WARM_REPS} warm-ups, alternating reps) -> heavy -> "
+            f"unpaired oracles (name order, each run capped at "
+            f"{ORACLE_CAP_S:g} s)"
+        ),
+        "bucketed_stat": paired,
+    }
+
+
 def main() -> None:
     spark = build_session(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -1279,11 +886,9 @@ def main() -> None:
     timings, reps_raw = time_spark(specs, spark, SF_DIR)
     total = round(sum(timings.values()), 4)
 
-    # Box-speed sentinel (round 12): fixed workloads, untimed-phase-side;
-    # rides in the sidecar for PERF normalization and gates the
-    # drift-scaled rep counts (see measure_sentinel).
+    # Box-speed sentinel: fixed workloads, outside every timed phase;
+    # reported, never acted on (see measure_sentinel).
     sentinel = measure_sentinel(spark)
-    _DRIFT["v"] = max(1.0, sentinel["drift"])
     print(f"# sentinel: {sentinel}", file=sys.stderr)
 
     result = {
@@ -1293,8 +898,7 @@ def main() -> None:
         "stat": "median_of_warm_reps",
         "queries": timings,
         "queries_reps": reps_raw,
-        "sentinel": {**sentinel, "ref": SENTINEL_REF_S, "gate": DRIFT_GATE,
-                     "degraded_reps": _DRIFT["v"] >= DRIFT_GATE},
+        "sentinel": {**sentinel, "ref": SENTINEL_REF_S},
         "sf": sf_from_dir(SF_DIR),
     }
 
@@ -1330,64 +934,29 @@ def main() -> None:
             if s.bench_fn is not None or s.bench_oracle is not None
         }
         warm.fn(spark, SCALE_DIR).count()
-        # force_reps for the LIGHT rows: every light row is sub-5 s warm
-        # at this scale, so a >5 s warm-up here means a cold page cache
-        # (observed when a 13-min I/O-heavy job preceded the bench: plain
-        # q3's cold warm rep tripped the slow cutoff and its median came
-        # from 2 still-settling reps). The cutoff exists for genuinely
-        # multi-second queries — the bench_heavy rows keep it.
-        # 5 reps + steady-3 (round 9): a host interference storm spanning
-        # all 3 reps set plain q3's graded median to 8.4 s in run 5
-        # (steady wall 1.6-2.1 s); with 5 reps the storm must cover the
-        # whole window to survive the steady-3 estimator, and the ~25 s
-        # the 2 extra sub-second reps cost fits the measured headroom
-        # (runs 6-7 finished at 726/890 s of the 1200 s budget).
-        # fast_tier_reps(): 5 on a calm box; the round-12 drift gate drops
-        # it to 3 on a slow one (flagged in `sentinel`, symmetric with the
-        # oracle side's _oracle_rep_count).
+        notes = protocol_notes()
         spark_t, spark_reps = time_spark(
             unpaired_light, spark, SCALE_DIR, skipped=skipped, bench_variant=True,
-            force_reps=True, n_reps=fast_tier_reps(), steady_k=3,
+            **LIGHT_REPS,
         )
-        # Per-rep paired rows (VERDICT r9 tasks 1+2): same total rep cost
-        # as the old protocol (5 Spark reps here + 5 oracle reps in the
-        # end-of-run pass), but alternated so every quotient compares the
-        # same box moment. The connection is shared with the end-of-run
-        # oracle pass — its q_vec hoist table is built once, untimed.
+        # The connection is shared with the end-of-run oracle pass — its
+        # q_vec hoist table is built once, untimed.
         con = _duck_connect(SCALE_DIR)
         p_spark, p_sreps, duck_t, duck_reps, p_ratio, p_rreps = time_paired(
             paired_specs, spark, SCALE_DIR, con, skipped=skipped,
-            skip_label="paired", n_reps=fast_tier_reps(), steady_k=3,
+            skip_label="paired",
         )
         spark_t.update(p_spark)
         spark_reps.update(p_sreps)
         result["scale"] = {
             "factors": DEFAULT_FACTORS,
             "rows": rows,
-            "stat": (
-                "light=steady3_of_5_warm_reps (2-rep plain median when "
-                "warm AND first timed rep exceed the slow cutoff — the "
-                "rep-list length in *_reps shows which), "
-                "heavy=median_of_warm_reps, "
-                "paired rows=steady3 over per-rep spark_i/duck_i quotients, "
-                "oracle_heavy blowouts past the very-slow cutoff=single "
-                "measured warm-run rep (raw_reps length 1 shows which; "
-                "bias direction inflates the DuckDB denominator, bounded "
-                "1.04-1.7x vs the 25-100x margins those rows grade at); "
-                "blowout-tier budget held in reserve (~148 s) against "
-                "every earlier gate until each row spends its own share, "
-                "so budget death degrades earlier phases to capped bounds "
-                "instead of skipping the most Spark-favoring ratios"
-            ),
+            "stat": notes["stat"],
             "spark": spark_t,
             "spark_reps": spark_reps,
             "paired": sorted(p_ratio),
             "paired_ratio_reps": p_rreps,
-            "order": (
-                "unpaired light -> paired light (alternating reps) -> "
-                "bucketed (alternating reps) -> heavy -> oracles "
-                "(cheapest-estimate first, oracle_heavy blowouts last)"
-            ),
+            "order": notes["order"],
             "bench_variants": variants,
         }
         # Phase 2c — bucketed-at-rest facts (DEPLOY.md's prescribed 100 TB
@@ -1422,21 +991,9 @@ def main() -> None:
                 for q in ("q3_shipping_priority", "q5_local_supplier")
                 if q in specs
             }
-            # the two bucketed queries are ~1 s each: 9 ALTERNATING
-            # rep pairs cost ~20 s against 450+ s of budget headroom,
-            # graded steady-5 over the per-rep quotients (VERDICT r9
-            # task 1) — robust to BOTH the multi-rep IO settling head
-            # (r8 six-run 1.69-2.39x band on byte-identical plans)
-            # and the mid-phase interference storms this host shows
-            # (round-9 run 7: the storm hit the TAIL, so r8's last-5
-            # median graded 2.54 where the reproduced steady wall was
-            # 0.84-0.85 s; run 10's same-moment pairing absorbed a 2×
-            # degraded box at 1.006/1.003). The oracle denominator is
-            # re-measured HERE, at the bucketed phase's own box
-            # moments, with the SAME 9-rep steady-5 treatment as its
-            # numerator (ADVICE r9: 5-of-9 over 3-of-5 no longer
-            # cancels). Raw spreads stay in the sidecar for audit.
-            b_reps, b_k = bucketed_reps()
+            # The oracle denominator is re-measured HERE, at the bucketed
+            # phase's own box moments, on the same paired protocol as
+            # every other paired row.
             with bucketed_confs(spark, SCALE_DIR):
                 (
                     bspark_t, bspark_reps, bduck_t, bduck_reps,
@@ -1448,9 +1005,7 @@ def main() -> None:
                     con,
                     skipped=skipped,
                     skip_label="spark-bucketed",
-                    n_reps=b_reps,
-                    steady_k=b_k,
-                    n_warm=3,
+                    n_warm=BUCKETED_WARM_REPS,
                 )
             result["scale"]["bucketed"] = {
                 "spark": bspark_t,
@@ -1459,7 +1014,7 @@ def main() -> None:
                 "duckdb_reps": bduck_reps,
                 "ratio": bratio_t,
                 "ratio_reps": bratio_reps,
-                "stat": f"steady{b_k} over {b_reps} per-rep paired quotients",
+                "stat": notes["bucketed_stat"],
             }
         else:
             skipped.append("bucketed-phase:budget")
@@ -1467,21 +1022,13 @@ def main() -> None:
         # note above). Their own medians are reliable in this slot — each
         # pays its cold read in its untimed warm rep, same as ever.
         heavy_t, heavy_reps = time_spark(
-            heavy, spark, SCALE_DIR, skipped=skipped, bench_variant=True
+            heavy, spark, SCALE_DIR, skipped=skipped, bench_variant=True,
+            **HEAVY_REPS,
         )
         spark_t.update(heavy_t)
         spark_reps.update(heavy_reps)
-        # Oracles: ONE pass over everything not already paired-measured,
-        # ordered by information-at-risk (oracle_pass_order): cheapest
-        # estimated wall first, oracle_heavy blowouts last on reserve —
-        # if the budget dies mid-pass, what's lost is a flagged capped
-        # lower bound on the most expensive row, never a cheap
-        # measurable one (round 9: as-of first starved 14 oracles;
-        # round 11, 8-core: twins-first starved the 1.5-5 s plain rows
-        # behind the 12-55 s twin oracles). Exception: a pass that
-        # STARTS inside the degraded-mode gate flips blowouts first so
-        # their reserve underspend funds the mid tier instead of
-        # evaporating (see oracle_pass_order; sidecar-noted).
+        # Oracles: ONE pass, in name order, over everything not already
+        # paired-measured, each row on its Spark side's rep schedule.
         rest = {
             n: s for n, s in {**light, **heavy}.items() if n not in paired_specs
         }
@@ -1489,17 +1036,6 @@ def main() -> None:
             rest, SCALE_DIR, skipped=skipped, bench_variant=True, con=con
         )
         con.close()
-        # The oracle pass is over: any still-held reserve (a blowout row
-        # absent from `rest`, e.g. after a registry change) must not
-        # distort later remaining() readers.
-        release_reserve_all()
-        if _ORACLE_ORDER_FLIP["flipped"]:
-            result["scale"]["order"] += (
-                " [reserve-scarce at oracle-pass start: oracle_heavy "
-                "blowouts ran FIRST, largest reserve first, underspend "
-                "released to the mid tier; single-rep cold bias bounded "
-                "by the same 1.04-1.7x audit vs 25-100x margins]"
-            )
         duck_t.update(dr_t)
         duck_reps.update(dr_reps)
         # Unpaired rows grade as the quotient of the two steady walls;
@@ -1541,10 +1077,6 @@ def main() -> None:
             result["grade"]["plain_note"] = PLAIN_NOTE
     elif RUN_SCALE:
         result["scale_skipped"] = "budget exhausted before scale phase"
-        # No scale phase -> no oracle pass -> nothing to spend the
-        # blowout reserve on; let teardown-era remaining() readers see
-        # the true budget.
-        release_reserve_all()
     result["elapsed_s"] = round(time.perf_counter() - _T_START, 1)
 
     with open(os.path.join(REPO_DIR, "BENCH_FULL_last.json"), "w") as f:

@@ -6,9 +6,9 @@ external harness kill can't lose the JSON line."""
 
 from __future__ import annotations
 
-import pytest
-
 import bench
+
+from .conftest import SF_SMOKE
 
 
 def test_median_reps_returns_median_and_raw(monkeypatch):
@@ -54,19 +54,32 @@ def test_median_reps_stops_when_budget_cannot_absorb_another_rep(monkeypatch):
     assert len(raw) == 1
 
 
-def test_oracle_rep_count_tiers():
-    """Round-8 tier: oracles past the 20 s warm cutoff get ONE timed rep
-    (50-100x Spark blowouts where extra reps cost ~70 s of budget for
-    no ratio precision); the 5 s slow tier stands. Round 9: the fast
-    tier takes 5 reps (graded steady-3) — the identical estimator and
-    rep count as the Spark scale light rows, so the steady estimator's
-    downward bias cancels in the graded ratio instead of favoring the
-    Spark numerator."""
-    assert bench._oracle_rep_count(0.5) == 5
-    assert bench._oracle_rep_count(bench.SLOW_QUERY_CUTOFF_S + 0.1) == 2
-    assert bench._oracle_rep_count(bench.VERY_SLOW_ORACLE_S) == 2  # boundary: not yet very-slow
-    assert bench._oracle_rep_count(bench.VERY_SLOW_ORACLE_S + 0.1) == 1
-    assert bench._oracle_rep_count(48.0) == 1  # the sessionize shape
+def _oracle_only_spec(name, **kw):
+    from transilien_api_etl_spark.plans.registry import QuerySpec
+
+    return QuerySpec(
+        name=name, fn=lambda s, d: None,
+        oracle="SELECT count(*) AS n FROM region", **kw,
+    )
+
+
+def test_time_duckdb_uses_the_spark_side_rep_schedule(monkeypatch):
+    """An unpaired oracle takes its Spark numerator's _median_reps
+    schedule (scale_reps): light rows 5 reps graded steady-3, heavy rows
+    the plain median of 3 — so the estimator's bias cancels in the ratio
+    instead of favoring either engine."""
+    monkeypatch.setattr(bench, "remaining", lambda: 1e9)
+    specs = {
+        "light_q": _oracle_only_spec("light_q"),
+        "heavy_q": _oracle_only_spec("heavy_q", bench_heavy=True),
+    }
+    timings, reps = bench.time_duckdb(specs, SF_SMOKE, skipped=[])
+    assert len(reps["light_q"]) == bench.LIGHT_REPS["n_reps"]
+    assert timings["light_q"] == round(
+        bench._steady_median(reps["light_q"], bench.LIGHT_REPS["steady_k"]), 4
+    )
+    assert len(reps["heavy_q"]) == bench.HEAVY_REPS["n_reps"]
+    assert timings["heavy_q"] == round(sorted(reps["heavy_q"])[1], 4)
 
 
 def _grade_payload(n_queries=20, skipped=None):
@@ -91,6 +104,8 @@ def _grade_payload(n_queries=20, skipped=None):
             "skipped": skipped or [],
         },
         "elapsed_s": 744.1,
+        "sentinel": {"spark_jvm": 0.16, "spark_arrow": 0.54, "duckdb": 0.35,
+                     "drift": 0.751},
     }
 
 
@@ -112,6 +127,7 @@ def test_compact_line_fits_tail_budget_and_parses():
     # detail (rep spreads, absolute walls) is pointed at, not inlined
     assert parsed["detail"] == "BENCH_FULL_last.json"
     assert "queries_reps" not in parsed
+    assert parsed["sentinel_drift"] == 0.751
 
 
 def test_compact_line_trim_ladder_under_pathological_skip_list():
@@ -138,6 +154,7 @@ def test_compact_line_trim_ladder_under_pathological_skip_list():
     # real suite — so it legitimately reaches that rung).
     if not isinstance(parsed["grade"]["ratio"], dict):
         assert len(kept) <= 6
+    assert parsed["sentinel_drift"] == 0.751  # kept on every rung
 
 
 def test_compact_line_real_suite_size_keeps_ratios_under_skip_pressure():
@@ -157,6 +174,7 @@ def test_compact_line_real_suite_size_keeps_ratios_under_skip_pressure():
     assert len(parsed["grade"]["ratio"]) == 20
     kept = parsed["grade"]["skipped"]
     assert "see BENCH_FULL_last.json" in kept[-1]  # reduced, never silent
+    assert parsed["sentinel_drift"] == 0.751
 
 
 def test_compact_line_no_scale_phase():
@@ -169,6 +187,32 @@ def test_compact_line_no_scale_phase():
     parsed = json.loads(line)
     assert parsed["scale_skipped"] == "budget exhausted before scale phase"
     assert len(line) <= bench.STDOUT_TAIL_BUDGET
+    assert parsed["sentinel_drift"] == 0.751
+
+
+def test_compact_line_keeps_sentinel_drift_on_the_last_rung():
+    """Even the final rung (queries dropped) carries sentinel_drift and
+    fits the tail budget."""
+    import json
+
+    skipped = [f"duckdb-timeout-lower-bound:query_name_{i:03d}" for i in range(40)]
+    payload = _grade_payload(n_queries=120, skipped=skipped)
+    line = bench.build_compact_line(payload)
+    assert len(line) <= bench.STDOUT_TAIL_BUDGET
+    parsed = json.loads(line)
+    assert parsed["queries"] == "see BENCH_FULL_last.json"  # last rung fired
+    assert parsed["sentinel_drift"] == 0.751
+
+
+def test_protocol_notes_are_built_from_the_run_constants():
+    """The sidecar's stat strings name the paired rep count, its k and the
+    oracle cap the run actually used."""
+    notes = bench.protocol_notes()
+    paired = f"steady{bench.PAIRED_STEADY_K} over {bench.PAIRED_REPS} per-rep"
+    assert paired in notes["stat"]
+    assert paired in notes["bucketed_stat"]
+    assert f"{bench.ORACLE_CAP_S:g} s" in notes["stat"]
+    assert f"{bench.ORACLE_CAP_S:g} s" in notes["order"]
 
 
 def test_median_reps_steady_k_drops_settling_head(monkeypatch):
@@ -284,36 +328,26 @@ def test_median_reps_no_tiebreaker_without_budget(monkeypatch):
     assert med == 80.8  # the distorted mean stands, auditable via raw
 
 
-def test_oracle_pass_order_cheapest_first_blowouts_last(monkeypatch):
-    """Round 11 (8-core PERF shape): the non-blowout oracle pass runs
-    CHEAPEST first by the committed-walls estimate map — the old
-    twin-first split sent the 12-55 s twin oracles ahead of 1.5-5 s
-    plain rows and a budget death between the tiers holed the cheap
-    rows. Blowouts stay last (capped lower bound decisive), cheapest
-    reserve first. remaining() is pinned healthy so the reserve-scarce
-    flip (its own tests below) cannot fire by suite position."""
+def test_time_duckdb_runs_oracles_in_name_order(monkeypatch):
+    """One oracle pass, in name order: no estimate-ordered tiers and no
+    budget-driven flip."""
     from types import SimpleNamespace as NS
 
-    monkeypatch.setattr(bench, "remaining", lambda: 500.0)
-    specs = {
-        "asof_join_purchase_click": NS(bench_oracle=None, oracle_heavy=True),
-        "semdedup_survivors": NS(bench_oracle="select 1", oracle_heavy=False),
-        "events_sessionize": NS(bench_oracle=None, oracle_heavy=True),
-        "knn_pq_adc_top10": NS(bench_oracle="select 1", oracle_heavy=False),
-        "docs_segment_dedup": NS(bench_oracle=None, oracle_heavy=False),
-        "docs_minhash_candidates": NS(bench_oracle="select 1", oracle_heavy=False),
-    }
-    order = bench.oracle_pass_order(specs, bench_variant=True)
-    assert order == [
-        "docs_segment_dedup",  # 3 s — cheapest measurable first
-        "docs_minhash_candidates",  # 6 s (round-12 reduced twin)
-        "knn_pq_adc_top10",  # 10 s
-        "semdedup_survivors",  # 25 s
-        "asof_join_purchase_click",  # blowouts last, cheapest reserve first
-        "events_sessionize",
-    ]
-    # the order is deliberately bench_variant-independent now
-    assert bench.oracle_pass_order(specs, bench_variant=False) == order
+    monkeypatch.setattr(bench, "remaining", lambda: 1e9)
+    ran = []
+
+    def fake_guarded(con, sql, cap):
+        ran.append(sql)
+        assert cap == bench.ORACLE_CAP_S  # the one cap, budget permitting
+        return 0.01
+
+    monkeypatch.setattr(bench, "_guarded_run", fake_guarded)
+    names = ["semdedup_survivors", "asof_join_purchase_click",
+             "events_sessionize", "docs_segment_dedup"]
+    specs = {n: NS(oracle=n, bench_oracle=None, bench_heavy=False) for n in names}
+    timings, _ = bench.time_duckdb(specs, "/nowhere", skipped=[], con=object())
+    assert list(dict.fromkeys(ran)) == sorted(names)
+    assert sorted(timings) == sorted(names)
 
 
 def test_force_reps_genuinely_slow_falls_to_two_rep_tier(monkeypatch):
@@ -365,13 +399,13 @@ def test_force_reps_cold_cache_keeps_full_reps(monkeypatch):
 
 
 def _fake_paired_harness(
-    monkeypatch, spark_deltas, duck_deltas, n_warm=1, name="fake_q", n_reps=None
+    monkeypatch, spark_deltas, duck_deltas, names=("fake_q",), defaults=False
 ):
-    """Drive bench.time_paired with a scripted clock: spark rep i takes
-    spark_deltas[i], oracle rep i returns duck_deltas[i] directly.
-    ``n_reps`` defaults to len(duck_deltas); pass a smaller base count to
-    exercise the STORM_EXPOSED_ROWS extra-rep path (the deltas lists must
-    then hold base+extra values)."""
+    """Drive bench.time_paired with a scripted clock: spark rep i of each
+    row takes spark_deltas[i], oracle rep i returns duck_deltas[i]
+    directly. The harness runs len(duck_deltas) reps graded steady-3,
+    or time_paired's own PAIRED_REPS / PAIRED_STEADY_K with
+    ``defaults``."""
     from transilien_api_etl_spark.plans.registry import QuerySpec
 
     monkeypatch.setattr(bench, "remaining", lambda: 1e9)
@@ -382,11 +416,13 @@ def _fake_paired_harness(
             log.append("S")
             return 1
 
-    spec = QuerySpec(name=name, fn=lambda s, d: FakeResult(), oracle="SELECT 1")
-    monkeypatch.setitem(bench.REGISTRY, name, spec)
+    specs = {
+        n: QuerySpec(name=n, fn=lambda s, d: FakeResult(), oracle="SELECT 1")
+        for n in names
+    }
 
     clock = {"now": 0.0}
-    sd = iter(spark_deltas)
+    sd = iter(list(spark_deltas) * len(names))
     calls = {"n": 0}
 
     def fake_counter():
@@ -395,7 +431,7 @@ def _fake_paired_harness(
             clock["now"] += next(sd)
         return clock["now"]
 
-    dd = iter([None] * (n_warm and 1) + list(duck_deltas))  # first = warm rep
+    dd = iter(([None] + list(duck_deltas)) * len(names))  # first = warm rep
 
     def fake_guarded(con, sql, cap):
         log.append("D")
@@ -404,10 +440,10 @@ def _fake_paired_harness(
 
     monkeypatch.setattr(bench.time, "perf_counter", fake_counter)
     monkeypatch.setattr(bench, "_guarded_run", fake_guarded)
+    protocol = {} if defaults else {"n_reps": len(duck_deltas), "steady_k": 3}
     out = bench.time_paired(
-        {name: spec}, spark=None, data_dir="/nowhere", con=None,
-        skipped=[], n_reps=n_reps or len(duck_deltas), steady_k=3,
-        n_warm=n_warm, bench_variant=False,
+        specs, spark=None, data_dir="/nowhere", con=None,
+        skipped=[], bench_variant=False, **protocol,
     )
     return out, log
 
@@ -457,68 +493,42 @@ def test_time_paired_one_sided_storm_moves_only_its_rep(monkeypatch):
     assert ratio_t["fake_q"] == 1.0
 
 
-def test_time_paired_storm_exposed_row_gets_extra_reps(monkeypatch):
-    """STORM_EXPOSED_ROWS (round 12): on a calm box the four storm-exposed
-    near-bar rows take n_reps + EXTRA_STORM_REPS alternating reps — the
-    SAME count on both engines of the quotient (the code-review-r9
-    symmetry rule holds per row, inside one loop)."""
-    monkeypatch.setitem(bench._DRIFT, "v", 1.0)
-    name = "docs_word_freq_top20"
-    assert name in bench.STORM_EXPOSED_ROWS
-    (_, sreps, _, dreps, _, rreps), log = _fake_paired_harness(
-        monkeypatch,
-        spark_deltas=[0.5] * 7,
-        duck_deltas=[0.5] * 7,
-        name=name,
-        n_reps=5,
+def test_time_paired_every_row_gets_the_same_reps_and_k(monkeypatch):
+    """q1_pricing_summary (a row that once took extra reps) and any other
+    paired row run the same PAIRED_REPS alternating reps, graded by the
+    same steady-PAIRED_STEADY_K estimator on both engines."""
+    names = ("events_tumbling_1h", "q1_pricing_summary")
+    n = bench.PAIRED_REPS
+    spark_deltas = ([0.6, 2.4, 3.6, 1.8, 0.5, 0.7, 0.6, 0.9, 1.1] * 2)[:n]
+    (spark_t, sreps, duck_t, dreps, ratio_t, rreps), log = _fake_paired_harness(
+        monkeypatch, spark_deltas=spark_deltas, duck_deltas=[0.5] * n,
+        names=names, defaults=True,
     )
-    assert len(sreps[name]) == 5 + bench.EXTRA_STORM_REPS
-    assert len(dreps[name]) == len(sreps[name])  # symmetric counts
-    # strict alternation holds across the extra reps too (warm S, warm D,
-    # then S D x 7)
-    assert log == ["S", "D"] + ["S", "D"] * 7
+    # per row: warm S, warm D, then strict S D alternation
+    assert log == (["S", "D"] + ["S", "D"] * n) * len(names)
+    k = bench.PAIRED_STEADY_K
+    for name in names:
+        assert len(sreps[name]) == len(dreps[name]) == n
+        assert spark_t[name] == round(bench._steady_median(sreps[name], k), 4)
+        assert duck_t[name] == round(bench._steady_median(dreps[name], k), 4)
+        assert ratio_t[name] == round(bench._steady_median(rreps[name], k), 3)
+    assert rreps[names[0]] == rreps[names[1]]
+    assert ratio_t[names[0]] == ratio_t[names[1]]
 
 
-def test_time_paired_storm_extra_reps_recover_midrun_storm(monkeypatch):
-    """The motivating failure (bench run B this round): a one-sided 3-rep
-    storm at 5 reps contaminates every steady-3 window (best window still
-    held one storm rep -> graded 2.134 on a ~1.2 plan). With the +2 extra
-    reps the trailing calm pair restores a clean window and the grade is
-    the plan's."""
-    monkeypatch.setitem(bench._DRIFT, "v", 1.0)
-    # q1, not the knn rows: the fake spec's "SELECT 1" oracle has no
-    # query-vector hoist marker, which _hoist_qvec demands for QVEC_HOIST
-    # rows — the extra-rep path under test is name-keyed identically.
-    name = "q1_pricing_summary"
+def test_time_paired_recovers_a_three_rep_storm(monkeypatch):
+    """A one-sided storm over 3 consecutive reps still leaves one clean
+    window at the common rep count, so the grade is the plan's."""
+    assert bench.PAIRED_REPS - 3 >= bench.PAIRED_STEADY_K
+    n = bench.PAIRED_REPS
+    # reps 2-4 are a one-sided spark storm; the rest calm
+    spark_deltas = [0.6, 2.4, 3.6, 1.8] + [0.6] * (n - 4)
     (_, _, _, _, ratio_t, rreps), _ = _fake_paired_harness(
-        monkeypatch,
-        # reps 2-4 are a one-sided spark storm; reps 5-7 calm again
-        spark_deltas=[0.6, 2.4, 3.6, 1.8, 0.6, 0.6, 0.6],
-        duck_deltas=[0.5] * 7,
-        name=name,
-        n_reps=5,
+        monkeypatch, spark_deltas=spark_deltas, duck_deltas=[0.5] * n,
+        defaults=True,
     )
-    assert rreps[name] == [1.2, 4.8, 7.2, 3.6, 1.2, 1.2, 1.2]
-    # steady-3 over the last three calm quotients
-    assert ratio_t[name] == 1.2
-
-
-def test_time_paired_drift_gate_drops_storm_extras(monkeypatch):
-    """On a degraded box (sentinel >= DRIFT_GATE) the extras vanish with
-    the same gate that drops the fast tier 5 -> 3: budget beats
-    robustness when the box is already dying."""
-    monkeypatch.setitem(bench._DRIFT, "v", bench.DRIFT_GATE)
-    assert bench.storm_extra_reps() == 0
-    name = "q1_pricing_summary"
-    (_, sreps, _, dreps, _, _), _ = _fake_paired_harness(
-        monkeypatch,
-        spark_deltas=[0.5] * 3,
-        duck_deltas=[0.5] * 3,
-        name=name,
-        n_reps=3,
-    )
-    assert len(sreps[name]) == 3
-    assert len(dreps[name]) == 3
+    assert rreps["fake_q"] == [1.2, 4.8, 7.2, 3.6] + [1.2] * (n - 4)
+    assert ratio_t["fake_q"] == 1.2
 
 
 def test_time_paired_real_query_end_to_end(spark):
@@ -526,18 +536,16 @@ def test_time_paired_real_query_end_to_end(spark):
     connection (incl. the q_vec setup in _duck_connect). Uses the shared
     session fixture — build_session here would getOrCreate the SAME
     active session and a stop() would kill it for every later test."""
-    con = bench._duck_connect("/root/testdata/sf0.001")
+    con = bench._duck_connect(SF_SMOKE)
     spec = bench.REGISTRY["q1_pricing_summary"]
     spark_t, sreps, duck_t, dreps, ratio_t, rreps = bench.time_paired(
-        {"q1_pricing_summary": spec}, spark, "/root/testdata/sf0.001",
+        {"q1_pricing_summary": spec}, spark, SF_SMOKE,
         con, skipped=[], n_reps=3, steady_k=3, bench_variant=False,
     )
     con.close()
     assert spark_t["q1_pricing_summary"] > 0
     assert duck_t["q1_pricing_summary"] > 0
-    # q1 is in STORM_EXPOSED_ROWS, so the base 3 reps gain the live
-    # gate's extras (2 on a calm box, 0 past the drift gate)
-    assert len(rreps["q1_pricing_summary"]) == 3 + bench.storm_extra_reps()
+    assert len(rreps["q1_pricing_summary"]) == 3
     assert ratio_t["q1_pricing_summary"] > 0
 
 
@@ -557,7 +565,7 @@ def test_time_duckdb_binder_error_is_flagged_not_graded():
     try:
         skipped = []
         timings, reps = bench.time_duckdb(
-            {"broken_oracle_q": bad}, "/root/testdata/sf0.001", skipped=skipped
+            {"broken_oracle_q": bad}, SF_SMOKE, skipped=skipped
         )
         assert "broken_oracle_q" not in timings
         assert any(s.startswith("duckdb-error:broken_oracle_q") for s in skipped)
@@ -576,54 +584,15 @@ def test_time_paired_binder_error_skips_row_with_flag(monkeypatch, spark):
         fn=lambda s, d: s.range(1),
         oracle="SELECT * FROM this_table_does_not_exist",
     )
-    con = bench._duck_connect("/root/testdata/sf0.001")
+    con = bench._duck_connect(SF_SMOKE)
     skipped = []
     out = bench.time_paired(
-        {"broken_paired_q": spec}, spark, "/root/testdata/sf0.001", con,
+        {"broken_paired_q": spec}, spark, SF_SMOKE, con,
         skipped=skipped, n_reps=2, steady_k=1, bench_variant=False,
     )
     con.close()
     assert all(not d for d in out)  # all six result dicts empty
     assert any(s.startswith("duckdb-error:broken_paired_q") for s in skipped)
-
-
-def test_time_duckdb_blowout_tier_counts_warm_as_single_rep(monkeypatch):
-    """Round 10 run 5: an oracle_heavy row past VERY_SLOW_ORACLE_S used
-    to pay warm + one duplicate rep (~2x its 25-50 s wall); the warm run
-    now IS the single rep. One execution total, timing == that rep."""
-    from transilien_api_etl_spark.plans.registry import QuerySpec
-
-    calls = {"n": 0}
-    real = bench._guarded_run
-
-    def counting(con, sql, cap):
-        calls["n"] += 1
-        return real(con, sql, cap)
-
-    monkeypatch.setattr(bench, "_guarded_run", counting)
-    monkeypatch.setattr(bench, "VERY_SLOW_ORACLE_S", 0.0)
-    # Pin the budget: _T_START is set at bench IMPORT (pytest collection),
-    # so on a slow full-suite run real remaining() can cross the entry
-    # gate and this test would assert against a skip instead
-    # (code-review round 10).
-    monkeypatch.setattr(bench, "remaining", lambda: 1000.0)
-    spec = QuerySpec(
-        name="blowout_q",
-        fn=lambda s, d: None,
-        oracle="SELECT count(*) AS n FROM region",
-        oracle_heavy=True,
-    )
-    bench.REGISTRY.setdefault("blowout_q", spec)
-    try:
-        skipped = []
-        timings, reps = bench.time_duckdb(
-            {"blowout_q": spec}, "/root/testdata/sf0.001", skipped=skipped
-        )
-        assert calls["n"] == 1
-        assert reps["blowout_q"] == [timings["blowout_q"]]
-        assert skipped == []
-    finally:
-        bench.REGISTRY.pop("blowout_q", None)
 
 
 def test_time_duckdb_near_death_runs_with_shrunken_cap(monkeypatch):
@@ -643,7 +612,7 @@ def test_time_duckdb_near_death_runs_with_shrunken_cap(monkeypatch):
     try:
         skipped = []
         timings, reps = bench.time_duckdb(
-            {"near_death_q": spec}, "/root/testdata/sf0.001", skipped=skipped
+            {"near_death_q": spec}, SF_SMOKE, skipped=skipped
         )
         assert "near_death_q" in timings and reps["near_death_q"]
         assert skipped == []
@@ -651,38 +620,33 @@ def test_time_duckdb_near_death_runs_with_shrunken_cap(monkeypatch):
         bench.REGISTRY.pop("near_death_q", None)
 
 
-def test_time_duckdb_entry_degraded_records_flagged_cold_rep(monkeypatch):
-    """Round 11, 8-core PERF shape: inside the last WARM_CAP_FLOOR_S of
-    headroom the old entry gate holed the row (three Spark-favoring
-    oracles -> ratio_median 0.61 -> 1.31 by omission). It must now run
-    one warm rep capped at the residual headroom and grade it as a
-    FLAGGED cold rep."""
-    from transilien_api_etl_spark.plans.registry import QuerySpec
+def test_time_duckdb_row_without_budget_is_skipped_and_line_parses(monkeypatch):
+    """A row reached with less than REP_CAP_FLOOR_S of oracle cap left
+    runs nothing and is listed in ``skipped``; the one-line JSON still
+    parses and names it."""
+    import json
 
-    # headroom = 15 - 12 = 3 s: below WARM_CAP_FLOOR_S (8), above
-    # LAST_DITCH_FLOOR_S (2) -> degraded single-warm mode.
+    # cap = 15 - TEARDOWN_MARGIN_S = 3 s < REP_CAP_FLOOR_S
     monkeypatch.setattr(bench, "remaining", lambda: 15.0)
-    spec = QuerySpec(
-        name="degraded_q",
-        fn=lambda s, d: None,
-        oracle="SELECT count(*) AS n FROM region",
+    ran = []
+    monkeypatch.setattr(bench, "_guarded_run", lambda *a: ran.append(a))
+    skipped = []
+    timings, _ = bench.time_duckdb(
+        {"late_q": _oracle_only_spec("late_q")}, SF_SMOKE,
+        skipped=skipped,
     )
-    bench.REGISTRY.setdefault("degraded_q", spec)
-    try:
-        skipped = []
-        timings, reps = bench.time_duckdb(
-            {"degraded_q": spec}, "/root/testdata/sf0.001", skipped=skipped
-        )
-        assert "degraded_q" in timings
-        assert reps["degraded_q"] == [timings["degraded_q"]]  # 1 cold rep
-        assert skipped == ["duckdb-near-death-cold-rep:degraded_q"]
-    finally:
-        bench.REGISTRY.pop("degraded_q", None)
+    assert timings == {} and ran == []
+    assert skipped == ["duckdb:late_q"]
+    line = bench.build_compact_line(_grade_payload(skipped=skipped))
+    assert len(line) <= bench.STDOUT_TAIL_BUDGET
+    parsed = json.loads(line)
+    assert parsed["grade"]["skipped"] == ["duckdb:late_q"]
+    assert parsed["sentinel_drift"] == 0.751
 
 
 def test_time_duckdb_true_death_still_skips(monkeypatch):
-    """Below LAST_DITCH_FLOOR_S of headroom nothing runs: the skip flag
-    (not a phantom timing) is the record."""
+    """With no oracle budget left nothing runs: the skip flag (not a
+    phantom timing) is the record."""
     from transilien_api_etl_spark.plans.registry import QuerySpec
 
     monkeypatch.setattr(bench, "remaining", lambda: 13.5)  # headroom 1.5
@@ -695,44 +659,31 @@ def test_time_duckdb_true_death_still_skips(monkeypatch):
     try:
         skipped = []
         timings, _ = bench.time_duckdb(
-            {"dead_q": spec}, "/root/testdata/sf0.001", skipped=skipped
+            {"dead_q": spec}, SF_SMOKE, skipped=skipped
         )
         assert timings == {} and "duckdb:dead_q" in skipped
     finally:
         bench.REGISTRY.pop("dead_q", None)
 
 
-def test_time_duckdb_rep_loop_budget_break_grades_flagged_cold_rep(monkeypatch):
-    """Code-review round 10 + round 11: once another floor-capped rep
-    cannot leave the ~12 s teardown margin, the rep loop stops instead
-    of draining to ~2 s — and a row whose warm COMPLETED but whose reps
-    never ran is graded as a flagged cold rep (round 11: the old loud
-    drop still reshaped ratio_median by omission), never silently."""
-    from transilien_api_etl_spark.plans.registry import QuerySpec
-
-    budget = iter([25.0] + [16.0] * 50)  # entry gate passes, reps cannot
+def test_time_duckdb_no_budget_after_warm_skips_row(monkeypatch):
+    """The warm run fits but the first timed rep's cap would be under
+    REP_CAP_FLOOR_S: the row is listed in ``skipped``, not graded on its
+    cold warm run."""
+    budget = iter([25.0] + [16.0] * 50)  # warm cap 13 s, rep cap 4 s
     monkeypatch.setattr(bench, "remaining", lambda: next(budget))
-    spec = QuerySpec(
-        name="rep_break_q",
-        fn=lambda s, d: None,
-        oracle="SELECT count(*) AS n FROM region",
+    skipped = []
+    timings, reps = bench.time_duckdb(
+        {"rep_break_q": _oracle_only_spec("rep_break_q")},
+        SF_SMOKE, skipped=skipped,
     )
-    bench.REGISTRY.setdefault("rep_break_q", spec)
-    try:
-        skipped = []
-        timings, reps = bench.time_duckdb(
-            {"rep_break_q": spec}, "/root/testdata/sf0.001", skipped=skipped
-        )
-        assert "rep_break_q" in timings
-        assert reps["rep_break_q"] == [timings["rep_break_q"]]
-        assert skipped == ["duckdb-near-death-cold-rep:rep_break_q"]
-    finally:
-        bench.REGISTRY.pop("rep_break_q", None)
+    assert timings == {} and reps == {}
+    assert skipped == ["duckdb:rep_break_q"]
 
 
-def _degraded_paired_harness(monkeypatch, remaining_s):
-    """time_paired under a near-death budget (ADVICE r10): scripted clock,
-    one 0.2 s Spark rep, oracle reps return 0.1 s."""
+def _budget_paired_harness(monkeypatch, remaining_s):
+    """time_paired under a pinned budget: scripted clock, oracle reps
+    return 0.1 s."""
     from transilien_api_etl_spark.plans.registry import QuerySpec
 
     monkeypatch.setattr(bench, "remaining", lambda: remaining_s)
@@ -766,189 +717,9 @@ def _degraded_paired_harness(monkeypatch, remaining_s):
     return out, log, skipped
 
 
-def test_time_paired_near_death_degrades_to_flagged_cold_pair(monkeypatch):
-    """Between the entry gate (30 s) and the drop floor (15 s), a paired
-    row must still be GRADED — one cold Spark rep paired with one oracle
-    rep, no warm-ups — and flagged, not silently removed from the
-    ratio_median (the caps-not-holes rule time_duckdb already follows)."""
-    out, log, skipped = _degraded_paired_harness(monkeypatch, remaining_s=20.0)
-    spark_t, sreps, duck_t, dreps, ratio_t, rreps = out
-    assert "fake_q" in ratio_t  # the row IS graded
-    assert len(sreps["fake_q"]) == 1 and len(dreps["fake_q"]) == 1
-    assert log == ["S", "D"]  # exactly one pair, zero warm-ups
-    assert "paired-degraded-cold-pair:fake_q" in skipped
-
-
 def test_time_paired_below_teardown_floor_drops_loudly(monkeypatch):
-    out, log, skipped = _degraded_paired_harness(monkeypatch, remaining_s=12.0)
+    out, log, skipped = _budget_paired_harness(monkeypatch, remaining_s=12.0)
     _, _, _, _, ratio_t, _ = out
     assert ratio_t == {}
     assert log == []  # nothing ran
     assert "paired:fake_q" in skipped
-
-
-def test_remaining_is_reserve_aware_and_release_restores(monkeypatch):
-    """Round 11 run 12: while the blowout tier is untimed, remaining()
-    withholds its reserve from every other gate; releasing a row returns
-    exactly its share, and release is idempotent."""
-    import time as _time
-
-    monkeypatch.setattr(bench, "BUDGET_S", 1000.0)
-    monkeypatch.setattr(bench, "_T_START", _time.perf_counter())
-    bench._reset_reserve()
-    try:
-        full = sum(bench.BLOWOUT_RESERVE_S.values())
-        assert bench.remaining() == pytest.approx(1000.0 - full, abs=1.0)
-        bench.release_reserve("asof_join_purchase_click")
-        bench.release_reserve("asof_join_purchase_click")  # idempotent
-        held = full - bench.BLOWOUT_RESERVE_S["asof_join_purchase_click"]
-        assert bench.remaining() == pytest.approx(1000.0 - held, abs=1.0)
-        bench.release_reserve_all()
-        assert bench.remaining() == pytest.approx(1000.0, abs=1.0)
-    finally:
-        bench._reset_reserve()
-
-
-def test_blowout_reserve_protects_tier2_under_budget_death(monkeypatch):
-    """Round 11 run 12 (elapsed 1185/1200 s): every earlier phase drained
-    the budget and the entry gate skipped all three blowout oracles — the
-    suite's most Spark-favoring ratios became holes and ratio_median moved
-    0.77 -> 1.37 by omission. At 160 s of TRUE budget the pass starts
-    reserve-scarce (visible 12 s, inside the degraded-mode gate), so the
-    flip fires: the blowout runs FIRST on its released share and records
-    its measured rep, and the plain row — which the pre-flip order
-    degraded to a loud drop while the reserve sat unspent — now rides the
-    released budget to a full measurement. Nothing is skipped. (Round 12
-    shrank the blowout reserves 148 -> 87 s with the reduced twins, so the
-    reserve-scarce scenario — visible headroom ~12 s at pass start — now
-    corresponds to ~99 s of true budget instead of 160.)"""
-    import time as _time
-
-    from transilien_api_etl_spark.plans.registry import QuerySpec
-
-    monkeypatch.setattr(
-        bench, "BUDGET_S", sum(bench.BLOWOUT_RESERVE_S.values()) + 12.0
-    )
-    monkeypatch.setattr(bench, "_T_START", _time.perf_counter())
-    monkeypatch.setattr(bench, "VERY_SLOW_ORACLE_S", 0.0)
-    bench._reset_reserve()
-    plain = QuerySpec(
-        name="plain_q", fn=lambda s, d: None,
-        oracle="SELECT count(*) AS n FROM region",
-    )
-    blow = QuerySpec(
-        name="events_sessionize", fn=lambda s, d: None,
-        oracle="SELECT count(*) AS n FROM nation", oracle_heavy=True,
-    )
-    bench.REGISTRY.setdefault("plain_q", plain)
-    try:
-        skipped = []
-        timings, reps = bench.time_duckdb(
-            {"plain_q": plain, "events_sessionize": blow},
-            "/root/testdata/sf0.001", skipped=skipped,
-        )
-        assert bench._ORACLE_ORDER_FLIP["flipped"]
-        assert "events_sessionize" in timings  # reserve spent on itself
-        assert reps["events_sessionize"] == [timings["events_sessionize"]]
-        # the blowout's released share funds the plain row: measured, not
-        # the pre-flip "duckdb:plain_q" drop (the VERY_SLOW patch above
-        # puts ALL rows in the 1-rep tier, hence no rep-count assert)
-        assert "plain_q" in timings
-        assert reps["plain_q"]
-        assert skipped == []
-    finally:
-        bench.REGISTRY.pop("plain_q", None)
-        bench._reset_reserve()
-
-
-def test_oracle_pass_order_tier2_cheapest_reserve_first(monkeypatch):
-    """Under a dying budget, cheapest blowout first maximizes the number
-    of tier-2 rows that record a measured rep. (remaining() pinned
-    healthy: the flip case is tested separately.)"""
-    from transilien_api_etl_spark.plans.registry import QuerySpec
-
-    monkeypatch.setattr(bench, "remaining", lambda: 500.0)
-    specs = {
-        n: QuerySpec(name=n, fn=lambda s, d: None, oracle="SELECT 1 AS x",
-                     oracle_heavy=True)
-        for n in bench.BLOWOUT_RESERVE_S
-    }
-    order = bench.oracle_pass_order(specs, bench_variant=False)
-    assert order == [
-        "window_rolling_avg",          # 8 s
-        "asof_join_purchase_click",    # 55 s
-        "events_sessionize",           # 85 s
-    ]
-
-
-def test_oracle_pass_order_reserve_scarce_flip(monkeypatch):
-    """Round 11 (session-4 8-core run): when the oracle pass STARTS with
-    the reserve-withheld headroom already inside the degraded-mode gate,
-    every mid-tier row is doomed to a last-ditch cap or drop while ~148 s
-    of reserve waits for the last tier — that run dropped pretrain/pq_adc
-    and the blowouts then underspent their reserve by ~43 s. The flip
-    runs blowouts FIRST, LARGEST reserve first (each release unlocks the
-    most true budget soonest), mid tier cheapest-first after."""
-    from types import SimpleNamespace as NS
-
-    specs = {
-        "asof_join_purchase_click": NS(bench_oracle=None, oracle_heavy=True),
-        "semdedup_survivors": NS(bench_oracle="select 1", oracle_heavy=False),
-        "events_sessionize": NS(bench_oracle=None, oracle_heavy=True),
-        "window_rolling_avg": NS(bench_oracle=None, oracle_heavy=True),
-        "knn_pq_adc_top10": NS(bench_oracle="select 1", oracle_heavy=False),
-        "docs_segment_dedup": NS(bench_oracle=None, oracle_heavy=False),
-    }
-    bench._reset_reserve()
-    try:
-        # visible headroom 19.9 s < TEARDOWN_MARGIN_S + WARM_CAP_FLOOR_S
-        monkeypatch.setattr(bench, "remaining", lambda: 19.9)
-        order = bench.oracle_pass_order(specs, bench_variant=True)
-        assert order == [
-            "events_sessionize",         # 85 s reserve — largest first
-            "asof_join_purchase_click",  # 55 s
-            "window_rolling_avg",        # 8 s
-            "docs_segment_dedup",        # mid tier cheapest-first after
-            "knn_pq_adc_top10",
-            "semdedup_survivors",
-        ]
-        assert bench._ORACLE_ORDER_FLIP["flipped"]
-    finally:
-        bench._reset_reserve()
-    assert not bench._ORACLE_ORDER_FLIP["flipped"]  # reset hook clears it
-
-
-def test_oracle_pass_order_no_flip_at_gate_or_when_reserve_spent(monkeypatch):
-    """The flip keys on BOTH scarcity and an unspent reserve: at exactly
-    20 s of visible headroom (the degraded-mode gate) the order is the
-    normal one, and below the gate with every blowout share already
-    released the blowouts stay LAST — flipping then would burn a dying
-    budget on the most expensive rows with nothing to release."""
-    from types import SimpleNamespace as NS
-
-    specs = {
-        "asof_join_purchase_click": NS(bench_oracle=None, oracle_heavy=True),
-        "docs_segment_dedup": NS(bench_oracle=None, oracle_heavy=False),
-    }
-    normal = ["docs_segment_dedup", "asof_join_purchase_click"]
-    bench._reset_reserve()
-    try:
-        gate = bench.TEARDOWN_MARGIN_S + bench.WARM_CAP_FLOOR_S
-        monkeypatch.setattr(bench, "remaining", lambda: gate)
-        assert bench.oracle_pass_order(specs, bench_variant=False) == normal
-        assert not bench._ORACLE_ORDER_FLIP["flipped"]
-        monkeypatch.setattr(bench, "remaining", lambda: 1.0)
-        bench.release_reserve("asof_join_purchase_click")
-        assert bench.oracle_pass_order(specs, bench_variant=False) == normal
-        assert not bench._ORACLE_ORDER_FLIP["flipped"]
-    finally:
-        bench._reset_reserve()
-
-
-def test_reserve_is_zero_when_scale_phase_disabled(monkeypatch):
-    """SPARK_GRAFT_SCALE=0 means the blowout tier never runs: holding
-    its reserve would starve the headline phase for nothing."""
-    monkeypatch.setattr(bench, "RUN_SCALE", False)
-    assert bench._init_reserve() == 0.0
-    monkeypatch.setattr(bench, "RUN_SCALE", True)
-    assert bench._init_reserve() == sum(bench.BLOWOUT_RESERVE_S.values())

@@ -406,6 +406,24 @@ def test_upsert_keeps_rows_of_the_null_partition(spark, tmp_path):
     assert got == [("a", None, 2), ("b", None, 1), ("c", "d1", 1)]
 
 
+def test_upsert_keeps_string_partition_that_looks_numeric(spark, tmp_path):
+    """A store whose partition directories look numeric (a yyyyMMdd
+    service day) is read with the batch's schema: the partition column
+    stays a string, so a later non-numeric value is compared as a string
+    instead of aborting the touched semi-join with CAST_INVALID_INPUT."""
+    schema = "key string, p string, version int"
+    path = str(tmp_path / "store")
+    for row in (("a", "20260102", 1), ("b", "x1", 1)):
+        upsert_by_key(
+            spark.createDataFrame([row], schema),
+            path, ["key"], "version", partition_cols=["p"],
+        )
+    store = spark.read.schema(schema).parquet(path)
+    assert dict(store.dtypes)["p"] == "string"
+    got = sorted(tuple(r) for r in store.select("key", "p", "version").collect())
+    assert got == [("a", "20260102", 1), ("b", "x1", 1)]
+
+
 def _feed_dir(tmp_path) -> str:
     d = tmp_path / "gtfs"
     d.mkdir()

@@ -24,13 +24,12 @@ from transilien_api_etl_spark.plans.registry import register
 from transilien_api_etl_spark.scale import KEY_STRIDE
 from transilien_api_etl_spark.session import ensure_query_confs
 
-# Reduced-corpus bench twins for the two oracle_heavy blowout rows
+# Reduced-corpus bench twins for the two 25-100× Spark-favoring events rows
 # (round 12, VERDICT r11 task 1 — the oracle pass must COMPLETE on a
 # 1.3×-slower box). Their DuckDB oracles were the budget's largest fixed
 # lines: sessionize 32-85 s and the LATERAL as-of 23-56 s at the 10 M-event
-# cache, each bankrolled by a BLOWOUT_RESERVE_S share that starved every
-# earlier phase ~140 s sooner. The scale cache replicates events with
-# event_id += replica·KEY_STRIDE AND user_id += replica·10⁶ (scale.py), so
+# cache. The scale cache replicates events with event_id +=
+# replica·KEY_STRIDE AND user_id += replica·10⁶ (scale.py), so
 # an event_id bound keeps the first _EV_BENCH_REPLICA_CAP replicas as
 # COMPLETE per-user event histories — sessions/matches inside the kept
 # replicas are exactly what the full corpus computes for them. Both
@@ -142,10 +141,6 @@ def events_sliding_10m_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lag-gap + running-sum recipe; one shuffle, single Window node.",
     tags=("events", "session"),
     bench=True,
-    # oracle measured 47-53 s at 60 M rows vs sub-2 s Spark (BASELINE.md
-    # rounds 7-9): timed last in the bench oracle pass; a capped lower
-    # bound is decisive (ratio < 0.1).
-    oracle_heavy=True,
     oracle="""
 WITH g AS (
   SELECT user_id, ts, value, event_id,
@@ -247,10 +242,6 @@ def events_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fan-out even on hot keys (oracle: LATERAL ... LIMIT 1).",
     tags=("events", "asof"),
     bench=True,
-    # oracle (LATERAL ... LIMIT 1) measured 23-50 s at 60 M rows vs
-    # sub-1 s Spark: timed last in the bench oracle pass (see
-    # events_sessionize).
-    oracle_heavy=True,
     oracle="""
 SELECT p.event_id, p.user_id, p.ts AS purchase_ts,
        c.event_id AS click_event_id, c.ts AS click_ts,

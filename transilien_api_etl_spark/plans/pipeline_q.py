@@ -43,9 +43,9 @@ _STOP_SQL = "'the','a','of','and','to','in','is'"
 
 # Reduced-corpus bench twin bound for pretrain_corpus_report (round 12,
 # VERDICT r11 task 1 — the oracle pass must complete on a slower box): the
-# full 1 M-doc oracle measured 12-13 s (its ORACLE_EST said 5), and the
-# driver's r11 run holed it. Keep the first 50 of the 200 doc replicas
-# (250 k docs, the docs_segment_dedup bound); no-op on driver testdata.
+# full 1 M-doc oracle measured 12-13 s, and a round-11 bench run holed
+# it. Keep the first 50 of the 200 doc replicas (250 k docs, the
+# docs_segment_dedup bound); no-op on the small test SFs.
 from transilien_api_etl_spark.scale import KEY_STRIDE as _KEY_STRIDE
 
 _PT_BENCH_DOC_BOUND = 50 * _KEY_STRIDE

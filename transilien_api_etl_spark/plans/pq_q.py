@@ -143,13 +143,6 @@ def embeddings_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("vectors", "knn", "quantize", "pq"),
     bench=True,
     bench_heavy=True,
-    # 100 s (round 12; was 60): the 200 k twin oracle's quiet wall is ~9 s,
-    # but this round's box showed 4-7x storm windows and one in-protocol
-    # run hit the 60 s cap on a ~9 s oracle — a 100 s cap keeps a
-    # moderately-degraded box measuring (the budget machinery still shrinks
-    # it when headroom is dying, and the r11 minhash/semdedup caps are 120
-    # for the same reason).
-    oracle_cap_s=100.0,
     oracle=f"""
 WITH {_CTE}
 SELECT a0.vec_id, round({_ADC_SUM}, 6) AS adc_d2

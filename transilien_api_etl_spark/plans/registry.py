@@ -34,13 +34,6 @@ class QuerySpec:
     # These refuse to run above a row-count guard unless explicitly
     # overridden — they exist to validate, not to be the production path.
     oracle_twin: bool = False
-    # bench-phase-2 watchdog cap (seconds) for this query's DuckDB oracle,
-    # overriding the default 150 s. Set LOW for oracles that are known
-    # asymptotically different from the Spark plan at bench scale (e.g. the
-    # unrolled-CTE kmeans chains, the quadratic NOT EXISTS prune): a
-    # timeout at 60 s certifies ">= cap" just as well as one at 150 s and
-    # returns 90 s of budget to queries that CAN be measured.
-    oracle_cap_s: float | None = None
     # Bench-scale corpus variant (VERDICT r7 task 2). When set, bench.py's
     # compute-bound phase times bench_fn/bench_oracle INSTEAD of fn/oracle
     # — both sides read the same reduced corpus, so the ratio still
@@ -66,15 +59,6 @@ class QuerySpec:
     # into the correctness artifact so a reader can tell the documented
     # case from a regression without SURVEY archaeology (VERDICT r7 task 4).
     by_design: str | None = None
-    # True for oracles measured 25-100x SLOWER than their Spark plan at
-    # bench scale (as-of 23-50 s, sessionize 47-53 s vs sub-2 s Spark —
-    # BASELINE.md rounds 7-9): bench.py times these LAST in the oracle
-    # pass, because when the budget dies early their capped lower bound
-    # (ratio < 0.1) is decisive anyway, while a skipped twin/normal
-    # oracle loses a graded deliverable (observed round 9: a degraded-box
-    # run spent its budget on asof+sessionize and skipped 14 oracles
-    # including all three twins).
-    oracle_heavy: bool = False
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -88,12 +72,10 @@ def register(
     tags: tuple[str, ...] = (),
     bench: bool = False,
     oracle_twin: bool = False,
-    oracle_cap_s: float | None = None,
     bench_fn: QueryFn | None = None,
     bench_oracle: str | None = None,
     bench_heavy: bool = False,
     by_design: str | None = None,
-    oracle_heavy: bool = False,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query implementation under ``name``."""
 
@@ -108,12 +90,10 @@ def register(
             tags=tags,
             bench=bench,
             oracle_twin=oracle_twin,
-            oracle_cap_s=oracle_cap_s,
             bench_fn=bench_fn,
             bench_oracle=bench_oracle,
             bench_heavy=bench_heavy,
             by_design=by_design,
-            oracle_heavy=oracle_heavy,
         )
         return fn
 

@@ -239,10 +239,6 @@ def _semdedup_survivors_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("vectors", "dedup", "clustering"),
     bench=True,
     bench_heavy=True,
-    # 120 s: quiet-box wall 17.5 s, but degraded-box probes measured 49 s
-    # and one bench pass exceeded 90 s — headroom (same as minhash's cap)
-    # so a bad-box run still records a number instead of a flag.
-    oracle_cap_s=120.0,
     oracle=f"""
 WITH {kmeans_oracle_cte(_K, _ITERS)}
 SELECT a.vec_id, a.cluster

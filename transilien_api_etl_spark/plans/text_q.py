@@ -515,11 +515,6 @@ def _docs_minhash_candidates_bench(spark: SparkSession, sf_dir: str) -> DataFram
     tags=("dedup", "lsh"),
     oracle=_minhash_oracle_sql(num_hashes=16, band_size=4, max_bucket_size=_MINHASH_MAX_BUCKET),
     bench=True,
-    # 120 s: the 500 k twin oracle's quiet-box wall is 33-57 s, but under
-    # host contention it measured 102 s (round 9) — a cap at 60 turns a
-    # bad-box run's measured ratio back into a lower-bound flag for the
-    # cost of nothing (the cap only bounds worst-case budget spend).
-    oracle_cap_s=120.0,
     bench_fn=_docs_minhash_candidates_bench,
     bench_oracle=_minhash_oracle_sql(
         num_hashes=16,

@@ -58,31 +58,26 @@ def upsert_by_key(
     less than a second source run. The read-back slice is
     localCheckpoint-ed too, so reading and overwriting the same path in
     one job is safe.
+
+    The store is read with the batch's schema, not an inferred one: a
+    partition column keeps the batch's type (a ``yyyyMMdd`` service day
+    stays a string, so a later non-numeric value still compares), an
+    empty pre-created directory reads as an empty store, and a batch
+    that adds a column reads NULL for it in the old rows.
     """
     from pyspark.errors import AnalysisException
-
-    from transilien_api_etl_spark.operators.incremental import _holds_no_data
 
     spark = df.sparkSession
     existing = None
     try:
-        existing = spark.read.parquet(path)
+        existing = spark.read.schema(df.schema).parquet(path)
     except AnalysisException as e:
-        # "First write" has two shapes: the path does not exist yet
-        # (PATH_NOT_FOUND) or a caller pre-created an EMPTY directory —
-        # e.g. tempfile.mkdtemp — which raises UNABLE_TO_INFER_SCHEMA
-        # (the exact first-batch divergence that broke the incremental
-        # dedup store in round 4; tolerated only when the dir holds
-        # nothing but committer artifacts). Anything else (a schema/
-        # column mismatch, a dir with real content that still can't be
-        # read) must surface: swallowing it would make `merged = df`
-        # alone and the overwrite below would silently drop every
-        # existing key not present in the incoming batch.
+        # Only a missing path is a first write. Anything else (a dir with
+        # content that can't be read) must surface: swallowing it would
+        # make `merged = df` alone and the overwrite below would silently
+        # drop every existing key not present in the incoming batch.
         cond = getattr(e, "getCondition", getattr(e, "getErrorClass", lambda: None))()
-        cond = cond or ""
-        if cond != "PATH_NOT_FOUND" and not (
-            cond == "UNABLE_TO_INFER_SCHEMA" and _holds_no_data(spark, path)
-        ):
+        if cond != "PATH_NOT_FOUND":
             raise
     if existing is None:
         merged = df
