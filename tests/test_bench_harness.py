@@ -69,9 +69,10 @@ def test_time_duckdb_uses_the_spark_side_rep_schedule(monkeypatch):
     the plain median of 3 — so the estimator's bias cancels in the ratio
     instead of favoring either engine."""
     monkeypatch.setattr(bench, "remaining", lambda: 1e9)
+    monkeypatch.setattr(bench, "HEAVY_ROWS", frozenset({"heavy_q"}))
     specs = {
         "light_q": _oracle_only_spec("light_q"),
-        "heavy_q": _oracle_only_spec("heavy_q", bench_heavy=True),
+        "heavy_q": _oracle_only_spec("heavy_q"),
     }
     timings, reps = bench.time_duckdb(specs, SF_SMOKE, skipped=[])
     assert len(reps["light_q"]) == bench.LIGHT_REPS["n_reps"]
@@ -100,7 +101,10 @@ def _grade_payload(n_queries=20, skipped=None):
             "ratio_median": 1.04,
             "bucketed_spark": {"q3_shipping_priority": 1.5, "q5_local_supplier": 1.2},
             "bucketed_ratio": {"q3_shipping_priority": 1.952, "q5_local_supplier": 1.687},
-            "variants": ["docs_minhash_candidates", "knn_pq_adc_top10", "semdedup_survivors"],
+            "variants": {
+                "docs_minhash_candidates": "documents: doc_id < 25·2^33",
+                "q1_pricing_summary": "lineitem ×16",
+            },
             "skipped": skipped or [],
         },
         "elapsed_s": 744.1,
@@ -344,7 +348,7 @@ def test_time_duckdb_runs_oracles_in_name_order(monkeypatch):
     monkeypatch.setattr(bench, "_guarded_run", fake_guarded)
     names = ["semdedup_survivors", "asof_join_purchase_click",
              "events_sessionize", "docs_segment_dedup"]
-    specs = {n: NS(oracle=n, bench_oracle=None, bench_heavy=False) for n in names}
+    specs = {n: NS(fn=None, oracle=n) for n in names}
     timings, _ = bench.time_duckdb(specs, "/nowhere", skipped=[], con=object())
     assert list(dict.fromkeys(ran)) == sorted(names)
     assert sorted(timings) == sorted(names)
@@ -443,7 +447,7 @@ def _fake_paired_harness(
     protocol = {} if defaults else {"n_reps": len(duck_deltas), "steady_k": 3}
     out = bench.time_paired(
         specs, spark=None, data_dir="/nowhere", con=None,
-        skipped=[], bench_variant=False, **protocol,
+        skipped=[], twins=False, **protocol,
     )
     return out, log
 
@@ -540,7 +544,7 @@ def test_time_paired_real_query_end_to_end(spark):
     spec = bench.REGISTRY["q1_pricing_summary"]
     spark_t, sreps, duck_t, dreps, ratio_t, rreps = bench.time_paired(
         {"q1_pricing_summary": spec}, spark, SF_SMOKE,
-        con, skipped=[], n_reps=3, steady_k=3, bench_variant=False,
+        con, skipped=[], n_reps=3, steady_k=3, twins=False,
     )
     con.close()
     assert spark_t["q1_pricing_summary"] > 0
@@ -588,7 +592,7 @@ def test_time_paired_binder_error_skips_row_with_flag(monkeypatch, spark):
     skipped = []
     out = bench.time_paired(
         {"broken_paired_q": spec}, spark, SF_SMOKE, con,
-        skipped=skipped, n_reps=2, steady_k=1, bench_variant=False,
+        skipped=skipped, n_reps=2, steady_k=1, twins=False,
     )
     con.close()
     assert all(not d for d in out)  # all six result dicts empty
@@ -712,7 +716,7 @@ def _budget_paired_harness(monkeypatch, remaining_s):
     skipped = []
     out = bench.time_paired(
         {"fake_q": spec}, spark=None, data_dir="/nowhere", con=None,
-        skipped=skipped, n_reps=5, steady_k=3, n_warm=1, bench_variant=False,
+        skipped=skipped, n_reps=5, steady_k=3, n_warm=1, twins=False,
     )
     return out, log, skipped
 

@@ -17,33 +17,23 @@ table (bench.QVEC_SETUP) and the oracle's q-CTE is rewritten to read it
 
 from __future__ import annotations
 
-import importlib.util
-import os
-
 import pytest
 
+import bench as bench_mod
 import transilien_api_etl_spark.plans  # noqa: F401 — populate REGISTRY
 from transilien_api_etl_spark.plans.registry import REGISTRY
-
-_spec = importlib.util.spec_from_file_location(
-    "bench_mod", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-)
-bench_mod = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(bench_mod)
 
 
 def test_markers_match_current_oracle_text():
     for name, marker in bench_mod.QVEC_HOIST.items():
-        spec = REGISTRY[name]
-        sql = spec.bench_oracle or spec.oracle
+        sql = bench_mod.timed_query(name, REGISTRY[name])[1]
         assert marker in sql, f"{name}: hoist marker drifted from oracle text"
 
 
 @pytest.mark.parametrize("name", sorted(bench_mod.QVEC_HOIST))
 def test_hoisted_sql_value_identical(duck, name):
     duck.execute(bench_mod.QVEC_SETUP)
-    spec = REGISTRY[name]
-    sql = spec.bench_oracle or spec.oracle
+    sql = bench_mod.timed_query(name, REGISTRY[name])[1]
     original = duck.execute(sql).fetchall()
     hoisted = duck.execute(bench_mod._hoist_qvec(name, sql)).fetchall()
     assert len(original) > 0

@@ -1,141 +1,265 @@
-"""Bench-variant contract (VERDICT r7 tasks 1+2, SURVEY §3.12f).
+"""Bench-twin contract (bench.TWINS, SURVEY §3.12f).
 
-A QuerySpec may carry a reduced-corpus ``bench_fn``/``bench_oracle`` twin
-that bench.py's compute-bound phase times instead of the registered pair.
-The contract that keeps the graded ratio honest:
+A twin is the changed copy of a graded row that bench.py's scale phase
+times in place of the registered query: the registered fn and oracle over
+declared input-table transforms (Amplify, Below), or an explicit (fn, sql)
+pair. The contract that keeps the graded ratio honest:
 
-1. the variant is semantically IDENTICAL to the registered query on every
-   un-amplified (driver testdata) corpus — the reduction may only bite on
-   the scale cache's shifted key space (doc_id += replica * 2^33);
-2. Spark and DuckDB variants apply the SAME reduction, so the ratio still
-   compares equal computations;
-3. the reduction actually bites on amplified keys (otherwise the budget
-   claim is fiction); and
-4. every bench_heavy row is bench=True (phase ordering only applies to
-   rows the bench runs) and every variant row is bench_heavy (a light row
-   never needs one).
+1. both engines apply the same twin: on sf0.001 and sf0.01 the Spark twin
+   returns the DuckDB twin's rows;
+2. a Below twin is the registered query on driver testdata (every key is
+   below KEY_STRIDE there), and on a copy strided like scale.py it does
+   remove rows while parity still holds;
+3. every TWINS and HEAVY_ROWS row is a bench row with an oracle.
+
+The generic tests run over every TWINS entry; the row-specific tests below
+them pin the known relations of individual twins (scaled sums of the
+amplified rows, the kNN replica expansion).
 """
 
 from __future__ import annotations
 
+import dataclasses
+import math
+
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
+import bench
 import transilien_api_etl_spark.plans  # noqa: F401 — populate REGISTRY
+from transilien_api_etl_spark import io as io_mod
+from transilien_api_etl_spark.io import load_table
+from transilien_api_etl_spark.plans.quantize_q import RERANK_CANDIDATES
 from transilien_api_etl_spark.plans.registry import REGISTRY
-from transilien_api_etl_spark.plans.text_q import (
-    _BENCH_DOC_BOUND,
-    _BENCH_REPLICA_CAP,
-    _minhash_candidate_pairs,
-)
-from transilien_api_etl_spark.scale import KEY_STRIDE
+from transilien_api_etl_spark.scale import KEY_STRIDE, _scale_table
 
 from .conftest import SF_ORACLE, SF_SMOKE
 
-VARIANT_SPECS = [
-    s for s in REGISTRY.values() if s.bench_fn is not None or s.bench_oracle is not None
-]
+TWIN_ROWS = sorted(bench.TWINS)
+BELOW_ROWS = sorted(
+    n for n, t in bench.TWINS.items()
+    if any(isinstance(x, bench.Below) for x in t.tables.values())
+)
+KNN_ROWS = ["knn_sq8_top10", "knn_rerank_top10"]
+N = bench.KNN_AMPLIFY
+
+# Sums of doubles over ×N rows add in a different order on each engine, so
+# a sum rounded to 2 dp may land a cent or two apart; every other value of
+# every twin matches exactly.
+_SUM_TOL = {"q1_pricing_summary": 0.02, "events_tumbling_1h": 0.02}
 
 
-# Variant rows that are NOT bench_heavy — the "every variant row is
-# bench_heavy" rule below is about Spark-side multi-GB-intermediate twins:
-# - parity/amplified twins (knn_rerank_top10, knn_sq8_top10,
-#   docs_word_freq_top20, docs_token_stats, q1_pricing_summary,
-#   events_tumbling_1h): both engines replicate the corpus inline so the
-#   graded number clears the sub-jitter floor / amortizes the per-pass
-#   constant;
-# - round-12 ORACLE-side reduction twins (events_sessionize,
-#   asof_join_purchase_click, window_rolling_avg, docs_segment_dedup,
-#   pretrain_corpus_report): the Spark walls are light, but their DuckDB
-#   oracles were 5-85 s budget lines on the scale cache — the reduction
-#   keeps the first N complete replicas on BOTH engines.
-_LIGHT_VARIANTS = {
-    "knn_rerank_top10",
-    "knn_sq8_top10",
-    "docs_word_freq_top20",
-    "docs_token_stats",
-    "q1_pricing_summary",
-    "events_tumbling_1h",
-    "events_sessionize",
-    "asof_join_purchase_click",
-    "window_rolling_avg",
-    "docs_segment_dedup",
-    "pretrain_corpus_report",
-}
+@pytest.fixture(scope="module")
+def duck_at():
+    cons = {}
+
+    def get(sf_dir):
+        if sf_dir not in cons:
+            cons[sf_dir] = bench._duck_connect(sf_dir)
+        return cons[sf_dir]
+
+    yield get
+    for con in cons.values():
+        con.close()
+
+
+def _spark_twin(spark, name, sf_dir, twins=True) -> pd.DataFrame:
+    fn, _, tables = bench.timed_query(name, REGISTRY[name], twins)
+    with bench.twin_inputs(sf_dir, tables):
+        return fn(spark, sf_dir).toPandas()
+
+
+def _duck_twin(con, name, sf_dir, twins=True) -> pd.DataFrame:
+    _, sql, tables = bench.timed_query(name, REGISTRY[name], twins)
+    with bench.twin_inputs(sf_dir, tables, con):
+        return con.execute(bench._hoist_qvec(name, sql)).df()
+
+
+def _naive_utc(v):
+    # DuckDB reads Spark-written (UTC-adjusted) parquet timestamps as
+    # TIMESTAMPTZ; Spark hands back naive UTC ones.
+    if isinstance(v, pd.Timestamp) and v.tzinfo is not None:
+        return v.tz_convert("UTC").tz_localize(None)
+    return v
+
+
+def _rows(pdf: pd.DataFrame, cols) -> list[tuple]:
+    return [tuple(map(_naive_utc, r)) for r in pdf[cols].itertuples(index=False)]
+
+
+def _assert_same_rows(got: pd.DataFrame, want: pd.DataFrame, tol: float = 0.0):
+    """Same columns and the same rows in the same (ORDER BY) order; floats
+    within ``tol``, NULL/NaN equal to each other."""
+    assert sorted(got.columns) == sorted(want.columns)
+    cols = list(got.columns)
+    a, b = _rows(got, cols), _rows(want, cols)
+    assert len(a) == len(b)
+    for ra, rb in zip(a, b):
+        for x, y in zip(ra, rb):
+            if pd.isna(x) or pd.isna(y):
+                assert pd.isna(x) and pd.isna(y), (ra, rb)
+            elif isinstance(x, float) or isinstance(y, float):
+                assert math.isclose(x, y, rel_tol=1e-12, abs_tol=tol), (ra, rb)
+            else:
+                assert x == y, (ra, rb)
+
+
+# ---- generic tests over TWINS -------------------------------------------
 
 
 def test_variant_rows_are_heavy_bench_rows():
-    assert VARIANT_SPECS, "minhash variant should be registered"
-    for s in VARIANT_SPECS:
-        assert s.bench, s.name
-        assert s.bench_heavy or s.name in _LIGHT_VARIANTS, s.name
-        # a variant must replace BOTH sides or the ratio compares
-        # different corpora
-        assert s.bench_fn is not None and s.bench_oracle is not None, s.name
-    for s in REGISTRY.values():
-        if s.bench_heavy:
-            assert s.bench, f"{s.name}: bench_heavy without bench=True"
+    """Every TWINS and HEAVY_ROWS row is a bench row with an oracle (the
+    scale phase only times bench rows, and a ratio needs a denominator)."""
+    assert bench.HEAVY_ROWS and bench.TWINS
+    for name in set(bench.TWINS) | bench.HEAVY_ROWS:
+        spec = REGISTRY[name]
+        assert spec.bench and spec.oracle, name
+    for twin in bench.TWINS.values():
+        assert bench.describe_twin(twin)
+
+
+@pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_ORACLE])
+@pytest.mark.parametrize("name", TWIN_ROWS)
+def test_spark_twin_equals_duckdb_twin(spark, duck_at, name, sf_dir):
+    got = _spark_twin(spark, name, sf_dir)
+    want = _duck_twin(duck_at(sf_dir), name, sf_dir)
+    assert len(got) > 0
+    _assert_same_rows(got, want, _SUM_TOL.get(name, 0.0))
+
+
+@pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_ORACLE])
+@pytest.mark.parametrize("name", BELOW_ROWS)
+def test_below_twin_is_the_registered_query_on_driver_data(
+    spark, duck_at, name, sf_dir
+):
+    assert _spark_twin(spark, name, sf_dir).equals(
+        _spark_twin(spark, name, sf_dir, twins=False)
+    )
+    con = duck_at(sf_dir)
+    assert _duck_twin(con, name, sf_dir).equals(
+        _duck_twin(con, name, sf_dir, twins=False)
+    )
+
+
+# Rows kept from each source table before striding: enough for every twin
+# to return rows, few enough that the replicated copy stays small.
+_STRIDED_ROWS = {"events": 200, "documents": 40, "embeddings": 20}
+
+
+@pytest.fixture(scope="module")
+def strided_dir(spark, tmp_path_factory):
+    """A copy of sf0.001's Below tables replicated by scale.py, with one
+    replica more than the largest bound keeps, so every Below drops one."""
+    base = tmp_path_factory.mktemp("strided")
+    src, out = str(base / "src"), str(base / "strided")
+    for table, n_rows in _STRIDED_ROWS.items():
+        load_table(spark, SF_SMOKE, table).limit(n_rows).write.parquet(
+            f"{src}/{table}.parquet"
+        )
+        replicas = 1 + max(
+            t.bound // KEY_STRIDE
+            for tw in bench.TWINS.values()
+            for name, t in tw.tables.items()
+            if name == table and isinstance(t, bench.Below)
+        )
+        _scale_table(spark, src, table, replicas, partitions=4).write.parquet(
+            f"{out}/{table}.parquet"
+        )
+    return out
+
+
+@pytest.mark.parametrize("name", BELOW_ROWS)
+def test_below_bites_on_strided_copy_and_parity_holds(
+    spark, duck_at, strided_dir, name
+):
+    (table, below), = bench.TWINS[name].tables.items()
+    full = load_table(spark, strided_dir, table)
+    with io_mod.table_transforms(strided_dir, {table: below}):
+        kept = load_table(spark, strided_dir, table)
+        assert 0 < kept.count() < full.count()
+        plan = kept._jdf.queryExecution().executedPlan().toString()
+        assert "PushedFilters" in plan and below.col in plan
+    got = _spark_twin(spark, name, strided_dir)
+    want = _duck_twin(duck_at(strided_dir), name, strided_dir)
+    assert len(got) > 0
+    _assert_same_rows(got, want)
+
+
+# ---- row-specific checks ------------------------------------------------
+
+
+@pytest.mark.parametrize("name", ["docs_minhash_candidates"])
+def test_bench_py_selects_variant_only_in_variant_mode(spark, name):
+    """time_spark applies a row's TWINS transforms only in twin mode."""
+    seen = []
+
+    class _Rows:
+        def count(self):
+            return 0
+
+    def probe(spark_, sf_dir):
+        seen.append(io_mod._table_transform(sf_dir, "documents"))
+        return _Rows()
+
+    spec = dataclasses.replace(REGISTRY[name], fn=probe)
+    bench.time_spark({name: spec}, spark, SF_SMOKE, twins=True)
+    n_twin = len(seen)
+    bench.time_spark({name: spec}, spark, SF_SMOKE, twins=False)
+    below = bench.TWINS[name].tables["documents"]
+    assert seen[:n_twin] == [below] * n_twin
+    assert seen[n_twin:] and set(seen[n_twin:]) == {None}
+    assert io_mod._table_transform(SF_SMOKE, "documents") is None
 
 
 def test_minhash_bench_fn_identical_on_driver_corpus(spark):
-    s = REGISTRY["docs_minhash_candidates"]
-    a = s.fn(spark, SF_SMOKE).collect()
-    b = s.bench_fn(spark, SF_SMOKE).collect()
-    assert a == b and len(a) > 0
+    name = "docs_minhash_candidates"
+    got = _spark_twin(spark, name, SF_SMOKE)
+    assert len(got) > 0 and got.equals(_spark_twin(spark, name, SF_SMOKE, False))
 
 
-def test_minhash_bench_oracle_identical_on_driver_corpus(duck):
-    s = REGISTRY["docs_minhash_candidates"]
-    assert duck.execute(s.oracle).fetchall() == duck.execute(s.bench_oracle).fetchall()
+def test_minhash_bench_oracle_identical_on_driver_corpus(duck_at):
+    name, con = "docs_minhash_candidates", duck_at(SF_ORACLE)
+    assert _duck_twin(con, name, SF_ORACLE).equals(
+        _duck_twin(con, name, SF_ORACLE, twins=False)
+    )
+
+
+def _assert_whole_replica_bound(name, table, col, replicas):
+    below = bench.TWINS[name].tables[table]
+    assert below == bench.Below(col, replicas * KEY_STRIDE)
+    assert f"WHERE {col} < {replicas * KEY_STRIDE}" in below.sql("t")
 
 
 def test_minhash_bench_oracle_embeds_same_bound():
-    s = REGISTRY["docs_minhash_candidates"]
-    assert f"doc_id < {_BENCH_DOC_BOUND}" in s.bench_oracle
-    assert _BENCH_DOC_BOUND == _BENCH_REPLICA_CAP * KEY_STRIDE
+    _assert_whole_replica_bound("docs_minhash_candidates", "documents", "doc_id", 25)
 
-
-# ---- round-9 twins: semdedup_survivors / knn_pq_adc_top10 --------------
-# Same contract as minhash: at driver SFs the vec_id bound is a no-op, the
-# SQL k-schedule subquery degrades to k=8, and the PQ training-sample
-# modulus degrades to 1 — so fn ≡ bench_fn AND oracle ≡ bench_oracle
-# value-for-value, which is what makes the reduced-corpus graded ratio a
-# timing of the SAME computation, not a different one.
 
 _R9_TWINS = ["semdedup_survivors", "knn_pq_adc_top10"]
 
 
 @pytest.mark.parametrize("name", _R9_TWINS)
 def test_r9_twin_bench_fn_identical_on_driver_corpus(spark, name):
-    s = REGISTRY[name]
-    a = s.fn(spark, SF_SMOKE).collect()
-    b = s.bench_fn(spark, SF_SMOKE).collect()
-    assert a == b and len(a) > 0
+    got = _spark_twin(spark, name, SF_SMOKE)
+    assert len(got) > 0 and got.equals(_spark_twin(spark, name, SF_SMOKE, False))
 
 
 @pytest.mark.parametrize("name", _R9_TWINS)
-def test_r9_twin_bench_oracle_identical_on_driver_corpus(duck, name):
-    s = REGISTRY[name]
-    assert duck.execute(s.oracle).fetchall() == duck.execute(s.bench_oracle).fetchall()
+def test_r9_twin_bench_oracle_identical_on_driver_corpus(duck_at, name):
+    con = duck_at(SF_ORACLE)
+    assert _duck_twin(con, name, SF_ORACLE).equals(
+        _duck_twin(con, name, SF_ORACLE, twins=False)
+    )
 
 
 def test_r9_twin_bench_oracles_embed_their_bounds():
-    from transilien_api_etl_spark.plans.pq_q import (
-        _BENCH_VEC_BOUND as PQ_BOUND,
-    )
-    from transilien_api_etl_spark.plans.semdedup_q import (
-        _BENCH_VEC_BOUND as SD_BOUND,
-    )
-
-    assert f"vec_id < {SD_BOUND}" in REGISTRY["semdedup_survivors"].bench_oracle
-    assert f"vec_id < {PQ_BOUND}" in REGISTRY["knn_pq_adc_top10"].bench_oracle
-    # the bound must sit on a replica edge of the scale cache's key stride
-    assert SD_BOUND % KEY_STRIDE == 0 and PQ_BOUND % KEY_STRIDE == 0
+    _assert_whole_replica_bound("semdedup_survivors", "embeddings", "vec_id", 48)
+    _assert_whole_replica_bound("knn_pq_adc_top10", "embeddings", "vec_id", 100)
 
 
 def test_r9_twin_bound_bites_and_pushes_down(spark, tmp_path):
-    """On a corpus with scale.py's replica stride, the twin keeps exactly
-    the replicas below the cap, the derived-k schedule follows the
+    """On a corpus with scale.py's replica stride, the SemDeDup twin keeps
+    exactly the replicas below its bound, the derived k follows the
     FILTERED count, and the bound reaches the parquet scan."""
     from transilien_api_etl_spark.plans import semdedup_q
 
@@ -154,29 +278,26 @@ def test_r9_twin_bound_bites_and_pushes_down(spark, tmp_path):
     amp_dir = str(tmp_path / "amp")
     emb.write.parquet(f"{amp_dir}/embeddings.parquet")
 
-    km, k, _ = semdedup_q._kmeans_df(spark, amp_dir, semdedup_q._BENCH_VEC_BOUND)
+    below = bench.TWINS["semdedup_survivors"].tables["embeddings"]
+    with io_mod.table_transforms(amp_dir, {"embeddings": below}):
+        km, k, _ = semdedup_q._kmeans_df(spark, amp_dir)
     ids = [r.vec_id for r in km.select("vec_id").collect()]
-    assert ids and all(i < semdedup_q._BENCH_VEC_BOUND for i in ids)
-    assert len(ids) == 10  # only replica 0 survives a 64-replica bound
-    assert k == 8  # schedule derives from the filtered count, not 30 rows
+    assert len(ids) == 10 and all(i < below.bound for i in ids)  # replica 0 only
+    assert k == 8
     plan = km._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "vec_id" in plan
 
 
 def test_minhash_bound_bites_on_amplified_keys(spark, tmp_path):
     """On a corpus whose doc_ids carry scale.py's replica stride, the
-    variant keeps exactly the replicas below the cap — and the filter is
-    visible in the scan (pushed, not a post-shuffle afterthought)."""
-    # replica steps derived from the cap: one replica strictly inside the
-    # bound (so the capped run still FORMS pairs) and several outside it
+    minhash twin keeps exactly the replicas below its bound."""
+    below = bench.TWINS["docs_minhash_candidates"].tables["documents"]
+    step = below.bound // KEY_STRIDE - 1  # one replica inside, two outside
     docs = (
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
         .limit(10)
         .crossJoin(
-            F.broadcast(
-                spark.range(0, 200, _BENCH_REPLICA_CAP - 1)
-                .select(F.col("id").alias("rep"))
-            )
+            F.broadcast(spark.range(0, 3 * step, step).select(F.col("id").alias("rep")))
         )
         .select(
             (F.col("doc_id") + F.col("rep") * F.lit(KEY_STRIDE)).alias("doc_id"),
@@ -189,275 +310,14 @@ def test_minhash_bound_bites_on_amplified_keys(spark, tmp_path):
     amp_dir = str(tmp_path / "amp")
     docs.write.parquet(f"{amp_dir}/documents.parquet")
 
-    full = _minhash_candidate_pairs(spark, amp_dir)
-    capped = _minhash_candidate_pairs(spark, amp_dir, doc_id_bound=_BENCH_DOC_BOUND)
-    full_ids = {r.id_a for r in full.collect()} | {r.id_b for r in full.collect()}
-    capped_rows = capped.collect()
-    capped_ids = {r.id_a for r in capped_rows} | {r.id_b for r in capped_rows}
-    assert any(i >= _BENCH_DOC_BOUND for i in full_ids), "out-of-bound replicas are near-dups"
-    assert capped_ids and all(i < _BENCH_DOC_BOUND for i in capped_ids)
-    plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "doc_id" in plan
+    def pair_ids(twins):
+        pdf = _spark_twin(spark, "docs_minhash_candidates", amp_dir, twins)
+        return set(pdf.id_a) | set(pdf.id_b)
 
+    full_ids, capped_ids = pair_ids(False), pair_ids(True)
+    assert any(i >= below.bound for i in full_ids), "out-of-bound replicas are near-dups"
+    assert capped_ids and all(i < below.bound for i in capped_ids)
 
-@pytest.mark.parametrize("name", ["docs_minhash_candidates"])
-def test_bench_py_selects_variant_only_in_variant_mode(spark, name):
-    import bench
-
-    s = REGISTRY[name]
-    seen = []
-
-    class Probe:
-        def __init__(self, which):
-            self.which = which
-
-        def __call__(self, spark_, sf_dir):
-            seen.append(self.which)
-
-            class _N:
-                def count(self_inner):
-                    return 0
-
-            return _N()
-
-    probe_spec = type(s)(
-        name=s.name, fn=Probe("fn"), bench_fn=Probe("bench_fn"), bench=True
-    )
-    bench.time_spark({name: probe_spec}, spark, SF_SMOKE, bench_variant=True)
-    bench.time_spark({name: probe_spec}, spark, SF_SMOKE, bench_variant=False)
-    assert seen[0] == "bench_fn" and "fn" in seen[len(seen) // 2 :]
-
-
-# ---- round-11/12 parity variant: knn_rerank_top10 ----------------------
-# Inverted twin relationship (VERDICT r10 task 2): fn IS the approximate
-# pipeline (SQ8 candidates -> exact re-rank), the registered oracle is the
-# EXACT kNN truth, and the bench twin mirrors the pipeline in DuckDB —
-# since round 12 over the ×_KNN_AMPLIFY inline-replicated corpus on BOTH
-# engines (VERDICT r11 task 2). The recall-1.0 contract survives: the
-# twin's output must be exactly the replica-expansion of the EXACT
-# oracle's top rows on driver data (replicas of one vector score equal;
-# expansion preserves the (score DESC, id) order).
-
-
-def test_rerank_pipeline_twin_is_replica_expansion_of_exact(duck):
-    from transilien_api_etl_spark.plans.quantize_q import _KNN_AMPLIFY
-
-    s = REGISTRY["knn_rerank_top10"]
-    exact = duck.execute(s.oracle).fetchall()
-    twin = duck.execute(s.bench_oracle).fetchall()
-    assert len(exact) == 10
-    expected = [
-        (i * _KNN_AMPLIFY + r, c) for i, c in exact for r in range(_KNN_AMPLIFY)
-    ][:10]
-    assert [(int(i), float(c)) for i, c in twin] == [
-        (int(i), float(c)) for i, c in expected
-    ]
-
-
-def test_rerank_candidate_budget_embedded():
-    from transilien_api_etl_spark.plans.quantize_q import RERANK_CANDIDATES
-
-    s = REGISTRY["knn_rerank_top10"]
-    assert f"LIMIT {RERANK_CANDIDATES}" in s.bench_oracle
-
-
-# ---- round-11 amplified variant: docs_word_freq_top20 -------------------
-# Third variant class (after reduced and parity): the twin AMPLIFIES the
-# corpus inline — every doc replicated _WF_AMPLIFY x on both engines
-# before the tokenizer — so the graded ratio measures the plan instead of
-# the sub-jitter 0.1 s floor the row hovered on for four rounds. The
-# deterministic contract: twin output == fn output with every count
-# scaled by exactly _WF_AMPLIFY (replication adds no words; scaling
-# preserves the (n DESC, word) order).
-
-
-def test_word_freq_twin_is_fn_with_scaled_counts(spark):
-    from transilien_api_etl_spark.plans.text_q import _WF_AMPLIFY
-
-    s = REGISTRY["docs_word_freq_top20"]
-    a = s.fn(spark, SF_SMOKE).collect()
-    b = s.bench_fn(spark, SF_SMOKE).collect()
-    assert len(a) == 20
-    assert [(r["word"], r["n"] * _WF_AMPLIFY) for r in a] == [
-        (r["word"], r["n"]) for r in b
-    ]
-
-
-def test_word_freq_twin_oracle_is_oracle_with_scaled_counts(duck):
-    from transilien_api_etl_spark.plans.text_q import _WF_AMPLIFY
-
-    s = REGISTRY["docs_word_freq_top20"]
-    a = duck.execute(s.oracle).fetchall()
-    b = duck.execute(s.bench_oracle).fetchall()
-    assert [(w, n * _WF_AMPLIFY) for w, n in a] == b
-
-
-def test_word_freq_twin_spark_equals_twin_oracle(spark, duck):
-    s = REGISTRY["docs_word_freq_top20"]
-    got = [(r["word"], r["n"]) for r in s.bench_fn(spark, SF_ORACLE).collect()]
-    assert got == duck.execute(s.bench_oracle).fetchall()
-
-
-# ---- round-11 amplified variant: docs_token_stats -----------------------
-# Same class as word_freq's twin, its own ×16 constant (see _TS_AMPLIFY's
-# measured sizing: at ×4 the Spark wall was still constant-dominated).
-# Relation: n_tokens and n_docs scale by the factor, avg_chars is
-# replication-invariant, lang set and order unchanged.
-
-
-def test_token_stats_twin_is_fn_with_scaled_counts(spark):
-    from transilien_api_etl_spark.plans.text_q import _TS_AMPLIFY
-
-    s = REGISTRY["docs_token_stats"]
-    a = s.fn(spark, SF_SMOKE).collect()
-    b = s.bench_fn(spark, SF_SMOKE).collect()
-    assert len(a) > 1
-    assert [
-        (r["lang"], r["n_tokens"] * _TS_AMPLIFY, r["n_docs"] * _TS_AMPLIFY,
-         r["avg_chars"])
-        for r in a
-    ] == [(r["lang"], r["n_tokens"], r["n_docs"], r["avg_chars"]) for r in b]
-
-
-def test_token_stats_twin_oracle_is_oracle_with_scaled_counts(duck):
-    from transilien_api_etl_spark.plans.text_q import _TS_AMPLIFY
-
-    s = REGISTRY["docs_token_stats"]
-    a = duck.execute(s.oracle).fetchall()
-    b = duck.execute(s.bench_oracle).fetchall()
-    assert [
-        (lang, nt * _TS_AMPLIFY, nd * _TS_AMPLIFY, ac) for lang, nt, nd, ac in a
-    ] == b
-
-
-def test_token_stats_twin_spark_equals_twin_oracle(spark, duck):
-    s = REGISTRY["docs_token_stats"]
-    got = [
-        (r["lang"], r["n_tokens"], r["n_docs"], r["avg_chars"])
-        for r in s.bench_fn(spark, SF_ORACLE).collect()
-    ]
-    oracle = [(lang, int(nt), int(nd), float(ac))
-              for lang, nt, nd, ac in duck.execute(s.bench_oracle).fetchall()]
-    assert got == oracle
-
-
-# ---- round-11 amplified variants: q1_pricing_summary / events_tumbling_1h
-# Session-2 extension of the amplified class to the two fast-tier rows
-# that crossed into the 1.8 hover in runs 15-16 on 0.3-0.5 s walls.
-# Relations: counts and sums scale by the factor, averages are
-# replication-invariant, group/window sets and order unchanged. Sums are
-# doubles, so the scaled relation is asserted to the same rounding the
-# queries themselves declare (2 dp) rather than bitwise.
-
-
-def test_q1_twin_is_fn_with_scaled_sums(spark):
-    from transilien_api_etl_spark.plans.relational import _Q1_AMPLIFY
-
-    s = REGISTRY["q1_pricing_summary"]
-    a = s.fn(spark, SF_SMOKE).collect()
-    b = s.bench_fn(spark, SF_SMOKE).collect()
-    assert len(a) > 1 and len(a) == len(b)
-    for ra, rb in zip(a, b):
-        assert (ra["l_returnflag"], ra["l_linestatus"]) == (
-            rb["l_returnflag"], rb["l_linestatus"]
-        )
-        for c in ("sum_qty", "sum_base_price", "sum_disc_price", "sum_charge"):
-            # both sides round to 2 dp AFTER their own sum, so comparing
-            # round(s,2)*N against round(N*s,2) carries up to N*0.005 of
-            # amplified rounding error
-            tol = 0.006 * _Q1_AMPLIFY
-            assert abs(ra[c] * _Q1_AMPLIFY - rb[c]) < tol, (c, ra[c], rb[c])
-        for c in ("avg_qty", "avg_price", "avg_disc"):
-            assert abs(ra[c] - rb[c]) < 5e-4, (c, ra[c], rb[c])
-        assert ra["count_order"] * _Q1_AMPLIFY == rb["count_order"]
-
-
-def test_q1_twin_oracle_is_oracle_with_scaled_sums(duck):
-    from transilien_api_etl_spark.plans.relational import _Q1_AMPLIFY
-
-    s = REGISTRY["q1_pricing_summary"]
-    a = duck.execute(s.oracle).fetchall()
-    b = duck.execute(s.bench_oracle).fetchall()
-    assert len(a) > 1 and len(a) == len(b)
-    for ra, rb in zip(a, b):
-        assert ra[:2] == rb[:2]
-        for i in (2, 3, 4, 5):  # the four sums (tolerance: N-amplified
-            # 2 dp rounding, same as the fn-side test)
-            assert abs(float(ra[i]) * _Q1_AMPLIFY - float(rb[i])) < 0.006 * _Q1_AMPLIFY
-        for i in (6, 7, 8):  # the three averages
-            assert abs(float(ra[i]) - float(rb[i])) < 5e-4
-        assert ra[9] * _Q1_AMPLIFY == rb[9]
-
-
-def test_q1_twin_spark_equals_twin_oracle(spark, duck):
-    s = REGISTRY["q1_pricing_summary"]
-    got = [tuple(r) for r in s.bench_fn(spark, SF_ORACLE).collect()]
-    want = [
-        (rf, ls, float(a), float(b), float(c), float(d), float(e), float(f),
-         float(g), int(n))
-        for rf, ls, a, b, c, d, e, f, g, n in duck.execute(s.bench_oracle).fetchall()
-    ]
-    assert len(got) == len(want) > 1
-    for rg, rw in zip(got, want):
-        assert rg[:2] == rw[:2]
-        for x, y in zip(rg[2:9], rw[2:9]):
-            assert abs(x - y) < 0.02, (rg, rw)
-        assert rg[9] == rw[9]
-
-
-def test_events_tumbling_twin_is_fn_with_scaled_counts(spark):
-    from transilien_api_etl_spark.plans.events_q import _ET_AMPLIFY
-
-    s = REGISTRY["events_tumbling_1h"]
-    a = s.fn(spark, SF_SMOKE).collect()
-    b = s.bench_fn(spark, SF_SMOKE).collect()
-    assert len(a) > 1 and len(a) == len(b)
-    for ra, rb in zip(a, b):
-        assert (ra["window_start"], ra["event_type"]) == (
-            rb["window_start"], rb["event_type"]
-        )
-        assert ra["n"] * _ET_AMPLIFY == rb["n"]
-        assert abs(ra["total_value"] * _ET_AMPLIFY - rb["total_value"]) < 0.05
-
-
-def test_events_tumbling_twin_oracle_is_oracle_with_scaled_counts(duck):
-    from transilien_api_etl_spark.plans.events_q import _ET_AMPLIFY
-
-    s = REGISTRY["events_tumbling_1h"]
-    a = duck.execute(s.oracle).fetchall()
-    b = duck.execute(s.bench_oracle).fetchall()
-    assert len(a) > 1 and len(a) == len(b)
-    for ra, rb in zip(a, b):
-        assert ra[:2] == rb[:2]
-        assert ra[2] * _ET_AMPLIFY == rb[2]
-        assert abs(float(ra[3]) * _ET_AMPLIFY - float(rb[3])) < 0.05
-
-
-def test_events_tumbling_twin_spark_equals_twin_oracle(spark, duck):
-    s = REGISTRY["events_tumbling_1h"]
-    got = [
-        (r["window_start"], r["event_type"], r["n"], round(float(r["total_value"]), 2))
-        for r in s.bench_fn(spark, SF_ORACLE).collect()
-    ]
-    want = [
-        (w, t, int(n), round(float(v), 2))
-        for w, t, n, v in duck.execute(s.bench_oracle).fetchall()
-    ]
-    assert len(got) == len(want) > 1
-    for rg, rw in zip(got, want):
-        assert rg[:3] == rw[:3]
-        assert abs(rg[3] - rw[3]) < 0.02
-
-
-# ---- round-12 ORACLE-side reduction twins --------------------------------
-# events_sessionize / asof_join_purchase_click / window_rolling_avg /
-# docs_segment_dedup / pretrain_corpus_report: their DuckDB oracles were
-# 5-85 s budget lines at the scale cache (the r11 driver run holed or
-# capped every one of them); the twin keeps the first N complete replicas
-# (event_id/doc_id < N·KEY_STRIDE — scale.py shifts BOTH the primary key
-# and, for events, user_id per replica, so kept users' histories are
-# complete). Contract: identical no-op on driver testdata, same bound on
-# both engines.
 
 _R12_REDUCED = [
     "events_sessionize",
@@ -470,77 +330,172 @@ _R12_REDUCED = [
 
 @pytest.mark.parametrize("name", _R12_REDUCED)
 def test_r12_reduced_twin_fn_identical_on_driver_corpus(spark, name):
-    s = REGISTRY[name]
-    a = s.fn(spark, SF_SMOKE).collect()
-    b = s.bench_fn(spark, SF_SMOKE).collect()
-    assert a == b and len(a) > 0
+    got = _spark_twin(spark, name, SF_SMOKE)
+    assert len(got) > 0 and got.equals(_spark_twin(spark, name, SF_SMOKE, False))
 
 
 @pytest.mark.parametrize("name", _R12_REDUCED)
-def test_r12_reduced_twin_oracle_identical_on_driver_corpus(duck, name):
-    s = REGISTRY[name]
-    assert duck.execute(s.oracle).fetchall() == duck.execute(s.bench_oracle).fetchall()
+def test_r12_reduced_twin_oracle_identical_on_driver_corpus(duck_at, name):
+    con = duck_at(SF_ORACLE)
+    assert _duck_twin(con, name, SF_ORACLE).equals(
+        _duck_twin(con, name, SF_ORACLE, twins=False)
+    )
 
 
 def test_r12_reduced_twin_bounds_embedded():
-    from transilien_api_etl_spark.plans.events_q import _EV_BENCH_BOUND
-    from transilien_api_etl_spark.plans.pipeline_q import _PT_BENCH_DOC_BOUND
-    from transilien_api_etl_spark.plans.text_q import _SEG_BENCH_DOC_BOUND
-    from transilien_api_etl_spark.plans.windows import _RA_BENCH_BOUND
-
-    assert f"event_id < {_EV_BENCH_BOUND}" in REGISTRY["events_sessionize"].bench_oracle
-    # asof filters BOTH the purchase and the lateral click side
-    assert REGISTRY["asof_join_purchase_click"].bench_oracle.count(
-        f"event_id < {_EV_BENCH_BOUND}"
-    ) == 2
-    assert f"event_id < {_RA_BENCH_BOUND}" in REGISTRY["window_rolling_avg"].bench_oracle
-    assert f"doc_id < {_SEG_BENCH_DOC_BOUND}" in REGISTRY["docs_segment_dedup"].bench_oracle
-    assert f"doc_id < {_PT_BENCH_DOC_BOUND}" in REGISTRY["pretrain_corpus_report"].bench_oracle
-    for b in (_EV_BENCH_BOUND, _RA_BENCH_BOUND, _SEG_BENCH_DOC_BOUND, _PT_BENCH_DOC_BOUND):
-        assert b % KEY_STRIDE == 0
+    for name in ("events_sessionize", "asof_join_purchase_click", "window_rolling_avg"):
+        _assert_whole_replica_bound(name, "events", "event_id", 25)
+    for name in ("docs_segment_dedup", "pretrain_corpus_report"):
+        _assert_whole_replica_bound(name, "documents", "doc_id", 50)
 
 
-# ---- round-12 amplified variants: knn_sq8_top10 / knn_rerank_top10 ------
-# Fourth variant instance of the amplified class: both engines replicate
-# every NON-QUERY vector ×_KNN_AMPLIFY with new ids vec_id·N + r before
-# their encode/dequant/cosine chains (stats stay computed on the original
-# corpus — replication-invariant per-dim min/max). Replicas of one vector
-# score EXACTLY equal (same codes), so the twin's top-10 is the
-# replica-expansion of the plain top rows ordered by (score DESC, id).
+# Amplified twins: counts and sums scale by the factor, averages are
+# replication-invariant, group sets and order are unchanged.
 
 
-_R12_KNN_AMPLIFIED = ["knn_sq8_top10", "knn_rerank_top10"]
+def _factor(name):
+    (amp,) = bench.TWINS[name].tables.values()
+    return amp.n
 
 
-@pytest.mark.parametrize("name", _R12_KNN_AMPLIFIED)
-def test_r12_knn_twin_spark_equals_twin_oracle(spark, duck, name):
-    s = REGISTRY[name]
-    got = [(int(r[0]), float(r[1])) for r in s.bench_fn(spark, SF_ORACLE).collect()]
-    want = [(int(i), float(c)) for i, c in duck.execute(s.bench_oracle).fetchall()]
-    assert got == want and len(got) == 10
+def _assert_scaled(plain, twin, n, keys, counts=(), sums=(), avgs=(), sum_tol=0.0):
+    assert len(plain) > 1 and len(plain) == len(twin)
+    for (_, a), (_, b) in zip(plain.iterrows(), twin.iterrows()):
+        assert [a[k] for k in keys] == [b[k] for k in keys]
+        for c in counts:
+            assert a[c] * n == b[c], c
+        for c in sums:
+            # both sides round to 2 dp after their own sum, so round(s)·N
+            # and round(N·s) differ by up to N·0.005
+            assert abs(a[c] * n - b[c]) <= sum_tol * n + 1e-6, (c, a[c], b[c])
+        for c in avgs:
+            assert abs(a[c] - b[c]) < 5e-4, (c, a[c], b[c])
 
 
-@pytest.mark.parametrize("name", _R12_KNN_AMPLIFIED)
+def _spark_plain_and_twin(spark, name):
+    return _spark_twin(spark, name, SF_SMOKE, False), _spark_twin(spark, name, SF_SMOKE)
+
+
+def _duck_plain_and_twin(duck_at, name):
+    con = duck_at(SF_ORACLE)
+    return (
+        _duck_twin(con, name, SF_ORACLE, twins=False),
+        _duck_twin(con, name, SF_ORACLE),
+    )
+
+
+_Q1 = dict(
+    keys=["l_returnflag", "l_linestatus"],
+    counts=["count_order"],
+    sums=["sum_qty", "sum_base_price", "sum_disc_price", "sum_charge"],
+    avgs=["avg_qty", "avg_price", "avg_disc"],
+    sum_tol=0.006,
+)
+
+
+def test_q1_twin_is_fn_with_scaled_sums(spark):
+    _assert_scaled(*_spark_plain_and_twin(spark, "q1_pricing_summary"),
+                   _factor("q1_pricing_summary"), **_Q1)
+
+
+def test_q1_twin_oracle_is_oracle_with_scaled_sums(duck_at):
+    _assert_scaled(*_duck_plain_and_twin(duck_at, "q1_pricing_summary"),
+                   _factor("q1_pricing_summary"), **_Q1)
+
+
+def test_q1_twin_spark_equals_twin_oracle(spark, duck_at):
+    test_spark_twin_equals_duckdb_twin(spark, duck_at, "q1_pricing_summary", SF_ORACLE)
+
+
+_ET = dict(keys=["window_start", "event_type"], counts=["n"], sums=["total_value"],
+           sum_tol=0.006)
+
+
+def test_events_tumbling_twin_is_fn_with_scaled_counts(spark):
+    _assert_scaled(*_spark_plain_and_twin(spark, "events_tumbling_1h"),
+                   _factor("events_tumbling_1h"), **_ET)
+
+
+def test_events_tumbling_twin_oracle_is_oracle_with_scaled_counts(duck_at):
+    _assert_scaled(*_duck_plain_and_twin(duck_at, "events_tumbling_1h"),
+                   _factor("events_tumbling_1h"), **_ET)
+
+
+def test_events_tumbling_twin_spark_equals_twin_oracle(spark, duck_at):
+    test_spark_twin_equals_duckdb_twin(spark, duck_at, "events_tumbling_1h", SF_ORACLE)
+
+
+_WF = dict(keys=["word"], counts=["n"])
+
+
+def test_word_freq_twin_is_fn_with_scaled_counts(spark):
+    _assert_scaled(*_spark_plain_and_twin(spark, "docs_word_freq_top20"),
+                   _factor("docs_word_freq_top20"), **_WF)
+
+
+def test_word_freq_twin_oracle_is_oracle_with_scaled_counts(duck_at):
+    _assert_scaled(*_duck_plain_and_twin(duck_at, "docs_word_freq_top20"),
+                   _factor("docs_word_freq_top20"), **_WF)
+
+
+def test_word_freq_twin_spark_equals_twin_oracle(spark, duck_at):
+    test_spark_twin_equals_duckdb_twin(spark, duck_at, "docs_word_freq_top20", SF_ORACLE)
+
+
+_TS = dict(keys=["lang"], counts=["n_tokens", "n_docs"], avgs=["avg_chars"])
+
+
+def test_token_stats_twin_is_fn_with_scaled_counts(spark):
+    _assert_scaled(*_spark_plain_and_twin(spark, "docs_token_stats"),
+                   _factor("docs_token_stats"), **_TS)
+
+
+def test_token_stats_twin_oracle_is_oracle_with_scaled_counts(duck_at):
+    _assert_scaled(*_duck_plain_and_twin(duck_at, "docs_token_stats"),
+                   _factor("docs_token_stats"), **_TS)
+
+
+def test_token_stats_twin_spark_equals_twin_oracle(spark, duck_at):
+    test_spark_twin_equals_duckdb_twin(spark, duck_at, "docs_token_stats", SF_ORACLE)
+
+
+# kNN twins: replicas of one vector score exactly equal, so each twin's
+# top-10 is the replica expansion (ids vec_id·N + r) of the plain top rows.
+
+
+def _expand(rows):
+    return [(i * N + r, c) for i, c in rows for r in range(N)][:10]
+
+
+def _pairs(pdf):
+    return [(int(i), float(c)) for i, c in pdf.itertuples(index=False)]
+
+
+@pytest.mark.parametrize("name", KNN_ROWS)
+def test_r12_knn_twin_spark_equals_twin_oracle(spark, duck_at, name):
+    test_spark_twin_equals_duckdb_twin(spark, duck_at, name, SF_ORACLE)
+
+
+@pytest.mark.parametrize("name", KNN_ROWS)
 def test_r12_knn_twin_is_replica_expansion_of_fn(spark, name):
-    from transilien_api_etl_spark.plans.quantize_q import _KNN_AMPLIFY
+    plain, twin = _spark_plain_and_twin(spark, name)
+    assert _pairs(twin) == _expand(_pairs(plain))
 
-    s = REGISTRY[name]
-    fn_rows = [(int(r[0]), float(r[1])) for r in s.fn(spark, SF_SMOKE).collect()]
-    twin = [(int(r[0]), float(r[1])) for r in s.bench_fn(spark, SF_SMOKE).collect()]
-    # expected: expand fn's ordered rows into _KNN_AMPLIFY replicas each
-    # (scores exactly equal, ids consecutive), take the first 10
-    expected = [
-        (i * _KNN_AMPLIFY + r, c)
-        for i, c in fn_rows
-        for r in range(_KNN_AMPLIFY)
-    ][:10]
-    assert twin == expected
+
+def test_rerank_pipeline_twin_is_replica_expansion_of_exact(duck_at):
+    """rerank's registered oracle is the EXACT kNN; its twin runs the SQ8
+    candidates → exact re-rank pipeline, whose recall is 1.0 here."""
+    exact, twin = _duck_plain_and_twin(duck_at, "knn_rerank_top10")
+    assert len(exact) == 10
+    assert _pairs(twin) == _expand(_pairs(exact))
+
+
+def test_rerank_candidate_budget_embedded():
+    assert f"LIMIT {RERANK_CANDIDATES}" in bench.TWINS["knn_rerank_top10"].sql
 
 
 def test_r12_knn_amplify_embedded_in_oracles():
-    from transilien_api_etl_spark.plans.quantize_q import _KNN_AMPLIFY
-
-    for name in _R12_KNN_AMPLIFIED:
-        bo = REGISTRY[name].bench_oracle
-        assert f"CROSS JOIN range({_KNN_AMPLIFY})" in bo
-        assert f"vec_id * {_KNN_AMPLIFY} + t.r" in bo
+    for name in KNN_ROWS:
+        sql = bench.TWINS[name].sql
+        assert f"CROSS JOIN range({N})" in sql
+        assert f"vec_id * {N} + t.r" in sql

@@ -8,8 +8,11 @@ pass over every file.
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
 import os
 import time
+from collections.abc import Callable, Iterator, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -228,6 +231,40 @@ def served_bucketed(spark: SparkSession, sf_dir: str, *names: str) -> bool:
     return bool(bdir) and os.path.abspath(bdir) == os.path.abspath(sf_dir)
 
 
+# Table-transform seam (the bench twins, bench.TWINS): while
+# table_transforms(sf_dir, {table: transform}) is active, load_table
+# applies ``transform`` to that table's scan for that ONE sf_dir, so every
+# registered query reads the changed table with no change to its body. A
+# transform is a hashable ``DataFrame -> DataFrame`` callable: the memos
+# below key on it, so a size-derived constant (SemDeDup's k, PQ's training
+# modulus) follows the transformed table. Scoped like the bucketed confs
+# above: any other directory reads its plain parquet, and the previous
+# state is always restored. A context variable, so another thread building
+# plans meanwhile reads its own (plain) tables.
+TableTransform = Callable[[DataFrame], DataFrame]
+_TABLE_TRANSFORMS: contextvars.ContextVar[
+    tuple[str, Mapping[str, TableTransform]] | None
+] = contextvars.ContextVar("table_transforms", default=None)
+
+
+@contextlib.contextmanager
+def table_transforms(
+    sf_dir: str, transforms: Mapping[str, TableTransform]
+) -> Iterator[None]:
+    token = _TABLE_TRANSFORMS.set((os.path.abspath(sf_dir), dict(transforms)))
+    try:
+        yield
+    finally:
+        _TABLE_TRANSFORMS.reset(token)
+
+
+def _table_transform(sf_dir: str, name: str) -> TableTransform | None:
+    active = _TABLE_TRANSFORMS.get()
+    if active is None or active[0] != os.path.abspath(sf_dir):
+        return None
+    return active[1].get(name)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan with a declared schema (S1); catalog-bucketed override.
 
@@ -237,17 +274,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     but hash-clustered on the join key at rest, so the fact⋈fact
     exchanges vanish (tests/test_bucketed_join.py gates both the
     zero-Exchange property and the dataset scoping).
+
+    Inside :func:`table_transforms` for ``sf_dir``, the table's transform
+    is applied to the scan (bench.py's declared twins).
     """
-    if served_bucketed(spark, sf_dir, name):
-        return spark.table(f"{name}_bucketed")
+    transform = _table_transform(sf_dir, name)
     path = table_path(sf_dir, name)
-    if name == "events" and _events_ts_is_nanos(path):
+    if served_bucketed(spark, sf_dir, name):
+        df = spark.table(f"{name}_bucketed")
+    elif name == "events" and _events_ts_is_nanos(path):
         # Session invariant (also pinned in build_session/ensure_query_confs):
         # nanosAsLong must be on to scan TIMESTAMP(NANOS) parquet at all.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = spark.read.schema(_EVENTS_RAW).parquet(path)
-        return _events_ns_to_ts(raw)
-    return spark.read.schema(SCHEMAS[name]).parquet(path)
+        df = _events_ns_to_ts(raw)
+    else:
+        df = spark.read.schema(SCHEMAS[name]).parquet(path)
+    return df if transform is None else transform(df)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
@@ -299,7 +342,8 @@ def widen_small_scan(
     return df
 
 
-# (sf_dir, table) -> row count, memoized for the life of the process.
+# (sf_dir, table, mtime, transform) -> row count, memoized for the life of
+# the process.
 # Consumers are the corpus-size path switches (PQ's sampled-train /
 # Arrow-encode threshold, SemDeDup's derived k): they re-derive the same
 # count on EVERY query invocation, which added a full extra scan+action
@@ -308,7 +352,7 @@ def widen_small_scan(
 # repo reads is immutable once materialized (driver testdata by contract;
 # the scale cache because a factor change changes the directory NAME —
 # scale.scale_dir_name).
-_ROW_COUNT_CACHE: dict[tuple[str, str], int] = {}
+_ROW_COUNT_CACHE: dict[tuple, int] = {}
 
 
 def _table_mtime(sf_dir: str, name: str) -> tuple:
@@ -366,34 +410,21 @@ def cached_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     Arrow-threshold / SemDeDup derived-k switches. A parquet DIRECTORY's
     mtime changes whenever files inside it are (re)written, and
     materialize_scale replaces single-file tables wholesale, so the stat
-    is a sound freshness proxy either way."""
-    key = (os.path.abspath(sf_dir), name, _table_mtime(sf_dir, name))
+    is a sound freshness proxy either way. The active table transform
+    (see :func:`table_transforms`) is part of the key: the count is the
+    transformed table's."""
+    key = (
+        os.path.abspath(sf_dir), name, _table_mtime(sf_dir, name),
+        _table_transform(sf_dir, name),
+    )
     if key not in _ROW_COUNT_CACHE:
         _ROW_COUNT_CACHE[key] = load_table(spark, sf_dir, name).count()
     return _ROW_COUNT_CACHE[key]
 
 
-def cached_bounded_count(
-    spark: SparkSession, sf_dir: str, name: str, id_col: str, bound: int
-) -> int:
-    """``count(*) WHERE id_col < bound``, memoized like
-    :func:`cached_row_count` (same mtime invalidation). The reduced-corpus
-    bench twins derive their size-dependent model schedule (SemDeDup k,
-    PQ training modulus) from the FILTERED corpus, so the count they need
-    is the bounded one — a pushed-predicate parquet count, paid once per
-    (dir, bound, mtime)."""
-    from pyspark.sql import functions as F
-
-    key = (os.path.abspath(sf_dir), name, id_col, bound, _table_mtime(sf_dir, name))
-    if key not in _ROW_COUNT_CACHE:
-        _ROW_COUNT_CACHE[key] = (
-            load_table(spark, sf_dir, name).filter(F.col(id_col) < bound).count()
-        )
-    return _ROW_COUNT_CACHE[key]
-
-
-# (dir, vec_id, mtime) -> embedding values, memoized like the row counts.
-_QUERY_VEC_CACHE: dict[tuple[str, int, int], list[float] | None] = {}
+# (dir, vec_id, mtime, transform) -> embedding values, memoized like the
+# row counts.
+_QUERY_VEC_CACHE: dict[tuple, list[float] | None] = {}
 
 
 def cached_query_embedding(
@@ -410,7 +441,10 @@ def cached_query_embedding(
     reads is immutable once materialized, and a rewrite bumps the
     parquet directory's mtime. Returns None when the vec_id is absent
     (callers emit the oracle-equivalent empty result)."""
-    key = (os.path.abspath(sf_dir), vec_id, _table_mtime(sf_dir, "embeddings"))
+    key = (
+        os.path.abspath(sf_dir), vec_id, _table_mtime(sf_dir, "embeddings"),
+        _table_transform(sf_dir, "embeddings"),
+    )
     if key not in _QUERY_VEC_CACHE:
         from pyspark.sql import functions as F
 

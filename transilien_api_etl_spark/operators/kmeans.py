@@ -165,7 +165,6 @@ def kmeans_oracle_cte(
     k: int | str,
     iterations: int,
     round_dp: int = ROUND_DP,
-    where: str = "",
 ) -> str:
     """The DuckDB CTE chain computing the identical assignment.
 
@@ -175,10 +174,8 @@ def kmeans_oracle_cte(
 
     ``k`` may be an SQL expression (e.g. a scalar subquery over CTE ``e``
     mirroring the derived-k schedule) — DuckDB accepts subqueries in
-    LIMIT, which is what lets ONE static bench-twin oracle stay
-    semantically identical to the Spark plan at every corpus size.
-    ``where`` (a bare predicate, no ``WHERE``) filters the corpus before
-    anything else — the reduced-corpus bench twins' knob.
+    LIMIT, which is what lets ONE static oracle follow the Spark plan's
+    k at every corpus size (bench.py's SemDeDup twin).
     """
 
     def d2(vexpr: str, cexpr: str) -> str:
@@ -188,10 +185,9 @@ def kmeans_oracle_cte(
             f"list_inner_product({cexpr},{cexpr}), {round_dp})"
         )
 
-    where_clause = f" WHERE {where}" if where else ""
     parts = [
         f"""
-e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings{where_clause}),
+e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 c0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid, v
        FROM e ORDER BY vec_id LIMIT {k})"""
     ]

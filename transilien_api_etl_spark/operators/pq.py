@@ -277,7 +277,6 @@ def pq_oracle_cte(
     k: int,
     iterations: int,
     round_dp: int = ROUND_DP,
-    where: str = "",
     train_mod_expr: str | None = None,
     argmin: str = "window",
 ) -> str:
@@ -287,13 +286,12 @@ def pq_oracle_cte(
     ``lut_m{m}(cid, d)`` (query-vs-codebook d², query = vec_id 0) — the
     same unroll-per-iteration honesty as kmeans_oracle_cte, ×M subspaces.
 
-    ``where`` filters the corpus (bare predicate) before anything else.
     ``train_mod_expr`` is an SQL expression (evaluated against CTE ``nn``,
-    the filtered corpus count ``n``) giving the training-sample modulus:
+    the corpus count ``n``) giving the training-sample modulus:
     when set, init + Lloyd iterations read only rows with
     ``vec_id % mod = 0`` — :func:`pq_train`'s sampled-training semantics —
     while the final encode and the query LUT still cover the full
-    (filtered) corpus, exactly like the Spark plan. Left at None the
+    corpus, exactly like the Spark plan. Left at None the
     training CTEs scan everything (the driver-SF bit-parity domain).
 
     ``argmin`` picks the per-vector nearest-centroid formulation:
@@ -303,7 +301,7 @@ def pq_oracle_cte(
     then ``min(cid)`` over the tied rows — IDENTICAL values including the
     lowest-cid tie-break, value-verified A/B at 200 k vectors, ~4× faster
     because a hash aggregate replaces a sort of the n×k cross join; used
-    by the reduced-corpus bench twin, where the oracle should be DuckDB's
+    by bench.py's reduced-corpus PQ twin, where the oracle should be DuckDB's
     BEST formulation of the same recipe — a faster denominator can only
     make Spark's graded ratio worse, so the comparison stays honest).
     ``minjoin`` also marks the shared/reused CTEs MATERIALIZED so the
@@ -322,17 +320,16 @@ def pq_oracle_cte(
             f"list_inner_product({cexpr},{cexpr}), {round_dp})"
         )
 
-    where_clause = f" WHERE {where}" if where else ""
     parts = []
     if train_mod_expr is not None:
-        parts.append(f"""
-nn AS (SELECT count(*) AS n FROM embeddings{where_clause}),""")
+        parts.append("""
+nn AS (SELECT count(*) AS n FROM embeddings),""")
     for m in range(m_sub):
         lo, hi = m * sub_dim + 1, (m + 1) * sub_dim
         train_src = f"e_m{m}"
         parts.append(f"""
 e_m{m} AS{mat} (SELECT vec_id, (embedding::DOUBLE[])[{lo}:{hi}] AS v
-           FROM embeddings{where_clause})""")
+           FROM embeddings)""")
         if train_mod_expr is not None:
             train_src = f"es_m{m}"
             parts.append(f""",

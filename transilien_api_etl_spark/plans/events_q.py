@@ -21,66 +21,15 @@ from transilien_api_etl_spark.operators.joins import asof_join, range_join
 from transilien_api_etl_spark.operators.sessionize import sessionize
 from transilien_api_etl_spark.operators.dedup import exact_dedup
 from transilien_api_etl_spark.plans.registry import register
-from transilien_api_etl_spark.scale import KEY_STRIDE
 from transilien_api_etl_spark.session import ensure_query_confs
-
-# Reduced-corpus bench twins for the two 25-100× Spark-favoring events rows
-# (round 12, VERDICT r11 task 1 — the oracle pass must COMPLETE on a
-# 1.3×-slower box). Their DuckDB oracles were the budget's largest fixed
-# lines: sessionize 32-85 s and the LATERAL as-of 23-56 s at the 10 M-event
-# cache. The scale cache replicates events with event_id +=
-# replica·KEY_STRIDE AND user_id += replica·10⁶ (scale.py), so
-# an event_id bound keeps the first _EV_BENCH_REPLICA_CAP replicas as
-# COMPLETE per-user event histories — sessions/matches inside the kept
-# replicas are exactly what the full corpus computes for them. Both
-# engines filter identically; the rows grade at 25-100× Spark-favoring
-# margins, which a corpus reduction cannot move anywhere near a bar. On
-# driver testdata event_id < KEY_STRIDE → the bound is a no-op and
-# fn ≡ bench_fn (tests/test_bench_variants.py).
-_EV_BENCH_REPLICA_CAP = 25
-_EV_BENCH_BOUND = _EV_BENCH_REPLICA_CAP * KEY_STRIDE
-
-
-# Inline-amplification factor for the events_tumbling_1h bench twin
-# (round 11 — the word_freq/token_stats/q1 treatment): the row graded
-# 1.12-1.36 across r10-r11 runs, then 1.81 in run 16, on 0.32-0.49 s
-# Spark / 0.17-0.21 s DuckDB scale walls — inside the host's ±30-50%
-# jitter floor where the quotient measures box state + Spark's fixed
-# ~0.2 s per-query cost, not the window-bucketing plan. Both engines
-# replicate every event ×_ET_AMPLIFY inline (Spark: broadcast range
-# fan-out before the groupBy, map-side, no added exchange; DuckDB:
-# CROSS JOIN range(N)). Twin relation: n and total_value ×N, window set
-# and order unchanged — asserted on driver data by
-# tests/test_bench_variants.py. Sizing measured at the 10 M-event scale
-# cache (paired 5-rep probe, BASELINE.md round-11 session 2): quotient
-# medians 1.74 (×1) → 1.03 (×4) → 0.64 (×8); at ×8 both engines' walls
-# clear 1 s (Spark ~1.1 s, DuckDB ~1.8 s — DuckDB's fan-out is
-# input-linear while Spark's constant amortizes, the same decomposition
-# as every amplified twin).
-_ET_AMPLIFY = 8
-
-
-def _events_tumbling_1h(
-    spark: SparkSession, sf_dir: str, amplify: int = 1
-) -> DataFrame:
-    ensure_query_confs(spark)
-    e = load_table(spark, sf_dir, "events")
-    if amplify > 1:
-        e = e.crossJoin(F.broadcast(spark.range(amplify).select("id")))
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "total_value")
-        .orderBy("window_start", "event_type")
-    )
 
 
 @register(
     "events_tumbling_1h",
     doc="Event-time tumbling window aggregation (SURVEY §3 T2): 1h windows × "
     "event_type. Spark window() start == date_trunc('hour') for aligned "
-    "windows. bench: graded through the ×8 inline-amplified twin (see "
-    "_ET_AMPLIFY) so the number measures the plan, not the sub-jitter "
+    "windows. bench: graded through its bench.TWINS twin (events "
+    "amplified) so the number measures the plan, not the sub-jitter "
     "0.4 s floor.",
     tags=("events", "window-agg"),
     bench=True,
@@ -91,17 +40,16 @@ FROM events
 GROUP BY 1, 2
 ORDER BY 1, 2
 """,
-    bench_fn=lambda spark, sf_dir: _events_tumbling_1h(spark, sf_dir, _ET_AMPLIFY),
-    bench_oracle=f"""
-SELECT date_trunc('hour', ts) AS window_start, event_type,
-       count(*) AS n, round(sum(value), 2) AS total_value
-FROM (SELECT * FROM events CROSS JOIN range({_ET_AMPLIFY}))
-GROUP BY 1, 2
-ORDER BY 1, 2
-""",
 )
 def events_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _events_tumbling_1h(spark, sf_dir)
+    ensure_query_confs(spark)
+    e = load_table(spark, sf_dir, "events")
+    return (
+        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
+        .select(F.col("w.start").alias("window_start"), "event_type", "n", "total_value")
+        .orderBy("window_start", "event_type")
+    )
 
 
 @register(
@@ -138,7 +86,9 @@ def events_sliding_10m_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_sessionize",
     doc="Gap-based sessionization, 30-minute gap (SURVEY §3 T4 batch oracle): "
-    "lag-gap + running-sum recipe; one shuffle, single Window node.",
+    "lag-gap + running-sum recipe; one shuffle, single Window node. "
+    "bench: graded through its bench.TWINS twin (events reduced to whole "
+    "replicas).",
     tags=("events", "session"),
     bench=True,
     oracle="""
@@ -160,41 +110,10 @@ SELECT user_id, session_id, count(*) AS n_events,
 FROM s GROUP BY user_id, session_id
 ORDER BY user_id, session_id
 """,
-    bench_fn=lambda spark, sf_dir: _events_sessionize(
-        spark, sf_dir, _EV_BENCH_BOUND
-    ),
-    bench_oracle=f"""
-WITH g AS (
-  SELECT user_id, ts, value, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM events WHERE event_id < {_EV_BENCH_BOUND}
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), s AS (
-  SELECT user_id, ts, value,
-         CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-  FROM g
-)
-SELECT user_id, session_id, count(*) AS n_events,
-       round(sum(value), 2) AS session_value, min(ts) AS session_start
-FROM s GROUP BY user_id, session_id
-ORDER BY user_id, session_id
-""",
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _events_sessionize(spark, sf_dir)
-
-
-def _events_sessionize(
-    spark: SparkSession, sf_dir: str, event_bound: int | None = None
-) -> DataFrame:
     ensure_query_confs(spark)
     e = load_table(spark, sf_dir, "events")
-    if event_bound is not None:
-        # plain comparison on the scan column → pushed to the parquet reader
-        e = e.filter(F.col("event_id") < event_bound)
     s = sessionize(e, "user_id", "ts", gap_seconds=1800, order_cols=["event_id"])
     return (
         s.groupBy("user_id", "session_id")
@@ -239,7 +158,9 @@ def events_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     "matching): each purchase matched to the latest same-user click at or "
     "before it; delay = µs gap. Union/merge-scan strategy: one shuffle on "
     "user_id, last(click, ignorenulls) over the merged order — zero join "
-    "fan-out even on hot keys (oracle: LATERAL ... LIMIT 1).",
+    "fan-out even on hot keys (oracle: LATERAL ... LIMIT 1). bench: "
+    "graded through its bench.TWINS twin (events reduced to whole "
+    "replicas).",
     tags=("events", "asof"),
     bench=True,
     oracle="""
@@ -255,36 +176,10 @@ LEFT JOIN LATERAL (
 WHERE p.event_type = 'purchase'
 ORDER BY p.event_id
 """,
-    bench_fn=lambda spark, sf_dir: _asof_join_purchase_click(
-        spark, sf_dir, _EV_BENCH_BOUND
-    ),
-    bench_oracle=f"""
-SELECT p.event_id, p.user_id, p.ts AS purchase_ts,
-       c.event_id AS click_event_id, c.ts AS click_ts,
-       epoch_us(p.ts) - epoch_us(c.ts) AS delay_us
-FROM events p
-LEFT JOIN LATERAL (
-  SELECT event_id, ts FROM events c
-  WHERE c.user_id = p.user_id AND c.event_type = 'click' AND c.ts <= p.ts
-    AND c.event_id < {_EV_BENCH_BOUND}
-  ORDER BY c.ts DESC, c.event_id DESC LIMIT 1
-) c ON TRUE
-WHERE p.event_type = 'purchase' AND p.event_id < {_EV_BENCH_BOUND}
-ORDER BY p.event_id
-""",
 )
 def asof_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _asof_join_purchase_click(spark, sf_dir)
-
-
-def _asof_join_purchase_click(
-    spark: SparkSession, sf_dir: str, event_bound: int | None = None
-) -> DataFrame:
     ensure_query_confs(spark)
     e = load_table(spark, sf_dir, "events")
-    if event_bound is not None:
-        # plain comparison on the scan column → pushed to the parquet reader
-        e = e.filter(F.col("event_id") < event_bound)
     purchases = e.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     clicks = e.filter(F.col("event_type") == "click").select("user_id", "event_id", "ts")
     matched = asof_join(

@@ -41,21 +41,9 @@ MAX_STOP_RATIO = 0.6
 
 _STOP_SQL = "'the','a','of','and','to','in','is'"
 
-# Reduced-corpus bench twin bound for pretrain_corpus_report (round 12,
-# VERDICT r11 task 1 — the oracle pass must complete on a slower box): the
-# full 1 M-doc oracle measured 12-13 s, and a round-11 bench run holed
-# it. Keep the first 50 of the 200 doc replicas (250 k docs, the
-# docs_segment_dedup bound); no-op on the small test SFs.
-from transilien_api_etl_spark.scale import KEY_STRIDE as _KEY_STRIDE
-
-_PT_BENCH_DOC_BOUND = 50 * _KEY_STRIDE
-
-
 # Shared oracle CTEs: metrics + quality gate + exact dedup, mirrored from
 # the DataFrame stages below.
-def _pipeline_cte(doc_where: str = "") -> str:
-    where_clause = f" WHERE {doc_where}" if doc_where else ""
-    return f"""
+_PIPELINE_CTE = f"""
 WITH m AS (
   SELECT doc_id, text, len(string_split(text, ' ')) AS n_tokens,
          len(list_distinct(string_split(text, ' '))) * 1.0
@@ -73,7 +61,7 @@ WITH m AS (
             len(list_filter(string_split(text,' '), x -> x IN ('le','la','les','et','ne')))           AS s_fr,
             len(list_filter(string_split(text,' '), x -> x IN ('el','los','las','y','no')))           AS s_es)
          ) AS predicted
-  FROM documents{where_clause}
+  FROM documents
 ),
 kept AS (
   SELECT *, round(0.5 * distinct_ratio + 0.5 * (1 - stop_ratio), 6) AS quality
@@ -91,9 +79,6 @@ uniq AS (
 """
 
 
-_PIPELINE_CTE = _pipeline_cte()
-
-
 @register(
     "pretrain_corpus_report",
     doc="Flagship pipeline composition (F9+F10): metrics → quality gate → "
@@ -101,7 +86,9 @@ _PIPELINE_CTE = _pipeline_cte()
     "end; everything before it fuses into the scan stage. Grouped by the "
     "labeled lang (the heuristic predicted column stays in the curated "
     "output — this corpus shares one vocabulary across langs, so marker "
-    "lang-ID is degenerate on the test data by construction).",
+    "lang-ID is degenerate on the test data by construction). bench: "
+    "graded through its bench.TWINS twin (documents reduced to whole "
+    "replicas).",
     tags=("text", "dedup", "pipeline"),
     bench=True,
     oracle=_PIPELINE_CTE
@@ -112,27 +99,10 @@ SELECT lang, count(*) AS n_unique_docs,
        round(avg(quality), 6) AS avg_quality
 FROM uniq GROUP BY lang ORDER BY lang
 """,
-    bench_fn=lambda spark, sf_dir: _pretrain_corpus_report(
-        spark, sf_dir, _PT_BENCH_DOC_BOUND
-    ),
-    bench_oracle=_pipeline_cte(f"doc_id < {_PT_BENCH_DOC_BOUND}")
-    + """
-SELECT lang, count(*) AS n_unique_docs,
-       CAST(sum(n_copies - 1) AS BIGINT) AS n_dupes_removed,
-       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-       round(avg(quality), 6) AS avg_quality
-FROM uniq GROUP BY lang ORDER BY lang
-""",
 )
 def pretrain_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _pretrain_corpus_report(spark, sf_dir)
-
-
-def _pretrain_corpus_report(
-    spark: SparkSession, sf_dir: str, doc_bound: int | None = None
-) -> DataFrame:
     ensure_query_confs(spark)
-    uniq = _curated(spark, sf_dir, doc_bound)
+    uniq = _curated(spark, sf_dir)
     return (
         uniq.groupBy("lang")
         .agg(
@@ -164,15 +134,10 @@ def pretrain_curated_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("keep_id")
 
 
-def _curated(
-    spark: SparkSession, sf_dir: str, doc_bound: int | None = None
-) -> DataFrame:
+def _curated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stages 1-3: metrics, quality gate, exact dedup. Same text ⇒ same
     metrics, so min() over the dup group is exact, not arbitrary."""
     d = load_table(spark, sf_dir, "documents")
-    if doc_bound is not None:
-        # plain comparison on the scan column → pushed to the parquet reader
-        d = d.filter(F.col("doc_id") < doc_bound)
     toks = tokenize(F.col("text"))
     n_tokens = F.size(toks)
     distinct_ratio = F.size(F.array_distinct(toks)) * F.lit(1.0) / n_tokens

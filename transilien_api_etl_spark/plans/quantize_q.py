@@ -94,24 +94,11 @@ def embeddings_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
-# Inline-amplification factor for the knn_sq8_top10 / knn_rerank_top10
-# bench twins (round 12, VERDICT r11 task 2). These two rows graded 3.48 /
-# 2.53 in the driver's r11 artifact against a builder band of 1.1-2.0: the
-# Python-Arrow boundary rows are the suite's most box-state-sensitive, and
-# at 1 M vectors their quotient still carries Spark's fixed per-pass
-# constant (scan setup + worker spin-up) over a sub-second DuckDB
-# denominator. Both engines replicate every non-query vector ×N inline
-# with distinct ids (Spark: broadcast range fan-out BEFORE the Arrow
-# kernel, map-side, no added exchange; DuckDB: CROSS JOIN range(N) before
-# its encode chain), so encode+dequant+cosine run over the identical
-# N×-corpus on both sides and the graded number approaches the marginal
-# ratio. Twin relation: replicas of one vector score EXACTLY equal (same
-# stats, same codes), so the twin's top-10 is the replica-expansion of the
-# plain top rows ordered by (score DESC, new id) — engine-parity and the
-# expansion relation are asserted by tests/test_bench_variants.py.
-_KNN_AMPLIFY = 4
-
-
+# The knn_sq8_top10 / knn_rerank_top10 bench twins (bench.TWINS) score a
+# corpus whose non-query vectors are replicated ×amplify with distinct ids
+# vec_id·amplify + r, while the per-dimension stats and the query vector
+# still come from the 1× table — replicas of one vector score exactly
+# equal, so the twin's top-10 is the replica expansion of the plain one.
 def _amplified_corpus(spark: SparkSession, emb: DataFrame, amplify: int) -> DataFrame:
     corpus = emb.filter(F.col("vec_id") != 0)
     if amplify > 1:
@@ -121,38 +108,6 @@ def _amplified_corpus(spark: SparkSession, emb: DataFrame, amplify: int) -> Data
             "embedding",
         )
     return corpus
-
-
-def _sq8_amp_cte(amplify: int) -> str:
-    """_SQ8_CTE with the corpus replicated ×amplify AFTER the stats CTE:
-    stats are replication-invariant (same per-dim min/max), and the encode
-    (c) / dequant (dq) chains then run over the amplified rows — the same
-    work amplification the Spark twin pays through its Arrow kernel."""
-    return f"""
-e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-ex AS (
-  SELECT vec_id, generate_subscripts(v, 1) AS d, unnest(v) AS x FROM e),
-s AS (
-  SELECT list(mn ORDER BY d) AS mins, list(mx ORDER BY d) AS maxs
-  FROM (SELECT d, min(x) AS mn, max(x) AS mx FROM ex GROUP BY d)),
-ea AS (
-  SELECT e.vec_id * {amplify} + t.r AS vec_id, v
-  FROM e CROSS JOIN range({amplify}) t(r) WHERE e.vec_id <> 0),
-c AS (
-  SELECT vec_id,
-         list_transform(v, (x, i) ->
-           CASE WHEN maxs[i] = mins[i] THEN 0
-                ELSE least(255, greatest(0,
-                       CAST(round((x - mins[i]) / (maxs[i] - mins[i]) * 255) AS INTEGER)))
-           END) AS codes
-  FROM ea, s),
-dq AS (
-  SELECT vec_id,
-         list_transform(codes, (cd, i) ->
-           mins[i] + cd * (maxs[i] - mins[i]) / 255) AS dqv
-  FROM c, s)
-"""
 
 
 def _knn_sq8(spark: SparkSession, sf_dir: str, amplify: int = 1) -> DataFrame:
@@ -198,10 +153,10 @@ def _knn_sq8(spark: SparkSession, sf_dir: str, amplify: int = 1) -> DataFrame:
     "actually scans (4× smaller than float32). The quantized scan runs "
     "as an Arrow-batched numpy kernel (bit-identical to the JVM fold, "
     "A/B-measured 5× faster at 1 M×64). Top-10 by cosine, vec_id "
-    "tie-break. bench: graded through the ×4 inline-amplified twin "
-    "(_KNN_AMPLIFY) so the quotient measures the quantized-scan plan's "
-    "marginal cost, not the per-pass constant the driver's slower box "
-    "inflated to 3.48 in round 11.",
+    "tie-break. bench: graded through its bench.TWINS twin (corpus "
+    "amplified after the 1× stats) so the quotient measures the "
+    "quantized-scan plan's marginal cost, not the per-pass constant the "
+    "driver's slower box inflated to 3.48 in round 11.",
     tags=("vectors", "knn", "quantize"),
     bench=True,
     oracle=f"""
@@ -213,19 +168,6 @@ sc AS (
            / (sqrt(list_inner_product(dq.dqv, dq.dqv))
               * sqrt(list_inner_product(q.qv, q.qv))) AS cos_q8
   FROM dq, q WHERE dq.vec_id <> 0)
-SELECT vec_id, round(cos_q8, 8) AS cos_q8
-FROM sc ORDER BY cos_q8 DESC, vec_id LIMIT 10
-""",
-    bench_fn=lambda spark, sf_dir: _knn_sq8(spark, sf_dir, _KNN_AMPLIFY),
-    bench_oracle=f"""
-WITH {_sq8_amp_cte(_KNN_AMPLIFY)},
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-sc AS (
-  SELECT dq.vec_id,
-         list_inner_product(dq.dqv, q.qv)
-           / (sqrt(list_inner_product(dq.dqv, dq.dqv))
-              * sqrt(list_inner_product(q.qv, q.qv))) AS cos_q8
-  FROM dq, q)
 SELECT vec_id, round(cos_q8, 8) AS cos_q8
 FROM sc ORDER BY cos_q8 DESC, vec_id LIMIT 10
 """,
@@ -387,7 +329,7 @@ register(
     "exact float cosine re-ranks ONLY the candidates for the final "
     "top-10. The correctness oracle is the EXACT kNN SQL — a driver "
     "hash-match IS an end-to-end recall-1.0 proof. The graded bench "
-    "twin (bench_oracle) makes DuckDB run the same candidates+re-rank "
+    "twin (bench.TWINS) makes DuckDB run the same candidates+re-rank "
     "pipeline, so the ratio compares equal computations.",
     tags=("vectors", "knn", "quantize", "rerank"),
     bench=True,
@@ -399,32 +341,6 @@ SELECT e.vec_id, round({_EXACT_COS_E}, 8) AS cos_sim
 FROM e, q
 WHERE e.vec_id <> 0
 ORDER BY cos_sim DESC, e.vec_id
-LIMIT 10
-""",
-    # Bench twin: DuckDB runs the SAME SQ8-candidates → exact-re-rank
-    # pipeline over the SAME ×_KNN_AMPLIFY inline-replicated corpus
-    # (equal computation on both engines; see _KNN_AMPLIFY's sizing
-    # rationale — the un-amplified pipeline twin is value-identical to the
-    # exact oracle whenever recall is 1.0, and the amplified twin's
-    # relation to it is the deterministic replica expansion — both
-    # asserted on driver data by tests/test_bench_variants.py).
-    bench_fn=lambda spark, sf_dir: _knn_rerank(spark, sf_dir, _KNN_AMPLIFY),
-    bench_oracle=f"""
-WITH {_sq8_amp_cte(_KNN_AMPLIFY)},
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-cand AS (
-  SELECT dq.vec_id
-  FROM dq, q
-  ORDER BY (list_inner_product(dq.dqv, q.qv)
-            / (sqrt(list_inner_product(dq.dqv, dq.dqv))
-               * sqrt(list_inner_product(q.qv, q.qv)))) DESC, dq.vec_id
-  LIMIT {RERANK_CANDIDATES})
-SELECT ea.vec_id,
-       round((list_inner_product(ea.v, q.qv) /
-              (sqrt(list_inner_product(ea.v, ea.v)) *
-               sqrt(list_inner_product(q.qv, q.qv)))), 8) AS cos_sim
-FROM ea JOIN cand USING (vec_id), q
-ORDER BY cos_sim DESC, ea.vec_id
 LIMIT 10
 """,
 )(_knn_rerank)

@@ -28,31 +28,14 @@ class QuerySpec:
     oracle: str | None = None
     doc: str = ""
     tags: tuple[str, ...] = ()
-    bench: bool = False  # include in bench.py headline set
+    # include in bench.py's headline set; bench.TWINS may time a changed
+    # copy of the row in its scale phase
+    bench: bool = False
     # True for deliberately-quadratic correctness oracles of an approximate
     # scale path (e.g. exact all-pairs cosine backing the LSH ANN query).
     # These refuse to run above a row-count guard unless explicitly
     # overridden — they exist to validate, not to be the production path.
     oracle_twin: bool = False
-    # Bench-scale corpus variant (VERDICT r7 task 2). When set, bench.py's
-    # compute-bound phase times bench_fn/bench_oracle INSTEAD of fn/oracle
-    # — both sides read the same reduced corpus, so the ratio still
-    # compares equal computations. The variant MUST be semantically
-    # identical to fn on every driver testdata dir (it may only bite on
-    # the amplified scale cache); tests/test_bench_variants.py asserts
-    # that equivalence. The driver's correctness gate always checks
-    # fn/oracle — the variant exists only so an output-bound row (minhash:
-    # Θ(candidate pairs) ≈ 1.1e8 at the full 1 M-doc cache) doesn't spend
-    # ~210 s of the 1 200 s bench budget re-proving a growth law that
-    # BASELINE.md already records at 1 M and 2 M docs.
-    bench_fn: QueryFn | None = None
-    bench_oracle: str | None = None
-    # True for the bench rows that materialize multi-GB intermediates
-    # (minhash candidate pairs, the SemDeDup gram prune, PQ encode at
-    # 1 M vectors). bench.py times every light row BEFORE these, so their
-    # page-cache eviction can't inflate the light rows' graded medians
-    # (VERDICT r7 task 1: 6 over-2× readings on byte-identical plans).
-    bench_heavy: bool = False
     # Human-readable note for queries whose oracle comparison is expected
     # to diverge by design (e.g. an ANN path graded against an exact-truth
     # oracle under a CI-asserted recall floor). drive_contract.py copies it
@@ -72,9 +55,6 @@ def register(
     tags: tuple[str, ...] = (),
     bench: bool = False,
     oracle_twin: bool = False,
-    bench_fn: QueryFn | None = None,
-    bench_oracle: str | None = None,
-    bench_heavy: bool = False,
     by_design: str | None = None,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query implementation under ``name``."""
@@ -90,9 +70,6 @@ def register(
             tags=tags,
             bench=bench,
             oracle_twin=oracle_twin,
-            bench_fn=bench_fn,
-            bench_oracle=bench_oracle,
-            bench_heavy=bench_heavy,
             by_design=by_design,
         )
         return fn

@@ -16,71 +16,12 @@ from transilien_api_etl_spark.plans.registry import register
 from transilien_api_etl_spark.session import ensure_query_confs
 
 
-# Inline-amplification factor for the q1 bench twin (round 11, the
-# word_freq/token_stats treatment applied to the relational fast tier).
-# The row graded 1.26-1.40 across r10 runs, then 1.81/1.82 in r11 runs
-# 15-16 on 0.44-0.56 s Spark / 0.24-0.31 s DuckDB scale walls — small
-# enough that the quotient carries this host's measured ±30-50% jitter
-# plus Spark's ~0.2 s fixed per-query cost rather than the plan. The twin
-# replicates lineitem ×_Q1_AMPLIFY INLINE on both engines (Spark:
-# broadcast range fan-out between scan and agg, map-side, no added
-# exchange; DuckDB: CROSS JOIN range(N)), so the graded number measures
-# the scan+filter+8-agg plan where compute dominates. Twin relation:
-# sums and count ×N, averages replication-invariant, group set and order
-# unchanged — asserted on driver data by tests/test_bench_variants.py
-# (Spark fn, DuckDB oracle, and twin-vs-twin value parity). Sizing
-# measured at the 60 M-row scale cache (paired 5-rep probe, BASELINE.md
-# round-11 session 2): quotient medians 3.04 (×1, storm-inflated) →
-# 1.71 (×4) → 1.66 (×8); ×8 puts BOTH walls over 1.1 s and the per-rep
-# quotients in a tight 1.48-1.89 band on a contended box; measured
-# marginal slopes there are ~0.13 s (Spark) vs ~0.11 s (DuckDB) per
-# 60 M rows — marginal ratio ~1.2, so the graded number still carries
-# (and understates by) Spark's fixed constant.
-#
-# Round 12 final session: ×8 → ×16. At ×8 the row graded 1.65-1.92
-# across this round's in-protocol runs — under the bar but with the
-# suite's slimmest margin, and a same-day contended-window probe put the
-# ×8 per-rep quotient band at 1.67-3.15 vs ×16's 1.70-2.02 on the SAME
-# degraded moments (medians 2.40 vs 1.90): doubling the amplification
-# both amortizes more of the fixed constant out of the quotient and —
-# the bigger effect — tightens the band, because a fixed-size jitter
-# spike moves a 4 s wall proportionally half as much as a 2 s one.
-# Budget cost ≈ +2 s per engine per rep (~+45 s at 7 paired reps)
-# against the ~380 s the round-12 oracle-pass work freed.
-_Q1_AMPLIFY = 16
-
-
-def _q1_pricing_summary(
-    spark: SparkSession, sf_dir: str, amplify: int = 1
-) -> DataFrame:
-    ensure_query_confs(spark)
-    l = load_table(spark, sf_dir, "lineitem")
-    if amplify > 1:
-        l = l.crossJoin(F.broadcast(spark.range(amplify).select("id")))
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        l.filter(F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.sum(disc_price * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
 @register(
     "q1_pricing_summary",
     doc="TPC-H Q1 shape: pushed-down ship-date filter + 8-agg hash groupBy "
     "(SURVEY §3 A1/P2/F3/O1). Partial+final HashAggregate, whole-stage "
-    f"codegen. bench: graded through the ×{_Q1_AMPLIFY} inline-amplified twin (see "
-    "_Q1_AMPLIFY) so the number measures the plan, not the sub-jitter "
+    "codegen. bench: graded through its bench.TWINS twin (lineitem "
+    "amplified) so the number measures the plan, not the sub-jitter "
     "0.3 s floor the row hovered on in r11 runs 15-16.",
     tags=("agg", "filter"),
     bench=True,
@@ -99,25 +40,26 @@ WHERE l_shipdate <= TIMESTAMP '2000-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
 """,
-    bench_fn=lambda spark, sf_dir: _q1_pricing_summary(spark, sf_dir, _Q1_AMPLIFY),
-    bench_oracle=f"""
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2)                                        AS sum_qty,
-       round(sum(l_extendedprice), 2)                                   AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2)                AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2)  AS sum_charge,
-       round(avg(l_quantity), 4)                                        AS avg_qty,
-       round(avg(l_extendedprice), 4)                                   AS avg_price,
-       round(avg(l_discount), 4)                                        AS avg_disc,
-       count(*)                                                         AS count_order
-FROM (SELECT * FROM lineitem CROSS JOIN range({_Q1_AMPLIFY}))
-WHERE l_shipdate <= TIMESTAMP '2000-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-""",
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _q1_pricing_summary(spark, sf_dir)
+    ensure_query_confs(spark)
+    l = load_table(spark, sf_dir, "lineitem")
+    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    return (
+        l.filter(F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp"))
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
+            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
+            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
+            F.round(F.sum(disc_price * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
+            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
+            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
+            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
+            F.count(F.lit(1)).alias("count_order"),
+        )
+        .orderBy("l_returnflag", "l_linestatus")
+    )
 
 
 @register(

@@ -18,18 +18,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from transilien_api_etl_spark.functions.vectors import l2_norm
-from transilien_api_etl_spark.io import (
-    cached_bounded_count,
-    cached_row_count,
-    load_table,
-)
+from transilien_api_etl_spark.io import cached_row_count, load_table
 from transilien_api_etl_spark.operators.kmeans import (
     kmeans_assign_model,
     kmeans_oracle_cte,
 )
 from transilien_api_etl_spark.operators.semdedup import within_cluster_survivors
 from transilien_api_etl_spark.plans.registry import register
-from transilien_api_etl_spark.scale import KEY_STRIDE
 from transilien_api_etl_spark.session import ensure_query_confs
 
 _K = 8
@@ -85,45 +80,9 @@ def _derived_k(n: int) -> int:
     return _K if n <= _K * _TARGET_CLUSTER else n // _TARGET_CLUSTER
 
 
-# Reduced-corpus bench twin bound (round 9, VERDICT r8 task 1 — the
-# minhash pattern from plans/text_q.py applied to the last two
-# duckdb-timeout-lower-bound rows). The scale cache amplifies embeddings
-# 500× with vec_id += replica·KEY_STRIDE; the twin keeps the first 64
-# replicas (128 k vectors at the sf0.1 cache), where the SAME recipe —
-# derived k = n/4000 = 32, so the Arrow assignment kernel AND the
-# per-cluster gram prune, i.e. the genuine scale path — completes on
-# DuckDB too: the twin oracle below MEASURED 17.1 s at 128 k vs the >60 s
-# cap the full-corpus unrolled-CTE chain hits at 1 M
-# (scripts/bench_twin_probe.py). On driver testdata vec_id < KEY_STRIDE,
-# so the filter is a no-op and fn ≡ bench_fn (tests/test_bench_variants).
-#
-# Round 12 (VERDICT r11 task 1): 64 → 48 replicas (96 k vectors). The
-# ~17-27 s twin oracle was one of the r11 driver run's budget holes; at
-# 96 k the derived k = 24 is still above _K, so the twin keeps exercising
-# the genuine scale path (per-cluster gram prune) while the NOT-EXISTS oracle — linear in n at fixed cluster size —
-# drops ~25%.
-_BENCH_REPLICA_CAP = 48
-_BENCH_VEC_BOUND = _BENCH_REPLICA_CAP * KEY_STRIDE
-
-# _derived_k as one SQL expression (DuckDB accepts scalar subqueries in
-# LIMIT), so ONE static bench-twin oracle follows the k schedule at every
-# corpus size — at driver SFs it degrades to k=8 and the twin oracle's
-# result set is value-identical to the registered oracle's.
-_K_EXPR_SQL = (
-    f"(SELECT CASE WHEN count(*) <= {_K * _TARGET_CLUSTER} THEN {_K} "
-    f"ELSE count(*)//{_TARGET_CLUSTER} END FROM e)"
-)
-
-
-def _kmeans_df(
-    spark: SparkSession, sf_dir: str, vec_bound: int | None = None
-) -> tuple[DataFrame, int, int]:
+def _kmeans_df(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int, int]:
     emb = load_table(spark, sf_dir, "embeddings")
-    if vec_bound is None:
-        n = cached_row_count(spark, sf_dir, "embeddings")
-    else:
-        emb = emb.filter(F.col("vec_id") < vec_bound)
-        n = cached_bounded_count(spark, sf_dir, "embeddings", "vec_id", vec_bound)
+    n = cached_row_count(spark, sf_dir, "embeddings")
     k = _derived_k(n)
     km, centroids = kmeans_assign_model(
         emb, id_col="vec_id", vec_col="embedding", k=k, iterations=_ITERS,
@@ -153,11 +112,37 @@ def embeddings_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return km.select("vec_id", "cluster", "d2").orderBy("vec_id")
 
 
-def _survivors(
-    spark: SparkSession, sf_dir: str, vec_bound: int | None = None
-) -> DataFrame:
+@register(
+    "semdedup_survivors",
+    doc="SemDeDup stage 2 (SURVEY §3 F10 scale path): within each k-means "
+    "cluster, drop members with a cosine≥τ smaller-id neighbour (τ=0.25). "
+    "Pair formation is cluster-bounded — Σ cluster_size², never n² — which "
+    "is the property that survives a 100 TB corpus (k scales with n above "
+    "the oracle's domain; see _TARGET_CLUSTER). Survivor set hash-checked "
+    "against the unrolled-CTE oracle end-to-end at driver SFs. bench: "
+    "graded through its bench.TWINS twin (embeddings reduced to whole "
+    "scale-cache replicas, the same derived k on both engines) so the "
+    "ratio is a measured number instead of the capped lower bound the "
+    "full-corpus quadratic NOT EXISTS chain forced.",
+    tags=("vectors", "dedup", "clustering"),
+    bench=True,
+    oracle=f"""
+WITH {kmeans_oracle_cte(_K, _ITERS)}
+SELECT a.vec_id, a.cluster
+FROM af a
+WHERE NOT EXISTS (
+  SELECT 1 FROM af b
+  WHERE b.cluster = a.cluster AND b.vec_id < a.vec_id
+    AND round(list_inner_product(a.v, b.v) /
+              (sqrt(list_inner_product(a.v, a.v)) *
+               sqrt(list_inner_product(b.v, b.v))), 6) >= {_TAU}
+)
+ORDER BY a.vec_id
+""",
+)
+def semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_query_confs(spark)
-    km, k, dim = _kmeans_df(spark, sf_dir, vec_bound)
+    km, k, dim = _kmeans_df(spark, sf_dir)
     if k > _K:
         # Scale path (outside the oracle's k=8 / bit-parity domain, which
         # no driver SF leaves): per-cluster gram-matrix prune in a grouped
@@ -216,56 +201,3 @@ def _survivors(
         .select(F.col("a.vec_id").alias("vec_id"), F.col("a.cluster").alias("cluster"))
         .orderBy("vec_id")
     )
-
-
-def _semdedup_survivors_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _survivors(spark, sf_dir, vec_bound=_BENCH_VEC_BOUND)
-
-
-@register(
-    "semdedup_survivors",
-    doc="SemDeDup stage 2 (SURVEY §3 F10 scale path): within each k-means "
-    "cluster, drop members with a cosine≥τ smaller-id neighbour (τ=0.25). "
-    "Pair formation is cluster-bounded — Σ cluster_size², never n² — which "
-    "is the property that survives a 100 TB corpus (k scales with n above "
-    "the oracle's domain; see _TARGET_CLUSTER). Survivor set hash-checked "
-    "against the unrolled-CTE oracle end-to-end at driver SFs. bench "
-    "(round 9): the graded row runs the 128 k-vector reduced-corpus twin "
-    "on BOTH engines — same vec_id bound, same derived k=32 (the SQL "
-    "k-schedule subquery in _K_EXPR_SQL), same Arrow-kernel-vs-CTE "
-    "recipe — so the ratio is a measured number instead of the capped "
-    "lower bound the full-corpus quadratic NOT EXISTS chain forced "
-    "(oracle measured 17.1 s at 128 k; scripts/bench_twin_probe.py).",
-    tags=("vectors", "dedup", "clustering"),
-    bench=True,
-    bench_heavy=True,
-    oracle=f"""
-WITH {kmeans_oracle_cte(_K, _ITERS)}
-SELECT a.vec_id, a.cluster
-FROM af a
-WHERE NOT EXISTS (
-  SELECT 1 FROM af b
-  WHERE b.cluster = a.cluster AND b.vec_id < a.vec_id
-    AND round(list_inner_product(a.v, b.v) /
-              (sqrt(list_inner_product(a.v, a.v)) *
-               sqrt(list_inner_product(b.v, b.v))), 6) >= {_TAU}
-)
-ORDER BY a.vec_id
-""",
-    bench_fn=_semdedup_survivors_bench,
-    bench_oracle=f"""
-WITH {kmeans_oracle_cte(_K_EXPR_SQL, _ITERS, where=f"vec_id < {_BENCH_VEC_BOUND}")},
-afn AS MATERIALIZED (
-  SELECT vec_id, v, cluster, sqrt(list_inner_product(v, v)) AS nrm FROM af)
-SELECT a.vec_id, a.cluster
-FROM afn a
-WHERE NOT EXISTS (
-  SELECT 1 FROM afn b
-  WHERE b.cluster = a.cluster AND b.vec_id < a.vec_id
-    AND round(list_inner_product(a.v, b.v) / (a.nrm * b.nrm), 6) >= {_TAU}
-)
-ORDER BY a.vec_id
-""",
-)
-def semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _survivors(spark, sf_dir)

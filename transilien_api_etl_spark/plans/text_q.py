@@ -29,7 +29,6 @@ from transilien_api_etl_spark.operators.dedup import (
     minhash_signature_pairs,
 )
 from transilien_api_etl_spark.plans.registry import register
-from transilien_api_etl_spark.scale import KEY_STRIDE
 from transilien_api_etl_spark.session import ensure_query_confs
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
@@ -50,33 +49,28 @@ _JACCARD_SH_CONCAT = " || ' ' || ".join(
     f"s[i+{j}]" for j in range(_JACCARD_SHINGLE_N)
 )
 
-# Inline-amplification factor for the docs_word_freq_top20 bench twin
-# (defined here, above its consumer; full rationale in the comment block
-# ahead of _docs_word_freq). Round 12 (VERDICT r11 task 2): ×4 → ×8 — the
-# ×4 twin was sized on the builder's box and graded 2.21 on the driver's
-# slower one, where its walls sank back toward the jitter floor; ×8 puts
-# both engines' walls ≥ ~2 s there (the q1/events_tumbling ×8 recipe).
-_WF_AMPLIFY = 8
-# docs_token_stats amplifies harder (round-11 probes, scale cache = 1 M
-# docs): at x4 Spark's wall was STILL constant-dominated (0.40 s at x4 ->
-# 0.44 s at x16 while DuckDB grew linearly 0.20 -> 0.71 s), so the x4
-# quotient (~1.98) measured Spark's fixed task-scheduling cost against
-# DuckDB's compute. At x16 both walls clear the ~0.1 s jitter floor and
-# the per-rep quotients are stable (0.61-1.08, graded 0.62). Measured
-# marginal slopes: Spark ~0.0033 s/M docs (32-way length arithmetic) vs
-# DuckDB ~0.044 s/M — the graded 0.62 UNDERSTATES the plan's marginal
-# advantage (~13x), i.e. the residual bias direction is against Spark
-# and shrinks with amplification (asymptote ~0.08).
-_TS_AMPLIFY = 16
 
-
-def _docs_token_stats(
-    spark: SparkSession, sf_dir: str, amplify: int = 1
-) -> DataFrame:
+@register(
+    "docs_token_stats",
+    doc="Corpus token statistics per language (SURVEY §3 F9): pure-DataFrame "
+    "tokenizer (split) so the whole plan is one codegen'd scan+agg. "
+    "bench: graded through its bench.TWINS twin (documents amplified): "
+    "the 1 M-doc walls are 0.10-0.26 s on both engines, inside the "
+    "host's jitter floor, and the row hovered 1.4-2.4 across rounds 9-11 "
+    "without a plan change.",
+    tags=("text",),
+    bench=True,
+    oracle="""
+SELECT lang,
+       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
+       count(*) AS n_docs,
+       round(avg(n_chars), 4) AS avg_chars
+FROM documents GROUP BY lang ORDER BY lang
+""",
+)
+def docs_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_query_confs(spark)
     d = load_table(spark, sf_dir, "documents")
-    if amplify > 1:
-        d = d.crossJoin(F.broadcast(spark.range(amplify).select("id")))
     return (
         d.groupBy("lang")
         .agg(
@@ -89,77 +83,12 @@ def _docs_token_stats(
 
 
 @register(
-    "docs_token_stats",
-    doc="Corpus token statistics per language (SURVEY §3 F9): pure-DataFrame "
-    "tokenizer (split) so the whole plan is one codegen'd scan+agg. "
-    "bench: graded through the ×16 inline-amplified twin (same class as "
-    "docs_word_freq_top20's ×4 — see _TS_AMPLIFY for the measured sizing; "
-    "the graded 1 M-doc walls are 0.10-0.26 s on both engines, inside "
-    "the host's jitter floor, and the row hovered 1.4-2.4 across rounds "
-    "9-11 without a plan change). Twin output ≡ fn output with n_tokens "
-    "and n_docs ×16 and avg_chars unchanged (replication moves no doc "
-    "across langs and avg is replication-invariant) — asserted on driver "
-    "data by tests/test_bench_variants.py.",
-    tags=("text",),
-    bench=True,
-    oracle="""
-SELECT lang,
-       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-       count(*) AS n_docs,
-       round(avg(n_chars), 4) AS avg_chars
-FROM documents GROUP BY lang ORDER BY lang
-""",
-    bench_fn=lambda spark, sf_dir: _docs_token_stats(spark, sf_dir, _TS_AMPLIFY),
-    bench_oracle=f"""
-SELECT lang,
-       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-       count(*) AS n_docs,
-       round(avg(n_chars), 4) AS avg_chars
-FROM (SELECT * FROM documents CROSS JOIN range({_TS_AMPLIFY}))
-GROUP BY lang ORDER BY lang
-""",
-)
-def docs_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs_token_stats(spark, sf_dir)
-
-
-# Amplified bench twin for the word-freq row (VERDICT r10 task 3). The
-# graded 1 M-doc walls are 0.10-0.26 s on BOTH engines — inside this
-# host's measured ±30-50% jitter floor, which is why the row hovered
-# 1.56-1.93 for four rounds without a single plan change. The twin
-# replicates every document _WF_AMPLIFY× INLINE (broadcast fan-out before
-# the tokenizer — map-side, no shuffle; DuckDB gets the identical CROSS
-# JOIN range(N)), so the graded number measures tokenize+agg over 4 M
-# docs where the compute dominates the floor. The twin's output is fn's
-# output with every count × _WF_AMPLIFY (replication changes no word and
-# scaling preserves the (n DESC, word) order), a deterministic relation
-# tests/test_bench_variants.py asserts on driver data — this is the
-# AMPLIFIED variant class, vs minhash's reduced class (same disclosure
-# path in the bench sidecar). (_WF_AMPLIFY itself is defined above
-# _docs_token_stats, which shares it.)
-
-
-def _docs_word_freq(spark: SparkSession, sf_dir: str, amplify: int = 1) -> DataFrame:
-    ensure_query_confs(spark)
-    d = load_table(spark, sf_dir, "documents")
-    if amplify > 1:
-        d = d.crossJoin(F.broadcast(spark.range(amplify).select("id")))
-    return (
-        d.select(F.explode(tokenize(F.col("text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "word")
-        .limit(20)
-    )
-
-
-@register(
     "docs_word_freq_top20",
     doc="Global word frequencies, top-20 (SURVEY §3 F9): explode → hash agg "
     "→ TakeOrderedAndProject; partial aggregation makes the explode "
-    "shuffle-light at scale. bench: graded through the ×4 inline-"
-    "amplified twin (see _WF_AMPLIFY) so the number measures the plan, "
-    "not the sub-jitter 0.1 s floor.",
+    "shuffle-light at scale. bench: graded through its bench.TWINS twin "
+    "(documents amplified) so the number measures the plan, not the "
+    "sub-jitter 0.1 s floor.",
     tags=("text", "topk"),
     bench=True,
     oracle="""
@@ -167,16 +96,17 @@ SELECT w AS word, count(*) AS n
 FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
 GROUP BY w ORDER BY n DESC, word LIMIT 20
 """,
-    bench_fn=lambda spark, sf_dir: _docs_word_freq(spark, sf_dir, _WF_AMPLIFY),
-    bench_oracle=f"""
-SELECT w AS word, count(*) AS n
-FROM (SELECT unnest(string_split(text, ' ')) AS w
-      FROM documents CROSS JOIN range({_WF_AMPLIFY}))
-GROUP BY w ORDER BY n DESC, word LIMIT 20
-""",
 )
 def docs_word_freq_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs_word_freq(spark, sf_dir)
+    ensure_query_confs(spark)
+    d = load_table(spark, sf_dir, "documents")
+    return (
+        d.select(F.explode(tokenize(F.col("text"))).alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy(F.desc("n"), "word")
+        .limit(20)
+    )
 
 
 @register(
@@ -396,8 +326,7 @@ _MINHASH_MAX_BUCKET = 1000
 
 
 def _minhash_oracle_sql(
-    *, num_hashes: int, band_size: int, max_bucket_size: int,
-    doc_where: str = "",
+    *, num_hashes: int, band_size: int, max_bucket_size: int
 ) -> str:
     """DuckDB twin of operators/dedup.minhash_signature_pairs over the
     3-shingle tokens: identical seeded-md5 minima, identical BIGINT slot-
@@ -421,10 +350,9 @@ def _minhash_oracle_sql(
         for b in range(n_bands)
     )
     slot_eq = " AND ".join(f"a.s{i} = b.s{i}" for i in range(band_size))
-    where_clause = f" WHERE {doc_where}" if doc_where else ""
     return f"""
 WITH tok AS (
-  SELECT doc_id, string_split(text, ' ') AS s FROM documents{where_clause}
+  SELECT doc_id, string_split(text, ' ') AS s FROM documents
 ), sh AS (
   SELECT doc_id,
          unnest(list_distinct(list_transform(
@@ -447,41 +375,26 @@ GROUP BY 1, 2 ORDER BY id_a, id_b
 """
 
 
-# Bench-scale corpus bound for the minhash row (VERDICT r7 task 2). The
-# scale cache amplifies documents 200× with doc_id += replica·KEY_STRIDE
-# (scale.py); candidate pairs live almost entirely INSIDE each replica
-# group (replicas are near-dups of one original by construction), so pair
-# count grows ~quadratically in replica depth: 200 replicas → ~1.1·10⁸
-# pairs → ~70 s/rep Spark-side, ~210 s of the 1 200 s bench budget on one
-# output-bound row whose Θ(matches) growth law BASELINE.md already records
-# at 1 M AND 2 M docs. The bench variant keeps every ORIGINAL doc but only
-# the first _BENCH_REPLICA_CAP replicas. On driver testdata doc_id is a
-# small integer, so the filter is a no-op there —
-# tests/test_bench_variants.py asserts fn ≡ bench_fn on un-amplified data.
-#
-# Round 12 (VERDICT r11 task 1 — the oracle pass must COMPLETE on a
-# 1.3×-slower box): 100 → 25 replicas. At 100 the twin was the single
-# biggest budget line on a degraded box — Spark 43 s/rep (2.7·10⁷ pairs)
-# and a 33-102 s DuckDB oracle, ~230 s of the 1 200 s budget; the driver's
-# r11 run holed this oracle outright. 50 was probed first (Spark 13 s,
-# oracle still 21-55 s on a degraded box — the oracle is md5-bound, linear
-# in docs, not pair-bound); at 25 replicas (125 k docs, ~1.7·10⁶ pairs)
-# both walls stay far above the jitter floor (multi-second) and the ratio
-# still grades the identical Θ(pairs) plan. (A distinct-shingle md5
-# reformulation of the oracle was probed and REJECTED: value-identical but
-# 21 s → 23-60 s — DuckDB's md5 is cheaper than the 2.5·10⁷-row join back.)
-_BENCH_REPLICA_CAP = 25
-_BENCH_DOC_BOUND = _BENCH_REPLICA_CAP * KEY_STRIDE
-
-
-def _minhash_candidate_pairs(
-    spark: SparkSession, sf_dir: str, doc_id_bound: int | None = None
-) -> DataFrame:
+@register(
+    "docs_minhash_candidates",
+    doc="MinHash+LSH near-dup candidates (SURVEY §3 F10): 16 seeded-md5 "
+    "minima → 4 bands of 4 → band-bucket self-join. Pure built-ins, no "
+    "UDF, no quadratic pair scan. HASH-CHECKED since round 3: the "
+    "portable permutation hash lets DuckDB rebuild the identical "
+    "signatures, bands, bucket-size cap, and candidate pairs. bench: the "
+    "scale cache's 200-replica doc groups are near-dups by construction, "
+    "so the 1 M-doc candidate set is ~1.1e8 pairs — the boilerplate-"
+    "cluster shape max_bucket_size exists to bound (BASELINE.md round-7); "
+    "the graded row runs its bench.TWINS twin (documents reduced to whole "
+    "replicas, both engines) so the budget measures the plan, not the "
+    "output volume.",
+    tags=("dedup", "lsh"),
+    oracle=_minhash_oracle_sql(num_hashes=16, band_size=4, max_bucket_size=_MINHASH_MAX_BUCKET),
+    bench=True,
+)
+def docs_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_query_confs(spark)
     d = load_table(spark, sf_dir, "documents")
-    if doc_id_bound is not None:
-        # plain comparison on the scan column → pushed to the parquet reader
-        d = d.filter(F.col("doc_id") < doc_id_bound)
     d = d.withColumn(
         "_toks", tokenize(F.col("text"))  # once per row; see docs_shingle_jaccard
     )
@@ -494,38 +407,6 @@ def _minhash_candidate_pairs(
         max_bucket_size=_MINHASH_MAX_BUCKET,
     )
     return pairs.orderBy("id_a", "id_b")
-
-
-def _docs_minhash_candidates_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _minhash_candidate_pairs(spark, sf_dir, doc_id_bound=_BENCH_DOC_BOUND)
-
-
-@register(
-    "docs_minhash_candidates",
-    doc="MinHash+LSH near-dup candidates (SURVEY §3 F10): 16 seeded-md5 "
-    "minima → 4 bands of 4 → band-bucket self-join. Pure built-ins, no "
-    "UDF, no quadratic pair scan. HASH-CHECKED since round 3: the "
-    "portable permutation hash lets DuckDB rebuild the identical "
-    "signatures, bands, bucket-size cap, and candidate pairs. bench: the "
-    "scale cache's 200-replica doc groups are near-dups by construction, "
-    "so the 1 M-doc candidate set is ~1.1e8 pairs — the boilerplate-"
-    "cluster shape max_bucket_size exists to bound (BASELINE.md round-7); "
-    "the graded row runs the 500 k-doc bench variant (both engines, same "
-    "filter) so the budget measures the plan, not the output volume.",
-    tags=("dedup", "lsh"),
-    oracle=_minhash_oracle_sql(num_hashes=16, band_size=4, max_bucket_size=_MINHASH_MAX_BUCKET),
-    bench=True,
-    bench_fn=_docs_minhash_candidates_bench,
-    bench_oracle=_minhash_oracle_sql(
-        num_hashes=16,
-        band_size=4,
-        max_bucket_size=_MINHASH_MAX_BUCKET,
-        doc_where=f"doc_id < {_BENCH_DOC_BOUND}",
-    ),
-    bench_heavy=True,
-)
-def docs_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _minhash_candidate_pairs(spark, sf_dir)
 
 
 @register(
@@ -881,22 +762,9 @@ def docs_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SEG_WORDS = 10
 
-# Reduced-corpus bench twin bound for docs_segment_dedup (round 12 — the
-# minhash pattern above, VERDICT r11 task 1): the full-corpus oracle (1 M
-# docs through the window + string_agg reassembly) measured ≥19-53 s on
-# degraded boxes — it was flagged a capped lower bound in the driver's own
-# r11 artifact — on a row Spark wins ~7-10×. The twin keeps every original
-# doc plus the first 50 of the 200 replicas (250 k docs); both engines
-# filter identically and the bound is a no-op on driver testdata.
-_SEG_BENCH_REPLICA_CAP = 50
-_SEG_BENCH_DOC_BOUND = _SEG_BENCH_REPLICA_CAP * KEY_STRIDE
-
-
-def _segment_dedup_oracle(doc_where: str = "") -> str:
-    where_clause = f" WHERE {doc_where}" if doc_where else ""
-    return f"""
+_SEGMENT_DEDUP_ORACLE = f"""
 WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS words FROM documents{where_clause}),
+  SELECT doc_id, string_split(text, ' ') AS words FROM documents),
 blk AS (
   SELECT doc_id, i AS block_no,
          array_to_string(list_slice(words, i * {_SEG_WORDS} + 1,
@@ -929,29 +797,17 @@ FROM kept GROUP BY doc_id ORDER BY doc_id
     "reassembled from its surviving blocks in order. Two shuffles total "
     "(block-text window + per-doc regroup), both on bounded keys; at "
     "100 TB the block-text shuffle is the classic dedup shuffle, nothing "
-    "quadratic anywhere.",
+    "quadratic anywhere. bench: graded through its bench.TWINS twin "
+    "(documents reduced to whole replicas).",
     tags=("text", "dedup", "pipeline"),
     bench=True,
-    oracle=_segment_dedup_oracle(),
-    bench_fn=lambda spark, sf_dir: _docs_segment_dedup(
-        spark, sf_dir, _SEG_BENCH_DOC_BOUND
-    ),
-    bench_oracle=_segment_dedup_oracle(f"doc_id < {_SEG_BENCH_DOC_BOUND}"),
+    oracle=_SEGMENT_DEDUP_ORACLE,
 )
 def docs_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs_segment_dedup(spark, sf_dir)
-
-
-def _docs_segment_dedup(
-    spark: SparkSession, sf_dir: str, doc_bound: int | None = None
-) -> DataFrame:
     from pyspark.sql import Window
 
     ensure_query_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
-    if doc_bound is not None:
-        # plain comparison on the scan column → pushed to the parquet reader
-        docs = docs.filter(F.col("doc_id") < doc_bound)
     k = _SEG_WORDS
     # Materialize split(text) ONCE per row: Catalyst does not hoist
     # subexpressions out of higher-order-function lambda bodies, so an

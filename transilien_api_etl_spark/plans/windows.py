@@ -104,22 +104,12 @@ def window_lag_headway(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Reduced-corpus bench twin bound for window_rolling_avg (round 12 — the
-# events_q._EV_BENCH_BOUND treatment; see that comment block for the
-# replica-complete argument). The full-corpus oracle cost 4.8-8 s × 5 reps
-# of the 1 200 s bench budget on a row Spark wins 25-50×; the bound keeps
-# the first 25 of the scale cache's 100 event replicas — complete per-user
-# histories — and is a no-op on driver testdata (event_id < KEY_STRIDE).
-from transilien_api_etl_spark.scale import KEY_STRIDE as _KEY_STRIDE
-
-_RA_BENCH_BOUND = 25 * _KEY_STRIDE
-
-
 @register(
     "window_rolling_avg",
     doc="Range-frame rolling aggregate (SURVEY §3 W3 — trailing 1h average "
     "delay per station): RANGE frame over epoch-µs ordering so both engines "
-    "agree on frame boundaries exactly.",
+    "agree on frame boundaries exactly. bench: graded through its "
+    "bench.TWINS twin (events reduced to whole replicas).",
     tags=("window",),
     bench=True,
     oracle="""
@@ -130,30 +120,10 @@ SELECT user_id, event_id,
 FROM events
 ORDER BY user_id, event_id
 """,
-    bench_fn=lambda spark, sf_dir: _window_rolling_avg(
-        spark, sf_dir, _RA_BENCH_BOUND
-    ),
-    bench_oracle=f"""
-SELECT user_id, event_id,
-       round(avg(value) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-                              RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW), 4)
-         AS rolling_avg_1h
-FROM events WHERE event_id < {_RA_BENCH_BOUND}
-ORDER BY user_id, event_id
-""",
 )
 def window_rolling_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _window_rolling_avg(spark, sf_dir)
-
-
-def _window_rolling_avg(
-    spark: SparkSession, sf_dir: str, event_bound: int | None = None
-) -> DataFrame:
     ensure_query_confs(spark)
     e = load_table(spark, sf_dir, "events")
-    if event_bound is not None:
-        # plain comparison on the scan column → pushed to the parquet reader
-        e = e.filter(F.col("event_id") < event_bound)
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.unix_micros("ts"))

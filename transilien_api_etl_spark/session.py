@@ -30,6 +30,15 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """Driver heap when SPARK_DRIVER_MEMORY is unset: min(16g, half of
+    physical RAM). The driver JVM shares the box with its Python workers
+    and with in-process DuckDB (bench.py's oracles), so a heap the size of
+    the box's RAM could not be committed by both."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // (1 << 20)
+    return f"{min(16 * 1024, half_mb)}m"
+
+
 def build_session(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -83,7 +92,10 @@ def build_session(
         # this engine is unaffected by the flag.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
