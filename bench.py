@@ -89,8 +89,6 @@ sys.path.insert(0, REPO_DIR)
 
 from transilien_api_etl_spark import plans  # noqa: E402
 from transilien_api_etl_spark.io import TABLES, table_transforms  # noqa: E402
-from transilien_api_etl_spark.operators.kmeans import kmeans_oracle_cte  # noqa: E402
-from transilien_api_etl_spark.operators.pq import pq_oracle_cte  # noqa: E402
 from transilien_api_etl_spark.plans import pq_q, quantize_q, semdedup_q  # noqa: E402
 from transilien_api_etl_spark.plans.registry import (  # noqa: E402
     REGISTRY,
@@ -290,120 +288,16 @@ def describe_twin(twin: Twin) -> str:
     return "; ".join(parts + ([twin.note] if twin.note else []))
 
 
-# SemDeDup's registered oracle fixes k = 8, the value semdedup_q._derived_k
-# takes at every driver SF. Its twin oracle derives k from the corpus
-# count in SQL (DuckDB accepts a scalar subquery in LIMIT), so both engines
-# run the same k = n/4000 on the reduced corpus, and it materializes the
-# norms once instead of per probed pair.
-_SEMDEDUP_K_SQL = (
-    f"(SELECT CASE WHEN count(*) <= {semdedup_q._K * semdedup_q._TARGET_CLUSTER} "
-    f"THEN {semdedup_q._K} ELSE count(*)//{semdedup_q._TARGET_CLUSTER} END FROM e)"
-)
-_SEMDEDUP_SQL = f"""
-WITH {kmeans_oracle_cte(_SEMDEDUP_K_SQL, semdedup_q._ITERS)},
-afn AS MATERIALIZED (
-  SELECT vec_id, v, cluster, sqrt(list_inner_product(v, v)) AS nrm FROM af)
-SELECT a.vec_id, a.cluster
-FROM afn a
-WHERE NOT EXISTS (
-  SELECT 1 FROM afn b
-  WHERE b.cluster = a.cluster AND b.vec_id < a.vec_id
-    AND round(list_inner_product(a.v, b.v) / (a.nrm * b.nrm), 6) >= {semdedup_q._TAU}
-)
-ORDER BY a.vec_id
-"""
-
-# PQ's registered oracle trains on every vector (pq_train_sample_mod is 1
-# at every driver SF) with a window argmin. Its twin oracle samples
-# training by the same modulus as pq_train (greatest(n//65536, 1), over
-# CTE nn's count n) and uses the minjoin argmin — value-identical, ~4×
-# faster, so the denominator is DuckDB's best form of the same recipe.
-_PQ_SQL = f"""
-WITH {pq_oracle_cte(
-        m_sub=pq_q.M_SUB,
-        sub_dim=pq_q.SUB_DIM,
-        k=pq_q.K_CODES,
-        iterations=pq_q.ITERS,
-        train_mod_expr="greatest(n//65536, 1)",
-        argmin="minjoin",
-    )}
-SELECT a0.vec_id, round({pq_q._ADC_SUM}, 6) AS adc_d2
-FROM {pq_q._CODE_JOINS}{pq_q._LUT_JOINS}
-WHERE a0.vec_id <> 0
-ORDER BY adc_d2, a0.vec_id
-LIMIT 10
-"""
-
 # The two kNN twins score a ×KNN_AMPLIFY corpus against per-dimension
 # stats and a query vector taken from the 1× table, so they are explicit
-# (fn, sql) pairs: a whole-table Amplify would also multiply the stats
-# pass, which is not the computation being graded. Every non-query vector
-# is replicated with distinct ids vec_id·N + r (Spark: quantize_q's
-# amplify argument, before the Arrow kernel; DuckDB: the ea CTE after the
-# stats CTE). Replicas of one vector score exactly equal, so each twin's
-# top-10 is the replica expansion of the plain one. ×4 because the rows
-# graded 3.48 / 2.53 in the driver's r11 artifact against a builder band
-# of 1.1-2.0: at 1 M vectors the quotient still carried Spark's fixed
-# per-pass constant (scan setup, worker spin-up) over a sub-second DuckDB
-# denominator.
+# (fn, sql) pairs built by quantize_q (see its _amplified_corpus note).
+# ×4 because the rows graded 3.48 / 2.53 in the driver's r11 artifact
+# against an expected band of 1.1-2.0: at 1 M vectors the quotient still
+# carried Spark's fixed per-pass constant (scan setup, worker spin-up)
+# over a sub-second DuckDB denominator.
 KNN_AMPLIFY = 4
-_SQ8_AMPLIFIED_CTE = f"""
-e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-ex AS (
-  SELECT vec_id, generate_subscripts(v, 1) AS d, unnest(v) AS x FROM e),
-s AS (
-  SELECT list(mn ORDER BY d) AS mins, list(mx ORDER BY d) AS maxs
-  FROM (SELECT d, min(x) AS mn, max(x) AS mx FROM ex GROUP BY d)),
-ea AS (
-  SELECT e.vec_id * {KNN_AMPLIFY} + t.r AS vec_id, v
-  FROM e CROSS JOIN range({KNN_AMPLIFY}) t(r) WHERE e.vec_id <> 0),
-c AS (
-  SELECT vec_id,
-         list_transform(v, (x, i) ->
-           CASE WHEN maxs[i] = mins[i] THEN 0
-                ELSE least(255, greatest(0,
-                       CAST(round((x - mins[i]) / (maxs[i] - mins[i]) * 255) AS INTEGER)))
-           END) AS codes
-  FROM ea, s),
-dq AS (
-  SELECT vec_id,
-         list_transform(codes, (cd, i) ->
-           mins[i] + cd * (maxs[i] - mins[i]) / 255) AS dqv
-  FROM c, s)
-"""
-_SQ8_SQL = f"""
-WITH {_SQ8_AMPLIFIED_CTE},
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-sc AS (
-  SELECT dq.vec_id,
-         list_inner_product(dq.dqv, q.qv)
-           / (sqrt(list_inner_product(dq.dqv, dq.dqv))
-              * sqrt(list_inner_product(q.qv, q.qv))) AS cos_q8
-  FROM dq, q)
-SELECT vec_id, round(cos_q8, 8) AS cos_q8
-FROM sc ORDER BY cos_q8 DESC, vec_id LIMIT 10
-"""
-# rerank's registered oracle is the EXACT kNN truth (its recall proof);
-# the twin times the same SQ8-candidates → exact re-rank pipeline Spark runs.
-_RERANK_SQL = f"""
-WITH {_SQ8_AMPLIFIED_CTE},
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-cand AS (
-  SELECT dq.vec_id
-  FROM dq, q
-  ORDER BY (list_inner_product(dq.dqv, q.qv)
-            / (sqrt(list_inner_product(dq.dqv, dq.dqv))
-               * sqrt(list_inner_product(q.qv, q.qv)))) DESC, dq.vec_id
-  LIMIT {quantize_q.RERANK_CANDIDATES})
-SELECT ea.vec_id,
-       round((list_inner_product(ea.v, q.qv) /
-              (sqrt(list_inner_product(ea.v, ea.v)) *
-               sqrt(list_inner_product(q.qv, q.qv)))), 8) AS cos_sim
-FROM ea JOIN cand USING (vec_id), q
-ORDER BY cos_sim DESC, ea.vec_id
-LIMIT 10
-"""
+_SQ8_FN, _SQ8_SQL = quantize_q.knn_sq8_twin(KNN_AMPLIFY)
+_RERANK_FN, _RERANK_SQL = quantize_q.knn_rerank_twin(KNN_AMPLIFY)
 
 TWINS: dict[str, Twin] = {
     # Amplified rows: at 1× both engines' walls sat inside this host's
@@ -455,7 +349,7 @@ TWINS: dict[str, Twin] = {
     # full-cache unrolled-CTE chain ran past a 60 s cap, 128 k took 17.1 s.
     "semdedup_survivors": Twin(
         {"embeddings": Below("vec_id", 48 * KEY_STRIDE)},
-        sql=_SEMDEDUP_SQL,
+        sql=semdedup_q.DERIVED_K_ORACLE,
         note="oracle derives k from the count",
     ),
     # pq: 200 k vectors, the smallest size where pq_train samples its
@@ -463,16 +357,16 @@ TWINS: dict[str, Twin] = {
     # 6.1 s at 100 k, 9.9 s at 200 k, 146-151 s at 500 k.
     "knn_pq_adc_top10": Twin(
         {"embeddings": Below("vec_id", 100 * KEY_STRIDE)},
-        sql=_PQ_SQL,
+        sql=pq_q.SAMPLED_ORACLE,
         note="oracle samples training like pq_train",
     ),
     "knn_sq8_top10": Twin(
-        fn=lambda spark, sf_dir: quantize_q._knn_sq8(spark, sf_dir, KNN_AMPLIFY),
+        fn=_SQ8_FN,
         sql=_SQ8_SQL,
         note=f"embeddings ×{KNN_AMPLIFY} scored with 1× stats and query",
     ),
     "knn_rerank_top10": Twin(
-        fn=lambda spark, sf_dir: quantize_q._knn_rerank(spark, sf_dir, KNN_AMPLIFY),
+        fn=_RERANK_FN,
         sql=_RERANK_SQL,
         note=f"embeddings ×{KNN_AMPLIFY} scored with 1× stats and query; "
         "oracle is the SQ8 + re-rank pipeline",

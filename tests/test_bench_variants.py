@@ -20,7 +20,6 @@ amplified rows, the kNN replica expansion).
 from __future__ import annotations
 
 import dataclasses
-import math
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -90,7 +89,8 @@ def _rows(pdf: pd.DataFrame, cols) -> list[tuple]:
 
 def _assert_same_rows(got: pd.DataFrame, want: pd.DataFrame, tol: float = 0.0):
     """Same columns and the same rows in the same (ORDER BY) order; floats
-    within ``tol``, NULL/NaN equal to each other."""
+    equal, or closer than ``tol`` when it is set; NULL/NaN equal to each
+    other."""
     assert sorted(got.columns) == sorted(want.columns)
     cols = list(got.columns)
     a, b = _rows(got, cols), _rows(want, cols)
@@ -100,7 +100,8 @@ def _assert_same_rows(got: pd.DataFrame, want: pd.DataFrame, tol: float = 0.0):
             if pd.isna(x) or pd.isna(y):
                 assert pd.isna(x) and pd.isna(y), (ra, rb)
             elif isinstance(x, float) or isinstance(y, float):
-                assert math.isclose(x, y, rel_tol=1e-12, abs_tol=tol), (ra, rb)
+                x, y = float(x), float(y)
+                assert abs(x - y) < tol if tol else x == y, (ra, rb)
             else:
                 assert x == y, (ra, rb)
 
@@ -108,24 +109,53 @@ def _assert_same_rows(got: pd.DataFrame, want: pd.DataFrame, tol: float = 0.0):
 # ---- generic tests over TWINS -------------------------------------------
 
 
+# Twin rows that are not HEAVY_ROWS: the amplified rows (both engines
+# replicate the input so the graded walls clear the jitter floor) and the
+# oracle-side reductions (light Spark walls, but 5-85 s DuckDB oracles on
+# the scale cache).
+_LIGHT_VARIANTS = {
+    "knn_rerank_top10",
+    "knn_sq8_top10",
+    "docs_word_freq_top20",
+    "docs_token_stats",
+    "q1_pricing_summary",
+    "events_tumbling_1h",
+    "events_sessionize",
+    "asof_join_purchase_click",
+    "window_rolling_avg",
+    "docs_segment_dedup",
+    "pretrain_corpus_report",
+}
+
+
 def test_variant_rows_are_heavy_bench_rows():
     """Every TWINS and HEAVY_ROWS row is a bench row with an oracle (the
-    scale phase only times bench rows, and a ratio needs a denominator)."""
+    scale phase only times bench rows, and a ratio needs a denominator);
+    a twin that replaces the Spark fn also replaces the SQL, or the ratio
+    compares different computations."""
     assert bench.HEAVY_ROWS and bench.TWINS
     for name in set(bench.TWINS) | bench.HEAVY_ROWS:
         spec = REGISTRY[name]
         assert spec.bench and spec.oracle, name
-    for twin in bench.TWINS.values():
+    for name, twin in bench.TWINS.items():
+        assert name in bench.HEAVY_ROWS or name in _LIGHT_VARIANTS, name
+        assert twin.fn is None or twin.sql is not None, name
+        assert twin.tables or twin.fn is not None, name
         assert bench.describe_twin(twin)
+
+
+def _assert_twin_parity(spark, duck_at, name, sf_dir) -> pd.DataFrame:
+    got = _spark_twin(spark, name, sf_dir)
+    want = _duck_twin(duck_at(sf_dir), name, sf_dir)
+    assert len(got) > 0
+    _assert_same_rows(got, want, _SUM_TOL.get(name, 0.0))
+    return got
 
 
 @pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_ORACLE])
 @pytest.mark.parametrize("name", TWIN_ROWS)
 def test_spark_twin_equals_duckdb_twin(spark, duck_at, name, sf_dir):
-    got = _spark_twin(spark, name, sf_dir)
-    want = _duck_twin(duck_at(sf_dir), name, sf_dir)
-    assert len(got) > 0
-    _assert_same_rows(got, want, _SUM_TOL.get(name, 0.0))
+    _assert_twin_parity(spark, duck_at, name, sf_dir)
 
 
 @pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_ORACLE])
@@ -179,7 +209,7 @@ def test_below_bites_on_strided_copy_and_parity_holds(
         kept = load_table(spark, strided_dir, table)
         assert 0 < kept.count() < full.count()
         plan = kept._jdf.queryExecution().executedPlan().toString()
-        assert "PushedFilters" in plan and below.col in plan
+        assert f"LessThan({below.col},{below.bound})" in plan
     got = _spark_twin(spark, name, strided_dir)
     want = _duck_twin(duck_at(strided_dir), name, strided_dir)
     assert len(got) > 0
@@ -285,7 +315,7 @@ def test_r9_twin_bound_bites_and_pushes_down(spark, tmp_path):
     assert len(ids) == 10 and all(i < below.bound for i in ids)  # replica 0 only
     assert k == 8
     plan = km._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "vec_id" in plan
+    assert f"LessThan(vec_id,{below.bound})" in plan
 
 
 def test_minhash_bound_bites_on_amplified_keys(spark, tmp_path):
@@ -317,6 +347,10 @@ def test_minhash_bound_bites_on_amplified_keys(spark, tmp_path):
     full_ids, capped_ids = pair_ids(False), pair_ids(True)
     assert any(i >= below.bound for i in full_ids), "out-of-bound replicas are near-dups"
     assert capped_ids and all(i < below.bound for i in capped_ids)
+    with io_mod.table_transforms(amp_dir, {"documents": below}):
+        capped = REGISTRY["docs_minhash_candidates"].fn(spark, amp_dir)
+        plan = capped._jdf.queryExecution().executedPlan().toString()
+    assert f"LessThan(doc_id,{below.bound})" in plan
 
 
 _R12_REDUCED = [
@@ -358,8 +392,13 @@ def _factor(name):
     return amp.n
 
 
-def _assert_scaled(plain, twin, n, keys, counts=(), sums=(), avgs=(), sum_tol=0.0):
-    assert len(plain) > 1 and len(plain) == len(twin)
+def _assert_scaled(
+    plain, twin, n, keys, counts=(), sums=(), avgs=(), sum_tol=0.0, avg_tol=5e-4,
+    rows=None,
+):
+    """``avg_tol=0`` demands exact averages; ``rows`` pins the row count."""
+    assert len(plain) == rows if rows else len(plain) > 1
+    assert len(plain) == len(twin)
     for (_, a), (_, b) in zip(plain.iterrows(), twin.iterrows()):
         assert [a[k] for k in keys] == [b[k] for k in keys]
         for c in counts:
@@ -367,9 +406,12 @@ def _assert_scaled(plain, twin, n, keys, counts=(), sums=(), avgs=(), sum_tol=0.
         for c in sums:
             # both sides round to 2 dp after their own sum, so round(s)·N
             # and round(N·s) differ by up to N·0.005
-            assert abs(a[c] * n - b[c]) <= sum_tol * n + 1e-6, (c, a[c], b[c])
+            assert abs(a[c] * n - b[c]) < sum_tol * n, (c, a[c], b[c])
         for c in avgs:
-            assert abs(a[c] - b[c]) < 5e-4, (c, a[c], b[c])
+            if avg_tol:
+                assert abs(a[c] - b[c]) < avg_tol, (c, a[c], b[c])
+            else:
+                assert a[c] == b[c], (c, a[c], b[c])
 
 
 def _spark_plain_and_twin(spark, name):
@@ -404,7 +446,8 @@ def test_q1_twin_oracle_is_oracle_with_scaled_sums(duck_at):
 
 
 def test_q1_twin_spark_equals_twin_oracle(spark, duck_at):
-    test_spark_twin_equals_duckdb_twin(spark, duck_at, "q1_pricing_summary", SF_ORACLE)
+    got = _assert_twin_parity(spark, duck_at, "q1_pricing_summary", SF_ORACLE)
+    assert len(got) > 1
 
 
 _ET = dict(keys=["window_start", "event_type"], counts=["n"], sums=["total_value"],
@@ -422,10 +465,11 @@ def test_events_tumbling_twin_oracle_is_oracle_with_scaled_counts(duck_at):
 
 
 def test_events_tumbling_twin_spark_equals_twin_oracle(spark, duck_at):
-    test_spark_twin_equals_duckdb_twin(spark, duck_at, "events_tumbling_1h", SF_ORACLE)
+    got = _assert_twin_parity(spark, duck_at, "events_tumbling_1h", SF_ORACLE)
+    assert len(got) > 1
 
 
-_WF = dict(keys=["word"], counts=["n"])
+_WF = dict(keys=["word"], counts=["n"], rows=20)
 
 
 def test_word_freq_twin_is_fn_with_scaled_counts(spark):
@@ -439,10 +483,11 @@ def test_word_freq_twin_oracle_is_oracle_with_scaled_counts(duck_at):
 
 
 def test_word_freq_twin_spark_equals_twin_oracle(spark, duck_at):
-    test_spark_twin_equals_duckdb_twin(spark, duck_at, "docs_word_freq_top20", SF_ORACLE)
+    got = _assert_twin_parity(spark, duck_at, "docs_word_freq_top20", SF_ORACLE)
+    assert len(got) == 20
 
 
-_TS = dict(keys=["lang"], counts=["n_tokens", "n_docs"], avgs=["avg_chars"])
+_TS = dict(keys=["lang"], counts=["n_tokens", "n_docs"], avgs=["avg_chars"], avg_tol=0)
 
 
 def test_token_stats_twin_is_fn_with_scaled_counts(spark):
@@ -456,7 +501,7 @@ def test_token_stats_twin_oracle_is_oracle_with_scaled_counts(duck_at):
 
 
 def test_token_stats_twin_spark_equals_twin_oracle(spark, duck_at):
-    test_spark_twin_equals_duckdb_twin(spark, duck_at, "docs_token_stats", SF_ORACLE)
+    _assert_twin_parity(spark, duck_at, "docs_token_stats", SF_ORACLE)
 
 
 # kNN twins: replicas of one vector score exactly equal, so each twin's
@@ -473,7 +518,8 @@ def _pairs(pdf):
 
 @pytest.mark.parametrize("name", KNN_ROWS)
 def test_r12_knn_twin_spark_equals_twin_oracle(spark, duck_at, name):
-    test_spark_twin_equals_duckdb_twin(spark, duck_at, name, SF_ORACLE)
+    got = _assert_twin_parity(spark, duck_at, name, SF_ORACLE)
+    assert len(got) == 10
 
 
 @pytest.mark.parametrize("name", KNN_ROWS)

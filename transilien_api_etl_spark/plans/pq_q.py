@@ -97,6 +97,33 @@ def embeddings_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
+# The ADC top-10 over pq_oracle_cte's codes and LUTs, shared by the
+# registered oracle and SAMPLED_ORACLE.
+_ADC_TOP10 = f"""SELECT a0.vec_id, round({_ADC_SUM}, 6) AS adc_d2
+FROM {_CODE_JOINS}{_LUT_JOINS}
+WHERE a0.vec_id <> 0
+ORDER BY adc_d2, a0.vec_id
+LIMIT 10
+"""
+
+# knn_pq_adc_top10's oracle for any corpus size (its bench twin's SQL,
+# bench.TWINS). The registered oracle trains on every vector, which is
+# pq_train_sample_mod's value at every driver SF; this one samples
+# training by the same modulus (pq_train_sample_mod(n) as SQL over CTE
+# nn's count n) and uses the minjoin argmin — value-identical to the
+# window form, ~4× faster.
+SAMPLED_ORACLE = f"""
+WITH {pq_oracle_cte(
+        m_sub=M_SUB,
+        sub_dim=SUB_DIM,
+        k=K_CODES,
+        iterations=ITERS,
+        train_mod_expr="greatest(n//65536, 1)",
+        argmin="minjoin",
+    )}
+{_ADC_TOP10}"""
+
+
 @register(
     "knn_pq_adc_top10",
     doc="PQ asymmetric-distance top-10 (SURVEY §3 F8): the query (vec_id 0, "
@@ -113,12 +140,7 @@ def embeddings_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
     oracle=f"""
 WITH {_CTE}
-SELECT a0.vec_id, round({_ADC_SUM}, 6) AS adc_d2
-FROM {_CODE_JOINS}{_LUT_JOINS}
-WHERE a0.vec_id <> 0
-ORDER BY adc_d2, a0.vec_id
-LIMIT 10
-""",
+{_ADC_TOP10}""",
 )
 def knn_pq_adc_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_query_confs(spark)

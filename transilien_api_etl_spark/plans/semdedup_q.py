@@ -80,6 +80,14 @@ def _derived_k(n: int) -> int:
     return _K if n <= _K * _TARGET_CLUSTER else n // _TARGET_CLUSTER
 
 
+# _derived_k below the flat-schedule ceiling as one SQL scalar subquery
+# over the e CTE (DuckDB accepts it in LIMIT), for DERIVED_K_ORACLE.
+_K_SQL = (
+    f"(SELECT CASE WHEN count(*) <= {_K * _TARGET_CLUSTER} THEN {_K} "
+    f"ELSE count(*)//{_TARGET_CLUSTER} END FROM e)"
+)
+
+
 def _kmeans_df(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int, int]:
     emb = load_table(spark, sf_dir, "embeddings")
     n = cached_row_count(spark, sf_dir, "embeddings")
@@ -110,6 +118,26 @@ def embeddings_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_query_confs(spark)
     km, _, _ = _kmeans_df(spark, sf_dir)
     return km.select("vec_id", "cluster", "d2").orderBy("vec_id")
+
+
+# semdedup_survivors' oracle for any corpus size (its bench twin's SQL,
+# bench.TWINS). The registered oracle fixes k = _K, the value _derived_k
+# takes at every driver SF; this one derives k from the corpus count
+# (_K_SQL), so at the scale path's sizes it runs the same k as the plan,
+# and it materializes the norms once instead of per probed pair.
+DERIVED_K_ORACLE = f"""
+WITH {kmeans_oracle_cte(_K_SQL, _ITERS)},
+afn AS MATERIALIZED (
+  SELECT vec_id, v, cluster, sqrt(list_inner_product(v, v)) AS nrm FROM af)
+SELECT a.vec_id, a.cluster
+FROM afn a
+WHERE NOT EXISTS (
+  SELECT 1 FROM afn b
+  WHERE b.cluster = a.cluster AND b.vec_id < a.vec_id
+    AND round(list_inner_product(a.v, b.v) / (a.nrm * b.nrm), 6) >= {_TAU}
+)
+ORDER BY a.vec_id
+"""
 
 
 @register(
