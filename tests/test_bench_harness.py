@@ -553,6 +553,23 @@ def test_time_paired_real_query_end_to_end(spark):
     assert ratio_t["q1_pricing_summary"] > 0
 
 
+def test_duck_connect_pins_utc():
+    """DuckDB reads this engine's parquet ``ts`` as TIMESTAMPTZ and
+    truncates it in its TimeZone, the host's by default; Spark's session
+    is pinned to UTC, so the oracle connection must be too (a half-hour
+    zone would regroup every ``date_trunc('hour', ts)``)."""
+    con = bench._duck_connect(SF_SMOKE)
+    try:
+        tz, hour = con.execute(
+            "SELECT current_setting('TimeZone'), "
+            "date_trunc('hour', TIMESTAMPTZ '2024-01-01 00:45:00+00')::VARCHAR"
+        ).fetchone()
+    finally:
+        con.close()
+    assert tz == "UTC"
+    assert hour == "2024-01-01 00:00:00+00"
+
+
 def test_time_duckdb_binder_error_is_flagged_not_graded():
     """Code-review round 10: a binder/config error (missing table, bad
     SQL) must NOT be recorded as a cap-valued 'timeout lower bound' —

@@ -24,3 +24,7 @@ Layout
 """
 
 __version__ = "0.1.0"
+
+from transilien_api_etl_spark import _zipimport_cache
+
+_zipimport_cache.install()

@@ -46,10 +46,6 @@ def cosine_from_norms(a: Column, b: Column, norm_a: Column, norm_b: Column) -> C
     return dot(a, b) / (norm_a * norm_b)
 
 
-def array_mean(a: Column) -> Column:
-    return dot(a, F.transform(a, lambda _: F.lit(1.0))) / F.size(a)
-
-
 def round_half_up(arr, dp: int):
     """numpy rounding with the JVM's tie behavior.
 

@@ -293,10 +293,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df if transform is None else transform(df)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 # Below this many input rows, widen_small_scan skips the round-robin
 # repartition even on a single-split source (round 12): the repartition
 # costs an exchange (plus the sort-before-repartition pass) and turns every

@@ -16,8 +16,10 @@ config here is chosen to also be the right call on a 1000-executor cluster:
 
 from __future__ import annotations
 
+import atexit
 import os
 import pathlib
+import shutil
 import tempfile
 import zipfile
 
@@ -122,13 +124,17 @@ def ship_package(spark: SparkSession) -> None:
     if app in _SHIPPED_APPS:
         return
     pkg_dir = pathlib.Path(__file__).resolve().parent
-    zip_path = pathlib.Path(tempfile.gettempdir()) / f"transilien_api_etl_spark-{os.getpid()}.zip"
-    if not zip_path.exists():
-        tmp = zip_path.with_suffix(".tmp")
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for p in sorted(pkg_dir.rglob("*.py")):
-                zf.write(p, arcname=str(pathlib.Path(pkg_dir.name) / p.relative_to(pkg_dir)))
-        tmp.rename(zip_path)
+    # A fresh private dir per ship: a fixed name (the pid, say) could pick
+    # up another process's leftover zip, and workers put a shipped zip
+    # ahead of PYTHONPATH, so they would run that stale code. The unique
+    # name also keeps addFile from refusing a second registration. The
+    # dir lives until interpreter exit: executors fetch the zip from it.
+    tmp_dir = tempfile.mkdtemp(prefix="transilien_api_etl_spark-")
+    atexit.register(shutil.rmtree, tmp_dir, ignore_errors=True)
+    zip_path = pathlib.Path(tmp_dir) / f"{pathlib.Path(tmp_dir).name}.zip"
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for p in sorted(pkg_dir.rglob("*.py")):
+            zf.write(p, arcname=str(pathlib.Path(pkg_dir.name) / p.relative_to(pkg_dir)))
     sc.addPyFile(str(zip_path))
     _SHIPPED_APPS.add(app)
 
