@@ -64,7 +64,8 @@ stdout tail still parses:
                "variants": [...], "skipped": [...]}}
 
 Full detail (raw rep spreads, absolute DuckDB walls, scale-cache row
-counts) is written to BENCH_FULL_last.json next to this script.
+counts, each phase's elapsed seconds in ``phase_s``, and the cores each
+engine ran on) is written to BENCH_FULL_last.json next to this script.
 """
 
 from __future__ import annotations
@@ -96,7 +97,10 @@ from transilien_api_etl_spark.plans.registry import (  # noqa: E402
     bench_queries,
 )
 from transilien_api_etl_spark.scale import KEY_STRIDE, scale_dir_name  # noqa: E402
-from transilien_api_etl_spark.session import build_session  # noqa: E402
+from transilien_api_etl_spark.session import (  # noqa: E402
+    build_session,
+    default_parallelism,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SCALE_DIR = os.environ.get(
@@ -471,6 +475,9 @@ def _duck_connect(data_dir: str):
     # truncates and formats in its TimeZone (the host's by default);
     # Spark's session is pinned to UTC, so the oracles must be too.
     con.execute("SET TimeZone='UTC'")
+    # Both engines of a ratio get the same cores: DuckDB otherwise starts
+    # one thread per core of the box, whatever local[N] Spark runs on.
+    con.execute(f"SET threads={default_parallelism()}")
     # Partial caches are legitimate (the scaling-curve 2x cache carries
     # only the relational+events facts to bound disk) — a view over an
     # absent table would fail here and no query that runs against such a
@@ -1095,21 +1102,34 @@ def protocol_notes() -> dict[str, str]:
     }
 
 
+@contextlib.contextmanager
+def _phase(phase_s: dict[str, float], name: str):
+    """Record the block's elapsed seconds as ``phase_s[name]``."""
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        phase_s[name] = round(time.perf_counter() - t0, 1)
+
+
 def main() -> None:
     spark = build_session(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
+    # Sidecar only: where the run's elapsed time went, phase by phase.
+    phase_s: dict[str, float] = {}
 
     specs = bench_queries()
     # warm-up: run the cheapest query once, untimed (JVM/codegen/Arrow spin-up)
     warm = specs.get("q1_pricing_summary") or next(iter(specs.values()))
-    warm.fn(spark, SF_DIR).count()
-
-    timings, reps_raw = time_spark(specs, spark, SF_DIR)
+    with _phase(phase_s, "headline"):
+        warm.fn(spark, SF_DIR).count()
+        timings, reps_raw = time_spark(specs, spark, SF_DIR)
     total = round(sum(timings.values()), 4)
 
     # Box-speed sentinel: fixed workloads, outside every timed phase;
     # reported, never acted on (see measure_sentinel).
-    sentinel = measure_sentinel(spark)
+    with _phase(phase_s, "sentinel"):
+        sentinel = measure_sentinel(spark)
     print(f"# sentinel: {sentinel}", file=sys.stderr)
 
     result = {
@@ -1121,16 +1141,18 @@ def main() -> None:
         "queries_reps": reps_raw,
         "sentinel": {**sentinel, "ref": SENTINEL_REF_S},
         "sf": sf_from_dir(SF_DIR),
+        "spark_cores": spark.sparkContext.defaultParallelism,
+        "phase_s": phase_s,
     }
 
     if RUN_SCALE and remaining() > 240:
         from transilien_api_etl_spark.scale import DEFAULT_FACTORS, materialize_scale
 
         skipped: list[str] = []
-        t0 = time.perf_counter()
-        rows = materialize_scale(spark, SF_DIR, SCALE_DIR)
+        with _phase(phase_s, "scale_cache_build"):
+            rows = materialize_scale(spark, SF_DIR, SCALE_DIR)
         print(
-            f"# scale data ready in {time.perf_counter() - t0:.1f}s: {rows}",
+            f"# scale data ready in {phase_s['scale_cache_build']:.1f}s: {rows}",
             file=sys.stderr,
         )
         # Phase ORDER within the scale phase (round 8, VERDICT r7 task 1):
@@ -1150,19 +1172,24 @@ def main() -> None:
         paired_specs = {n: light[n] for n in PAIRED_ROWS if n in light}
         unpaired_light = {n: s for n, s in light.items() if n not in paired_specs}
         variants = {n: describe_twin(TWINS[n]) for n in sorted(specs) if n in TWINS}
-        warm.fn(spark, SCALE_DIR).count()
         notes = protocol_notes()
-        spark_t, spark_reps = time_spark(
-            unpaired_light, spark, SCALE_DIR, skipped=skipped, twins=True,
-            **LIGHT_REPS,
-        )
+        with _phase(phase_s, "unpaired_light_spark"):
+            warm.fn(spark, SCALE_DIR).count()
+            spark_t, spark_reps = time_spark(
+                unpaired_light, spark, SCALE_DIR, skipped=skipped, twins=True,
+                **LIGHT_REPS,
+            )
         # The connection is shared with the end-of-run oracle pass — its
         # q_vec hoist table is built once, untimed.
         con = _duck_connect(SCALE_DIR)
-        p_spark, p_sreps, duck_t, duck_reps, p_ratio, p_rreps = time_paired(
-            paired_specs, spark, SCALE_DIR, con, skipped=skipped,
-            skip_label="paired",
-        )
+        result["duckdb_threads"] = con.execute(
+            "SELECT current_setting('threads')"
+        ).fetchone()[0]
+        with _phase(phase_s, "paired"):
+            p_spark, p_sreps, duck_t, duck_reps, p_ratio, p_rreps = time_paired(
+                paired_specs, spark, SCALE_DIR, con, skipped=skipped,
+                skip_label="paired",
+            )
         spark_t.update(p_spark)
         spark_reps.update(p_sreps)
         result["scale"] = {
@@ -1177,7 +1204,8 @@ def main() -> None:
             "bench_variants": variants,
         }
         # Phase 2c — bucketed-at-rest facts (DEPLOY.md's prescribed 100 TB
-        # layout, promoted from scripts/bucketed_facts_ab.py per VERDICT r4):
+        # layout, promoted per VERDICT r4 from the A/B in BASELINE.md's
+        # round-4 "Bucketed-at-rest variant" section):
         # lineitem/orders live as external bucketed tables clustered+sorted
         # on the order key, and io.load_table reads them via the
         # spark.graft.bucketedTables conf — the SAME registered plan
@@ -1197,10 +1225,10 @@ def main() -> None:
             # the one-time clustered write is cached and stays OUT of the
             # timed section (see ensure_bucketed_layout for bucket-count
             # rationale and stale-layout pruning).
-            t0 = time.perf_counter()
-            ensure_bucketed_layout(spark, SCALE_DIR)
+            with _phase(phase_s, "bucketed_build"):
+                ensure_bucketed_layout(spark, SCALE_DIR)
             print(
-                f"# bucketed facts ready in {time.perf_counter() - t0:.1f}s",
+                f"# bucketed facts ready in {phase_s['bucketed_build']:.1f}s",
                 file=sys.stderr,
             )
             bucket_specs = {
@@ -1211,7 +1239,7 @@ def main() -> None:
             # The oracle denominator is re-measured HERE, at the bucketed
             # phase's own box moments, on the same paired protocol as
             # every other paired row.
-            with bucketed_confs(spark, SCALE_DIR):
+            with _phase(phase_s, "bucketed"), bucketed_confs(spark, SCALE_DIR):
                 (
                     bspark_t, bspark_reps, bduck_t, bduck_reps,
                     bratio_t, bratio_reps,
@@ -1238,9 +1266,11 @@ def main() -> None:
         # HEAVY_ROWS: last among the Spark timings (see phase-order
         # note above). Their own medians are reliable in this slot — each
         # pays its cold read in its untimed warm rep, same as ever.
-        heavy_t, heavy_reps = time_spark(
-            heavy, spark, SCALE_DIR, skipped=skipped, twins=True, **HEAVY_REPS,
-        )
+        with _phase(phase_s, "heavy_spark"):
+            heavy_t, heavy_reps = time_spark(
+                heavy, spark, SCALE_DIR, skipped=skipped, twins=True,
+                **HEAVY_REPS,
+            )
         spark_t.update(heavy_t)
         spark_reps.update(heavy_reps)
         # Oracles: ONE pass, in name order, over everything not already
@@ -1248,9 +1278,10 @@ def main() -> None:
         rest = {
             n: s for n, s in {**light, **heavy}.items() if n not in paired_specs
         }
-        dr_t, dr_reps = time_duckdb(
-            rest, SCALE_DIR, skipped=skipped, twins=True, con=con
-        )
+        with _phase(phase_s, "oracle_pass"):
+            dr_t, dr_reps = time_duckdb(
+                rest, SCALE_DIR, skipped=skipped, twins=True, con=con
+            )
         con.close()
         duck_t.update(dr_t)
         duck_reps.update(dr_reps)

@@ -570,6 +570,18 @@ def test_duck_connect_pins_utc():
     assert hour == "2024-01-01 00:00:00+00"
 
 
+def test_duck_connect_uses_spark_cores(monkeypatch):
+    """Both engines of a ratio get the same cores: the oracle connection
+    runs SPARK_GRAFT_CPUS threads, not one per core of the box."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    con = bench._duck_connect(SF_SMOKE)
+    try:
+        (threads,) = con.execute("SELECT current_setting('threads')").fetchone()
+    finally:
+        con.close()
+    assert threads == 2
+
+
 def test_time_duckdb_binder_error_is_flagged_not_graded():
     """Code-review round 10: a binder/config error (missing table, bad
     SQL) must NOT be recorded as a cap-valued 'timeout lower bound' —

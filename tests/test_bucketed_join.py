@@ -1,5 +1,5 @@
 """CI gate for the bucketed-at-rest fact layout (DEPLOY.md storage rule,
-measured end-to-end in scripts/bucketed_facts_ab.py / BASELINE.md round 4):
+measured end-to-end in BASELINE.md's round-4 "Bucketed-at-rest variant"):
 facts bucketed+sorted on their join key must join AND aggregate on that key
 with ZERO exchanges — the property that deletes the data-volume-scaling
 shuffle term from recurring fact-fact joins at 100 TB.

@@ -317,8 +317,8 @@ def widen_small_scan(
     downstream map-side expression (seeded-md5 MinHash signatures, the
     interpreted k-means/PQ assignment folds, ADC lookups) serializes on
     one task while the other cores idle — measured round 11 session 5
-    (sf0.1 headline walls, warm+5-rep medians,
-    scripts/headline_walls_ab.py; BASELINE.md): docs_minhash_candidates
+    (sf0.1 headline walls, warm+5-rep medians; BASELINE.md "Round-11
+    session 5: the headline-wall trim"): docs_minhash_candidates
     4.44→1.62 s, knn_pq_adc_top10 3.97→2.53 s, embeddings_pq_codes
     2.65→1.24 s with the widen. Scale-adaptive by
     construction: the guard compares the PLANNED partition count to

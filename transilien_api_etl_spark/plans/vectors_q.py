@@ -86,7 +86,7 @@ def knn_cosine_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     # columns at rest (zero list access, zero Arrow transfer) is
     # parity-to-worse with a stored norm and 3.7x worse with the norm
     # inline (128-term codegen blows the HotSpot JIT method limit) —
-    # scripts/knn_flat_layout_ab.py, "flat-column kNN" in BASELINE.md.
+    # BASELINE.md "Round-10 (session 2): flat-column kNN layout".
     # Map-only into TakeOrderedAndProject; query vector is dim doubles
     # in the task closure.
     qvec = cached_query_embedding(spark, sf_dir, vec_id=0)
